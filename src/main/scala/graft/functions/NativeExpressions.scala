@@ -393,9 +393,14 @@ object NativeExpressions {
     * v -> v))` built two intermediate arrays and evaluated the lambdas
     * interpreted, per candidate, in the incremental-dedup verify stage's
     * hot path. Exact same value: min-length prefix compared pairwise
-    * (signatures here always share length k). */
+    * (signatures here always share length k). Both inputs must be
+    * ARRAY<BIGINT>: any other array fails analysis instead of being read
+    * as longs. */
   case class SigAgreeCount(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+      with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes with CodegenFallback {
+    override def inputTypes: Seq[ArrayType] =
+      Seq(ArrayType(LongType), ArrayType(LongType))
     override def dataType: DataType = IntegerType
     override def nullSafeEval(a: Any, b: Any): Any = {
       val va = a.asInstanceOf[ArrayData]

@@ -40,6 +40,9 @@ object TextSearch {
   val OneMinusB = 0.25
   val B = 0.75
 
+  /** Term buckets of a stored postings index ([[writePostingsIndex]]). */
+  val PostingsBuckets = 64
+
   /** The inverted index: one row per (term, doc_id) with term frequency.
     * One explode + one shuffle on (term, doc_id); at 100 TB write this
     * bucketed by term. */
@@ -130,7 +133,7 @@ object TextSearch {
     * build, same as [[postings]]; at 100 TB this runs once per corpus
     * snapshot and every query amortizes it. */
   def writePostingsIndex(docs: DataFrame, idCol: String, textCol: String,
-      indexDir: String, nBuckets: Int = 64): Unit = {
+      indexDir: String, nBuckets: Int = PostingsBuckets): Unit = {
     val spark = docs.sparkSession
     // ONE corpus scan: dl rides the group key (functionally dependent on
     // doc_id, so the key is no wider in practice)
@@ -161,28 +164,41 @@ object TextSearch {
     * the matching rows, and the scoring tail is [[bm25Score]] — scores
     * are bit-identical to [[bm25TopK]] over the same corpus. This is
     * the serving read: cost scales with the queried terms' posting
-    * lists, not the corpus. */
+    * lists, not the corpus. Resolves `indexDir` on every call, so a
+    * growing (streamed) index is read as it stands now. */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, rawTerms: Seq[String], k: Int,
-      nBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
+      nBuckets: Int = PostingsBuckets): DataFrame =
+    bm25TopKIndexed(spark.read.parquet(s"$indexDir/postings"),
+      spark.read.parquet(s"$indexDir/stats"), rawTerms, k, nBuckets)
+
+  /** [[bm25TopKIndexed]] over already-resolved `postings` and `stats`
+    * frames of a stored index — the serving facade resolves a build-once
+    * index once and plans every request over the same relations. */
+  def bm25TopKIndexed(postings: DataFrame, stats: DataFrame,
+      rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame = {
     val terms = rawTerms.distinct // same contract as bm25TopK
     require(terms.nonEmpty && terms.size <= 64, "bag-of-terms query expected")
-    // the terms' bucket ids via the engine's own xxhash64 (one local-
-    // relation job over ≤ 64 rows — no reimplementation to drift)
-    val bucketIds = terms.toDS()
-      .select(pmod(xxhash64(col("value")), lit(nBuckets)))
-      .distinct().as[Long].collect().toSeq
-    val tfRows = spark.read.parquet(s"$indexDir/postings")
+    val bucketIds = terms.map(bucketId(_, nBuckets)).distinct
+    val tfRows = postings
       .filter(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     // SUM the stats read: identity over the batch builder's 1-row table,
     // and the per-batch_run stats partitions of the incremental sink
     // ([[graft.streaming.Streaming.incrementalPostingsSink]]) fold to the
     // same integer totals — one serving path for both layouts
-    val stats = spark.read.parquet(s"$indexDir/stats")
+    val totals = stats
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sdl")).as("sdl"))
-    bm25Score(tfRows, stats, k)
+    bm25Score(tfRows, totals, k)
+  }
+
+  /** A term's postings bucket, `pmod(xxhash64(term), nBuckets)` as
+    * [[writePostingsIndex]] partitions it: the engine's own expressions,
+    * evaluated on the driver (no job, no reimplementation to drift). */
+  def bucketId(term: String, nBuckets: Int): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+    Pmod(new XxHash64(Seq(Literal(term))), Literal(nBuckets.toLong))
+      .eval().asInstanceOf[Long]
   }
 
   /** Per-document top-k keyphrases by TF-IDF — the corpus-statistical

@@ -2408,16 +2408,24 @@ object SimilarityQueries {
     * rows. */
   def rrfFusionIvfProbe(spark: SparkSession, ivfDir: String, lexTop: DataFrame,
       probeQv: Seq[Long], nProbe: Int, excludeId: Option[Long],
-      extraLegs: Seq[(DataFrame, String)] = Nil): DataFrame = {
+      extraLegs: Seq[(DataFrame, String)] = Nil): DataFrame =
+    rrfFusionIvfProbe(spark.read.parquet(s"$ivfDir/index"),
+      spark.read.parquet(s"$ivfDir/centroids"), lexTop, probeQv, nProbe,
+      excludeId, extraLegs)
+
+  /** [[rrfFusionIvfProbe]] over already-resolved IVF `index` and
+    * `centroids` frames (the serving facade's per-corpus relations). */
+  def rrfFusionIvfProbe(index: DataFrame, cents: DataFrame, lexTop: DataFrame,
+      probeQv: Seq[Long], nProbe: Int, excludeId: Option[Long],
+      extraLegs: Seq[(DataFrame, String)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val spark = index.sparkSession
     import spark.implicits._
     val listN = 100
     val lex = lexTop
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("score_e12").desc, col("doc_id").asc)).cast("long"))
       .select(col("doc_id"), col("lex_rank"))
-    val index = spark.read.parquet(s"$ivfDir/index")
-    val cents = spark.read.parquet(s"$ivfDir/centroids")
     val queries = Seq((0L, probeQv)).toDF("query_id", "q")
     val top = Similarity.ivfExactTopKMany(index, cents, queries,
       k = listN + 1, nProbe = nProbe)

@@ -1005,8 +1005,13 @@ object TextQueries {
     * results) keep null hit_pos/snippet. The ranked list is top-k
     * bounded, so the join broadcasts it against one pruned corpus scan. */
   def attachSnippets(spark: SparkSession, dir: String, ranked: DataFrame,
-      terms: Seq[String] = Bm25Terms): DataFrame = {
-    val docs = Tables.documents(spark, dir)
+      terms: Seq[String] = Bm25Terms): DataFrame =
+    attachSnippets(Tables.documents(spark, dir), ranked, terms)
+
+  /** [[attachSnippets]] over an already-resolved `documents` frame (the
+    * serving facade's per-corpus relation). */
+  def attachSnippets(docs: DataFrame, ranked: DataFrame,
+      terms: Seq[String]): DataFrame = {
     val posExprs = terms.map(t =>
       when(array_position(col("ws"), t) > 0, array_position(col("ws"), t)))
     broadcast(ranked).join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))

@@ -2,13 +2,15 @@ package graft.service
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.DocumentRepresentation
+import graft.sources.Tables
 import graft.streaming.Streaming
 
 /** The reference's service facade (service/src/main/kotlin/service.kt:22-80 —
@@ -44,9 +46,22 @@ import graft.streaming.Streaming
   * [[GraftService.start]] and every path param is then confined to
   * those roots (component-wise prefix after normalization, so `..`
   * cannot escape) — anything outside answers 403.
+  *
+  * Serving: requests run on a fixed pool of one thread per core, so
+  * concurrent requests overlap their driver rounds (planning, job
+  * scheduling, `collect()`) on the one session; `close()` shuts the pool
+  * down. `/search` and `/similar` plan over a per-corpus handle: the
+  * first request on a corpus dir (after the path check) builds its
+  * serving indexes and resolves the corpus tables and both indexes once
+  * — schema read, partition directories listed — and later requests on
+  * that dir reuse those relations instead of re-reading them. The
+  * immutable-corpus contract of the build-once artifacts covers the
+  * handles too: a mutated corpus needs a restarted service. A streamed
+  * index (`/similar?indexDir=&centroidsDir=`) grows, so it is resolved
+  * on every request.
   */
-final class GraftService private (
-    spark: SparkSession, server: HttpServer, pathRoots: Seq[String]) {
+final class GraftService private (spark: SparkSession, server: HttpServer,
+    pool: ExecutorService, pathRoots: Seq[String]) {
 
   /** Enforce the configured serving root on a path param (no-op when
     * unconfigured — the trusted-operator default, see class doc). */
@@ -65,10 +80,27 @@ final class GraftService private (
 
   @volatile private var running: Option[(String, StreamingQuery)] = None
 
-  /** Stop the HTTP server and any running pipeline. */
+  /** Resolved build-once relations, one handle per canonical corpus dir. */
+  private val corpora = new ConcurrentHashMap[String, GraftService.Corpus]()
+
+  /** The corpus handle of `dir`, resolved on first use. Call only after
+    * [[checkPath]]: a refused or failing dir never gets a handle. */
+  private def corpus(dir: String): GraftService.Corpus =
+    corpora.computeIfAbsent(new java.io.File(dir).getCanonicalPath,
+      GraftService.Corpus.resolve(spark, _))
+
+  /** Canonical dirs that hold a resolved handle (for tests). */
+  private[graft] def corpusDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    corpora.keySet.asScala.toSet
+  }
+
+  /** Stop the HTTP server, any running pipeline and the serving pool. */
   def close(): Unit = {
     stopPipeline()
     server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(30, TimeUnit.SECONDS)) pool.shutdownNow()
   }
 
   private def stopPipeline(): Unit = synchronized {
@@ -96,10 +128,10 @@ final class GraftService private (
     * back for self-exclusion) or `probe=<64 comma-separated floats>` —
     * the shared probe contract of `/search`'s hybrid leg and `/similar`. */
   private def parseProbe(ps: Map[String, String],
-      dir: String): Option[(Seq[Long], Option[Long])] =
+      embeddings: => DataFrame): Option[(Seq[Long], Option[Long])] =
     ps.get("probeDoc").flatMap(s => scala.util.Try {
       val id = s.toLong
-      val rows = graft.sources.Tables.embeddings(spark, dir)
+      val rows = embeddings
         .filter(col("vec_id") === id)
         .select(graft.ops.Similarity.quantize(col("embedding")))
         .collect()
@@ -166,6 +198,8 @@ final class GraftService private (
         // never the corpus text. Only the top-k doc_ids resolve back to
         // text, for snippets. Rows are identical to the q143/q114
         // oracles (bm25TopKIndexed is score-bit-equal to bm25TopK).
+        // The lexical leg, the probe's IVF leg and the snippets plan over
+        // the corpus handle's resolved relations.
         val ps = GraftService.parseQuery(ex.getRequestURI.getRawQuery)
         ps.get("dir") match {
           case None => (400, """{"error":"dir required"}""")
@@ -192,7 +226,7 @@ final class GraftService private (
             // validations, never for a lexical request that happens to
             // carry the param
             lazy val probeSpec: Option[(Seq[Long], Option[Long])] =
-              parseProbe(ps, dir)
+              parseProbe(ps, corpus(dir).embeddings)
             if (terms.size > 64) (400, """{"error":"at most 64 query terms"}""")
             else if (hybridMode && probeRequested && probeSpec.isEmpty)
               (400, """{"error":"probeDoc must be a known vec_id; probe must be 64 comma-separated numbers"}""")
@@ -203,9 +237,9 @@ final class GraftService private (
               // probeDoc=/probe= to pick the semantic side explicitly
               (400, """{"error":"mode=hybrid with q= needs probeDoc= or probe= for the semantic leg"}""")
             else {
-              val idx = GraftService.postingsIndexFor(spark, dir)
+              val c = corpus(dir)
               def lexTop(k: Int) = graft.ops.TextSearch.bm25TopKIndexed(
-                spark, idx, terms, k)
+                c.postings, c.stats, terms, k, graft.ops.TextSearch.PostingsBuckets)
               // `anchors=1` (hybrid only): a THIRD fusion leg — q217's
               // anchor-surrogate BM25 over the build-once anchor-document
               // artifact (what OTHER pages' link text says about each
@@ -234,18 +268,18 @@ final class GraftService private (
                   val nProbe = math.min(8, math.max(1,
                     ps.get("nprobe").flatMap(s => scala.util.Try(s.toInt).toOption)
                       .getOrElse(3)))
-                  graft.queries.TextQueries.attachSnippets(spark, dir,
-                    graft.queries.SimilarityQueries.rrfFusionIvfProbe(spark,
-                      GraftService.ivfIndexFor(spark, dir), lexTop(100),
+                  graft.queries.TextQueries.attachSnippets(c.documents,
+                    graft.queries.SimilarityQueries.rrfFusionIvfProbe(
+                      c.ivfIndex, c.centroids, lexTop(100),
                       qv, nProbe, excl, anchorLegs), terms)
                     .orderBy(col("rrf_e6").desc, col("doc_id").asc)
                 case (Some("hybrid"), None) =>
-                  graft.queries.TextQueries.attachSnippets(spark, dir,
+                  graft.queries.TextQueries.attachSnippets(c.documents,
                     graft.queries.SimilarityQueries.rrfFusionFrom(spark, dir,
                       lexTop(100), anchorLegs), terms)
                     .orderBy(col("rrf_e6").desc, col("doc_id").asc)
                 case _ =>
-                  graft.queries.TextQueries.attachSnippets(spark, dir,
+                  graft.queries.TextQueries.attachSnippets(c.documents,
                       lexTop(graft.queries.TextQueries.Bm25K), terms)
                     .select(col("doc_id"), col("score_e12"), col("hit_pos"),
                       col("snippet"))
@@ -267,7 +301,7 @@ final class GraftService private (
                   val maxRel = page.agg(
                     max(col("rrf_e6")).cast("double").as("__mx"))
                   val cand = page.join(
-                      graft.sources.Tables.embeddings(spark, dir)
+                      c.embeddings
                         .select(col("vec_id").as("doc_id"), col("embedding")),
                       Seq("doc_id"))
                     .crossJoin(broadcast(maxRel))
@@ -311,22 +345,25 @@ final class GraftService private (
             val nProbe = math.min(8, math.max(1,
               ps.get("nprobe").flatMap(s => scala.util.Try(s.toInt).toOption)
                 .getOrElse(3)))
-            parseProbe(ps, dir) match {
+            // the build-once layout plans over the corpus handle; a
+            // streamed index grows, so it resolves on every request (and
+            // needs no handle)
+            val streamed = for (i <- ps.get("indexDir"); c <- ps.get("centroidsDir"))
+              yield (checkPath(i), checkPath(c))
+            lazy val handle = corpus(dir)
+            def embeddings =
+              if (streamed.isEmpty) handle.embeddings else Tables.embeddings(spark, dir)
+            parseProbe(ps, embeddings) match {
               case None =>
                 (400, """{"error":"probeDoc must be a known vec_id; probe must be 64 comma-separated numbers"}""")
               case Some((qv, excl)) =>
                 import org.apache.spark.sql.expressions.Window
                 import spark.implicits._
-                val (index, cents) =
-                  (ps.get("indexDir"), ps.get("centroidsDir")) match {
-                    case (Some(i), Some(c)) =>
-                      (Streaming.annIndexVectors(spark, checkPath(i)),
-                        spark.read.parquet(checkPath(c)))
-                    case _ =>
-                      val ivf = graft.queries.ClusterArtifacts.ivfIndex(spark, dir)
-                      (spark.read.parquet(s"$ivf/index"),
-                        spark.read.parquet(s"$ivf/centroids"))
-                  }
+                val (index, cents) = streamed match {
+                  case Some((i, c)) =>
+                    (Streaming.annIndexVectors(spark, i), spark.read.parquet(c))
+                  case None => (handle.ivfIndex, handle.centroids)
+                }
                 val queries = Seq((0L, qv)).toDF("query_id", "q")
                 // +1 headroom when the probe's own row will be excluded
                 val top = graft.ops.Similarity.ivfExactTopKMany(
@@ -344,7 +381,7 @@ final class GraftService private (
                     // bounded page → MMR; vectors resolve from the corpus
                     // (page ids ARE corpus vec_ids for every index layout)
                     val cand = page.localCheckpoint(true)
-                      .join(graft.sources.Tables.embeddings(spark, dir)
+                      .join(embeddings
                         .select(col("vec_id").as("id"), col("embedding")),
                         Seq("id"))
                       .select(col("id"), col("embedding"),
@@ -508,6 +545,24 @@ object GraftService {
   private[graft] def ivfIndexFor(spark: SparkSession, dir: String): String =
     graft.queries.ClusterArtifacts.ivfIndex(spark, dir)
 
+  /** One corpus's build-once relations, each resolved once (schema read,
+    * partition directories listed) so a request only plans over them:
+    * the corpus tables, the postings index ([[postingsIndexFor]]) and the
+    * IVF index ([[ivfIndexFor]]). */
+  private[service] final case class Corpus(documents: DataFrame, embeddings: DataFrame,
+      postings: DataFrame, stats: DataFrame, ivfIndex: DataFrame, centroids: DataFrame)
+
+  private[service] object Corpus {
+    /** Builds the serving indexes first: a failed build leaves no handle. */
+    def resolve(spark: SparkSession, dir: String): Corpus = {
+      val idx = postingsIndexFor(spark, dir)
+      val ivf = ivfIndexFor(spark, dir)
+      Corpus(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
+        spark.read.parquet(s"$idx/postings"), spark.read.parquet(s"$idx/stats"),
+        spark.read.parquet(s"$ivf/index"), spark.read.parquet(s"$ivf/centroids"))
+    }
+  }
+
   /** Malformed request param — surfaces as a 400, not a 500. */
   private[service] final class BadParam(msg: String)
     extends RuntimeException(msg)
@@ -535,9 +590,19 @@ object GraftService {
   def start(spark: SparkSession, port: Int = 7000,
       pathRoots: Seq[String] = Nil): GraftService = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    val svc = new GraftService(spark, server, pathRoots)
+    // one serving thread per core: concurrent requests overlap their
+    // driver rounds (planning, scheduling, collect) on the shared session
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
+      (r: Runnable) => {
+        val t = new Thread(r,
+          s"graft-service-${server.getAddress.getPort}-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val svc = new GraftService(spark, server, pool, pathRoots)
     server.createContext("/", (ex: HttpExchange) => svc.handle(ex))
-    server.setExecutor(null) // single serving thread: a facade, not a fleet
+    server.setExecutor(pool)
     server.start()
     svc
   }

@@ -540,4 +540,17 @@ class GraftFunctionsSpec extends SparkSpec {
       .as[Int].collect().toSeq
     assert(got == want, s"got=$got want=$want")
   }
+
+  test("sigAgreeCount refuses non-BIGINT arrays at analysis instead of reading them as longs") {
+    import org.apache.spark.sql.functions.col
+    val df = Seq((Seq(1, 2, 3), Seq(1, 9, 3), Seq(1L, 9L, 3L))).toDF("ia", "ib", "lb")
+    Seq(("ia", "ib"), ("ia", "lb"), ("lb", "ia")).foreach { case (a, b) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(graft.functions.NativeExpressions.sigAgreeCount(col(a), col(b))))
+      assert(e.getMessage.contains("ARRAY<BIGINT>"), e.getMessage)
+    }
+    // BIGINT arrays (nullable elements or not) still analyse and count
+    assert(df.select(graft.functions.NativeExpressions.sigAgreeCount(col("lb"), col("lb")))
+      .as[Int].head() == 3)
+  }
 }

@@ -540,4 +540,131 @@ class ServiceSpec extends SparkSpec {
       assert(get(svc, "/media")._1 == 400) // dir required
     } finally svc.close()
   }
+
+  test("concurrent mixed requests answer exactly as the same requests answered one at a time; close() ends the pool") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val dir = enc(sf())
+    val reqs = Seq(
+      s"/search?dir=$dir&q=${enc("customer line")}&limit=5",
+      s"/search?dir=$dir&q=${enc("customer")}",
+      s"/search?dir=$dir&mode=hybrid&probeDoc=5&q=${enc("customer line")}",
+      s"/search?dir=$dir&mode=hybrid&probeDoc=9&q=${enc("line")}",
+      s"/similar?dir=$dir&probeDoc=7&k=10",
+      s"/similar?dir=$dir&probeDoc=3&k=5&nprobe=2",
+      s"/search?dir=$dir&q=${enc("line")}&limit=3",
+      s"/similar?dir=$dir&probeDoc=11&k=3")
+    val svc = GraftService.start(spark, port = 0)
+    val prefix = s"graft-service-${svc.port}-"
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith(prefix)).toSeq
+    val threads = try {
+      val sequential = reqs.map(get(svc, _))
+      assert(sequential.forall(_._1 == 200), sequential.filter(_._1 != 200))
+      val pending = reqs.map(r => client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${svc.port}$r")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()))
+      val concurrent = pending.map { f => val r = f.get(); (r.statusCode(), r.body()) }
+      reqs.indices.foreach(i =>
+        assert(concurrent(i) == sequential(i), s"${reqs(i)} answered differently under concurrency"))
+      poolThreads
+    } finally svc.close()
+    assert(threads.nonEmpty, s"no $prefix* serving threads")
+    threads.foreach(_.join(10000))
+    assert(!threads.exists(_.isAlive) && poolThreads.isEmpty,
+      s"serving threads alive after close(): ${poolThreads.map(_.getName)}")
+  }
+
+  test("a warm /search or /similar runs a pinned number of Spark jobs (no per-request resolution)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val markKey = "graft.test.jobMark"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var mark: (String, java.util.concurrent.CountDownLatch) = null
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val m = Option(e.properties).map(_.getProperty(markKey)).orNull
+        if (m != null) { val cur = mark; if (cur != null && cur._1 == m) cur._2.countDown() }
+        // micro-batches of a stream another suite left running are not ours
+        else if (Option(e.properties).forall(_.getProperty("sql.streaming.queryId") == null))
+          jobs.incrementAndGet()
+      }
+    }
+    // the bus delivers events in order: once a marker job's start event
+    // arrives, every job started before it has been counted
+    def settle(): Unit = {
+      val token = java.util.UUID.randomUUID().toString
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      mark = (token, latch)
+      val sc = spark.sparkContext
+      sc.setLocalProperty(markKey, token)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(markKey, null)
+      assert(latch.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    }
+    def jobsOf(body: => Unit): Int = { settle(); val j0 = jobs.get; body; settle(); jobs.get - j0 }
+    val svc = GraftService.start(spark, port = 0)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val dir = java.net.URLEncoder.encode(sf(), "UTF-8")
+      val lex = s"/search?dir=$dir&q=${java.net.URLEncoder.encode("customer line", "UTF-8")}"
+      val similar = s"/similar?dir=$dir&probeDoc=7&k=10"
+      Seq(lex, similar).foreach(r => assert(get(svc, r)._1 == 200)) // warm
+      val lexJobs = jobsOf(assert(get(svc, lex)._1 == 200))
+      val similarJobs = jobsOf(assert(get(svc, similar)._1 == 200))
+      // resolving the corpus per request cost 13 (lexical) and 9
+      // (/similar) jobs per warm request
+      assert(lexJobs <= 7, s"lexical /search ran $lexJobs jobs")
+      assert(similarJobs <= 6, s"/similar ran $similarJobs jobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      svc.close()
+    }
+  }
+
+  test("streamed /similar resolves its index per request: a batch_run added between requests is served") {
+    import spark.implicits._
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val ivf = GraftService.ivfIndexFor(spark, sf())
+    val root = java.nio.file.Files.createTempDirectory("svc_ann_fresh").toString
+    val srcDir = s"$root/src"
+    val emb = graft.sources.Tables.embeddings(spark, sf()).select($"vec_id", $"embedding")
+    emb.write.mode("append").parquet(srcDir)
+    val q = graft.streaming.Streaming.incrementalAnnSink(
+      spark.readStream.schema(emb.schema).parquet(srcDir), "vec_id", "embedding",
+      s"$ivf/centroids", s"$root/idx", checkpointDir = Some(s"$root/ckpt"))
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      q.processAllAvailable()
+      val req = s"/similar?dir=${enc(sf())}&probeDoc=7&k=10" +
+        s"&indexDir=${enc(s"$root/idx")}&centroidsDir=${enc(s"$ivf/centroids")}"
+      val (c1, b1) = get(svc, req)
+      assert(c1 == 200 && !b1.contains("\"id\":1000007,"), b1)
+      // a copy of the probe under a new id: cosine 1.0, in the probed cell
+      emb.filter($"vec_id" === 7L).select(lit(1000007L).as("vec_id"), $"embedding")
+        .write.mode("append").parquet(srcDir)
+      q.processAllAvailable()
+      val runs = new java.io.File(s"$root/idx").listFiles().count(_.getName.startsWith("batch_run="))
+      assert(runs == 2, s"expected a second batch_run, found $runs")
+      val (c2, b2) = get(svc, req)
+      assert(c2 == 200 && b2.contains("\"id\":1000007,"), b2)
+      // the build-once layout is untouched by the stream
+      assert(get(svc, s"/similar?dir=${enc(sf())}&probeDoc=7&k=10")._2 == b1)
+    } finally {
+      q.stop()
+      svc.close()
+    }
+  }
+
+  test("a dir refused under pathRoots creates no corpus handle") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val svc = GraftService.start(spark, port = 0, pathRoots = Seq(sf()))
+    try {
+      assert(get(svc, s"/search?dir=${enc("/etc")}")._1 == 403)
+      assert(get(svc, s"/search?dir=${enc(sf() + "/..")}&mode=hybrid&probeDoc=5")._1 == 403)
+      assert(get(svc, s"/similar?dir=${enc("/etc")}&probeDoc=7")._1 == 403)
+      assert(get(svc, s"/similar?dir=${enc(sf())}&probeDoc=7" +
+        s"&indexDir=${enc("/etc")}&centroidsDir=${enc("/etc")}")._1 == 403)
+      assert(svc.corpusDirs.isEmpty, svc.corpusDirs)
+      assert(get(svc, s"/search?dir=${enc(sf())}")._1 == 200)
+      assert(svc.corpusDirs == Set(new java.io.File(sf()).getCanonicalPath), svc.corpusDirs)
+    } finally svc.close()
+  }
 }

@@ -187,4 +187,26 @@ class TextSearchSpec extends SparkSpec {
       if (idcg > 0) assert(ndcg == dcg * 1000000L / idcg)
     }
   }
+
+  test("driver-side postings bucket ids equal the engine's pmod(xxhash64(term), 64)") {
+    import spark.implicits._
+    val vocab = graft.sources.Tables.documents(spark, sf("sf0.1"))
+      .select(explode(split(col("text"), " "))).distinct().as[String].collect().toSeq
+    assert(vocab.nonEmpty)
+    val bag64 = (vocab ++ (1 to 64).map("zz" + _)).distinct.take(64)
+    val terms = (vocab ++ bag64 ++
+      Seq("", " ", "naïve", "straße", "日本語", "кириллица", "emoji🙂", "e\u0301")).distinct
+    val engine = terms.toDF("t")
+      .select(col("t"), pmod(xxhash64(col("t")), lit(TextSearch.PostingsBuckets)))
+      .as[(String, Long)].collect().toMap
+    terms.foreach(t => assert(TextSearch.bucketId(t, TextSearch.PostingsBuckets) == engine(t),
+      s"bucket of '$t'"))
+    // a full 64-term bag through the stored index still ranks exactly as
+    // the corpus scan
+    val docs = graft.sources.Tables.documents(spark, sf())
+    val idx = graft.queries.ClusterArtifacts.postingsIndex(spark, sf())
+    assert(bag64.size == 64)
+    assert(TextSearch.bm25TopKIndexed(spark, idx, bag64, 20).collect().toSeq ==
+      TextSearch.bm25TopK(docs, "doc_id", "text", bag64, 20).collect().toSeq)
+  }
 }
