@@ -1,26 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
-/** Physical-plan snapshot dump: one `plans/<query>.txt` per registered
+/** Physical-plan snapshot dump: one `plans/<query>.txt` per selected
   * query (formatted explain). The snapshots are committed so plan-shape
   * changes show up in review diffs — the `.explain`-and-iterate loop the
-  * scale design depends on, made persistent. Regenerate with:
-  *   tools/run_graft.sh graft.PlanDump /root/testdata/sf0.001 plans
+  * scale design depends on, made persistent. The committed snapshots
+  * were produced at 8 cores; regenerate with:
+  *   SPARK_GRAFT_CPUS=8 tools/run_graft.sh graft.PlanDump /root/testdata/sf0.001 plans
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "plans"
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[8]"), shufflePartitions = 8
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
-    graft.queries.Registry.all.foreach { q =>
+    Runner.selected().foreach { q =>
       try {
         val plan = q.run(spark, sfDir).queryExecution.explainString(mode)
         // strip run-specific noise (paths, plan ids drift per run; paths

@@ -1,102 +1,50 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
-/** Measurement harness for the optimization rounds (guide §1): times a
-  * comma-separated list of queries (args(0), default: all) with the
-  * bench's noop-sink methodology and additionally reports, per query,
-  * the scheduler shape — jobs, stages, tasks, cumulative task time and
-  * shuffle bytes — from a SparkListener. A query whose wall time is 2 s
-  * on 2 s of task time across 40 stages is paying scheduling rounds,
-  * not compute; one with 60 s of task time in 3 stages needs a plan
-  * change. Usage:
+/** Measurement harness for the optimization rounds (guide §1): times the
+  * selected queries under the runner's noop-sink rule and additionally
+  * reports, per query, the scheduler shape of the second rep — jobs,
+  * stages, tasks, cumulative task time and shuffle bytes — from a
+  * SparkListener. A query whose wall time is 2 s on 2 s of task time
+  * across 40 stages is paying scheduling rounds, not compute; one with
+  * 60 s of task time in 3 stages needs a plan change. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *   tools/run_graft.sh graft.Profile q47_pagerank,q212_authority_quality
+  *   SPARK_GRAFT_ONLY=q47_pagerank,q212_authority_quality \
+  *   tools/run_graft.sh graft.Profile
   */
 object Profile {
+  private class Counters extends SparkListener {
+    val jobs, stages, tasks, taskMs, gcMs, shufR, shufW = new AtomicLong
+    def reset(): Unit = Seq(jobs, stages, tasks, taskMs, gcMs, shufR, shufW).foreach(_.set(0))
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) {
+        taskMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // warm codegen path
-
-    val jobs = new AtomicInteger; val stages = new AtomicInteger
-    val tasks = new AtomicInteger; val taskMs = new AtomicLong
-    val shufR = new AtomicLong; val shufW = new AtomicLong
-    val gcMs = new AtomicLong
-    // per-stage attribution: stageId -> (name, tasks, taskMs, gcMs)
-    val stageAgg = new java.util.concurrent.ConcurrentHashMap[
-      Int, (String, AtomicInteger, AtomicLong, AtomicLong)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stageAgg.putIfAbsent(s.stageInfo.stageId,
-          (s.stageInfo.name, new AtomicInteger, new AtomicLong, new AtomicLong))
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val sa = stageAgg.get(t.stageId)
-          if (sa != null) {
-            sa._2.incrementAndGet()
-            sa._3.addAndGet(m.executorRunTime)
-            sa._4.addAndGet(m.jvmGCTime)
-          }
-        }
-      }
-    })
-    val topStages = sys.env.getOrElse("SPARK_GRAFT_PROFILE_STAGES", "0").toInt
-
-    val only = args.headOption.map(_.split(",").toSet)
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
-    picked.foreach { case (name, fn) =>
-      // rep 0 is warmup (artifact builds, codegen); report best of the rest
-      val rows = (0 until reps).map { i =>
-        jobs.set(0); stages.set(0); tasks.set(0)
-        taskMs.set(0); gcMs.set(0); shufR.set(0); shufW.set(0)
-        stageAgg.clear()
-        spark.sparkContext.setJobDescription(s"$name rep$i")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // release localCheckpoint blocks too (see Bench) — reps replan
-        // from scratch, so nothing reuses them
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        (dt, jobs.get, stages.get, tasks.get, taskMs.get, gcMs.get, shufR.get, shufW.get)
-      }
-      val best = rows.drop(1).minBy(_._1)
-      val (dt, j, s, t, tm, gc, sr, sw) = best
-      println(f"$name%-28s wall=$dt%7.2fs jobs=$j%3d stages=$s%4d tasks=$t%5d " +
-        f"taskTime=${tm / 1000.0}%8.2fs gc=${gc / 1000.0}%5.2fs " +
-        f"shufR=${sr / 1e6}%9.1fMB shufW=${sw / 1e6}%9.1fMB " +
-        f"(first=${rows.head._1}%7.2fs)")
-      if (topStages > 0) {
-        // stageAgg holds the LAST rep's stages (cleared per rep)
-        import scala.jdk.CollectionConverters._
-        stageAgg.asScala.toSeq
-          .map { case (id, (nm, nt, ms, gc)) => (id, nm, nt.get, ms.get, gc.get) }
-          .sortBy(-_._4).take(topStages)
-          .foreach { case (id, nm, nt, ms, gc) =>
-            println(f"    stage $id%5d tasks=$nt%4d taskTime=${ms / 1000.0}%8.2fs " +
-              f"gc=${gc / 1000.0}%5.2fs  $nm")
-          }
-      }
+    val spark = Runner.session()
+    val c = new Counters
+    spark.sparkContext.addSparkListener(c)
+    Runner.selected().foreach { q =>
+      // reset at the start of every rep, so the counters end holding rep 2
+      val t = Runner.time(spark, q.name) { c.reset(); q.run(spark, Runner.sfDir) }
+      println(t.error.fold(
+        f"${q.name}%-28s wall=${t.warm}%7.2fs jobs=${c.jobs.get}%3d stages=${c.stages.get}%4d " +
+        f"tasks=${c.tasks.get}%5d taskTime=${c.taskMs.get / 1000.0}%8.2fs " +
+        f"gc=${c.gcMs.get / 1000.0}%5.2fs shufR=${c.shufR.get / 1e6}%9.1fMB " +
+        f"shufW=${c.shufW.get / 1e6}%9.1fMB (first=${t.cold}%7.2fs)"
+      )(e => f"${q.name}%-28s FAILED $e"))
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe for the dedup/ANN family (SCALE.md's data):
@@ -37,6 +37,13 @@ object ScaleProbe {
   private def ensureCorpus(spark: SparkSession, sfDir: String, copies: Int): String = {
     val out = s"/tmp/graft_scale/${graft.sources.Tables.dirCacheKey(sfDir)}-x$copies-v2"
     val marker = new File(s"$out/_COMPLETE")
+    // `copies` copies of df, each `keys` column offset by copy·10⁸
+    def offsetKeys(df: org.apache.spark.sql.DataFrame, keys: String*) = {
+      val expanded = df.withColumn("copy", explode(sequence(lit(0), lit(copies - 1))))
+      expanded.select(expanded.columns.filterNot(_ == "copy").map { c =>
+        if (keys.contains(c)) (col(c) + col("copy") * 100000000L).as(c) else col(c)
+      }.toSeq: _*)
+    }
     if (!marker.exists()) {
       new File(out).mkdirs()
       val docs = graft.sources.Tables.documents(spark, sfDir)
@@ -75,12 +82,6 @@ object ScaleProbe {
       // keys offset per copy (disjoint components per copy -> the graph
       // and its landmark set scale linearly; 10^8 is divisible by 10, so
       // the pk % 10 landmark rule selects the same nodes in every copy)
-      def offsetKeys(df: org.apache.spark.sql.DataFrame, keys: String*) = {
-        val expanded = df.withColumn("copy", explode(sequence(lit(0), lit(copies - 1))))
-        expanded.select(expanded.columns.filterNot(_ == "copy").map { c =>
-          if (keys.contains(c)) (col(c) + col("copy") * 100000000L).as(c) else col(c)
-        }.toSeq: _*)
-      }
       offsetKeys(graft.sources.Tables.lineitem(spark, sfDir),
           "l_orderkey", "l_partkey", "l_suppkey")
         .coalesce(4).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
@@ -108,13 +109,7 @@ object ScaleProbe {
     // corrupting all events-family scale measurements
     val eventsMarker = new File(s"$out/_EVENTS_COMPLETE")
     if (!eventsMarker.exists()) {
-      graft.sources.Tables.events(spark, sfDir)
-        .withColumn("copy", explode(sequence(lit(0), lit(copies - 1))))
-        .select(
-          (col("event_id") + col("copy") * 100000000L).as("event_id"),
-          col("ts"),
-          (col("user_id") + col("copy") * 100000000L).as("user_id"),
-          col("event_type"), col("value"), col("props"))
+      offsetKeys(graft.sources.Tables.events(spark, sfDir), "event_id", "user_id")
         .coalesce(4).write.mode("overwrite").parquet(s"$out/events.parquet")
       eventsMarker.createNewFile()
     }
@@ -124,11 +119,7 @@ object ScaleProbe {
     // fixed, the governance-aggregate shape. Same marker discipline.
     val customerMarker = new File(s"$out/_CUSTOMER_COMPLETE")
     if (!customerMarker.exists()) {
-      graft.sources.Tables.customer(spark, sfDir)
-        .withColumn("copy", explode(sequence(lit(0), lit(copies - 1))))
-        .select(
-          (col("c_custkey") + col("copy") * 100000000L).as("c_custkey"),
-          col("c_name"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
+      offsetKeys(graft.sources.Tables.customer(spark, sfDir), "c_custkey")
         .coalesce(4).write.mode("overwrite").parquet(s"$out/customer.parquet")
       customerMarker.createNewFile()
     }
@@ -138,46 +129,40 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
+    val spark = Runner.session()
 
     val dir = ensureCorpus(spark, sfDir, copies)
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
     println(s"## corpus: $dir ($nDocs docs, ${copies}x ${new File(sfDir).getName})")
     println("| query | seconds | output rows |")
     println("|---|---|---|")
-    // SPARK_GRAFT_ONLY: probe a subset (same contract as Bench/Verify)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n))).foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
+    Runner.selected().foreach { q =>
+      // rows ride the timed write itself: no second execution to count them
+      var rows = Observation()
+      val t = Runner.time(spark, q.name) {
+        rows = Observation()
+        q.run(spark, dir).observe(rows, count(lit(1)).as("rows"))
+      }
       // a per-query failure (e.g. heap pressure at extreme N on the
-      // fixed 8 GiB probe JVM) must cost one row, never the whole table
-      val rows = scala.util.Try(fn(spark, dir).count())
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      rows match {
-        case scala.util.Success(n) => println(f"| $name | $dt%.1f | $n |")
-        case scala.util.Failure(e) =>
-          println(f"| $name | FAILED | ${e.getClass.getSimpleName} |")
+      // fixed 8 GiB probe JVM) costs one row, never the whole table
+      t.error match {
+        case None => println(f"| ${q.name} | ${t.warm}%.1f | ${rows.get("rows")} |")
+        case Some(e) => println(s"| ${q.name} | FAILED | $e |")
       }
     }
+    // SPARK_GRAFT_NO_DIAG=1 skips the cap diagnostics: a single-query
+    // probe of a census consumer shouldn't pay the full-corpus
+    // pair-generator sweep (~15 min at 100x, dwarfing the measurement it
+    // garnishes).
+    if (!sys.env.get("SPARK_GRAFT_NO_DIAG").contains("1")) capDiagnostics(spark, dir)
+    spark.stop()
+  }
 
-    // cap drop rates per banded candidate generator, at this corpus size.
-    // The whole diagnostics tail is fail-soft: at extreme N the raw
-    // (uncapped) pair generators it measures can exhaust the probe JVM's
-    // fixed heap, and that must never cost the query table above.
-    // SPARK_GRAFT_NO_DIAG=1 skips it entirely — a single-query probe of a
-    // census consumer shouldn't pay the full-corpus pair-generator sweep
-    // (~15 min at 100x, dwarfing the measurement it garnishes).
-    if (sys.env.get("SPARK_GRAFT_NO_DIAG").contains("1")) { spark.stop(); return }
-    try {
+  /** Cap drop rates per banded candidate generator, at this corpus size.
+    * Fail-soft: at extreme N the raw (uncapped) pair generators it
+    * measures can exhaust the probe JVM's fixed heap, and that must never
+    * cost the query table. */
+  private def capDiagnostics(spark: SparkSession, dir: String): Unit = try {
     println()
     println("| candidate generator | bucket key | cap | dropped keys | dropped rows | total rows | drop % |")
     println("|---|---|---|---|---|---|---|")
@@ -233,11 +218,8 @@ object ScaleProbe {
         graft.ops.Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
           dim = 64, planes = 8, tables = 12, cosineThreshold = 0.3),
         4, "cosine", ascending = false))
-    } catch {
-      case e: Throwable =>
-        println(s"| (diagnostics aborted: ${e.getClass.getSimpleName}) | | | | | | |")
-    }
-
-    spark.stop()
+  } catch {
+    case e: Throwable =>
+      println(s"| (diagnostics aborted: ${e.getClass.getSimpleName}) | | | | | | |")
   }
 }

@@ -1,46 +1,33 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods.compact
+import graft.queries.QueryDef
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected query's result → parquet under
+  * `<outDir>/<name>`, plus oracle_sql.json, for the DuckDB oracle
+  * compare (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q12,q13b (local iteration aid): restricts the dump +
-    // oracle json to the named queries; absent (the driver) = everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val spark = Runner.session()
+    dump(spark, sfDir, outDir, Runner.selected())
     spark.stop()
+  }
+
+  def dump(spark: SparkSession, sfDir: String, outDir: String, picked: Seq[QueryDef]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    picked.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+      }
+    }
+    // a control char left raw in an oracle SQL would make the compare's
+    // json.load fail and silently zero the round's correctness
+    def q(s: String): String = compact(JString(s))
+    val json = picked.flatMap(d => d.oracle.map(sql => s"${q(d.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

@@ -790,7 +790,6 @@ object Dedup {
       }
       i += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"[cc] rounds=$i")
     // silent non-convergence would report one real cluster as several —
     // strictly worse than failing (the no-silent-caps posture)
     if (!converged) throw new IllegalStateException(

@@ -115,7 +115,7 @@ object Relational {
     val w = Window.partitionBy(col("c_nationkey"))
       .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
     // cast: DuckDB row_number is BIGINT; a type-sensitive driver hash
-    // must see the same physical type both sides (tools/type_sweep.py)
+    // must see the same physical type both sides (tools/check_oracle.py)
     cust.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= 3)
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))

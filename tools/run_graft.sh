@@ -1,6 +1,10 @@
 #!/bin/bash
 # Fast runner for graft mains without sbt startup overhead.
 # usage: tools/run_graft.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# Every main (Bench, Profile, Verify, PlanDump, ScaleProbe) builds its
+# session through graft.Runner: SPARK_GRAFT_CPUS (default: every core)
+# sets local[N] and shuffle partitions; SPARK_GRAFT_ONLY=q1,q12 runs only
+# the named queries. SPARK_DRIVER_MEM (default 8g) sets the heap.
 set -e
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
