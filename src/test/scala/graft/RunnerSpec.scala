@@ -83,4 +83,30 @@ class RunnerSpec extends SparkSpec {
     // r14's official capture: loadavg 0.87 with a 91 GiB heap
     assert(Bench.heapMismatch(8192 + 513) && Bench.heapMismatch(91136))
   }
+  test("plan scrub: distinct-aggregate Expand groups read the same in either hash order") {
+    // the same aggregate as Spark may print it in two runs: distinct
+    // groups (x, y) and their columns swapped, gid literals renumbered
+    def dump(cols: Seq[String], gids: Map[String, Int]): String = {
+      val projs = cols.map { c =>
+        cols.map(o => if (o == c) o else "null").mkString("[source#1, ", ", ", s", ${gids(c)}, null]")
+      }
+      s"""(2) Expand
+         |Arguments: [[source#1, null, null, 0, frame_idx#9], ${projs.mkString(", ")}], [source#1, ${cols.mkString(", ")}, gid#5, frame_idx#9]
+         |
+         |(3) HashAggregate
+         |Keys [4]: [source#1, ${cols.mkString(", ")}, gid#5]
+         |Functions [3]: [partial_count(x#2) FILTER (WHERE (gid#5 = ${gids("x#2")})), partial_count(y#3) FILTER (WHERE (gid#5 = ${gids("y#3")})), partial_first(c#9, true) FILTER (WHERE (gid#5 = 0))]
+         |""".stripMargin
+    }
+    val a = dump(Seq("x#2", "y#3"), Map("x#2" -> 1, "y#3" -> 2))
+    val b = dump(Seq("y#3", "x#2"), Map("y#3" -> 1, "x#2" -> 2))
+    assert(a != b)
+    val s = PlanDump.scrub(b)
+    assert(s == PlanDump.scrub(a))
+    assert(s.contains("Arguments: [[source#N, null, null, 0, frame_idx#N], [source#N, x#N, null, 1, null], " +
+      "[source#N, null, y#N, 2, null]], [source#N, x#N, y#N, gid#N, frame_idx#N]"), s)
+    assert(s.contains("Keys [4]: [source#N, x#N, y#N, gid#N]"), s)
+    assert(s.contains("partial_count(x#N) FILTER (WHERE (gid#N = 1)), partial_count(y#N) FILTER " +
+      "(WHERE (gid#N = 2)), partial_first(c#N, true) FILTER (WHERE (gid#N = 0))"), s)
+  }
 }
