@@ -66,9 +66,9 @@ object PlanDump {
     val rewritten = ExpandArgs.replaceAllIn(plan, { m =>
       val whole = m.group(1)
       val args = topLevel(whole)
-      val canonical = if (args.size != 2) None else {
-        val projs = topLevel(args(0)).map(topLevel)
-        val outs = topLevel(args(1))
+      val canonical = if (args.size != 2 || !args.forall(a => a.startsWith("[") && a.endsWith("]"))) None else {
+        val projs = topLevel(unwrap(args(0))).map(p => topLevel(unwrap(p)))
+        val outs = topLevel(unwrap(args(1)))
         val g = outs.indexWhere(_.startsWith("gid#"))
         if (g < 0 || projs.exists(_.size != outs.size)) None else {
           val distinct = (0 until g).filter(c => projs.exists(_(c) == "null"))
@@ -99,10 +99,11 @@ object PlanDump {
     edits.result().foldLeft(rewritten)((text, edit) => edit(text))
   }
 
-  /** Splits `[a, f(b, c), [d]]` into its top-level items `a`, `f(b, c)`,
-    * `[d]`; a string not wrapped in brackets is split as a bare list. */
-  private def topLevel(s: String): Seq[String] = {
-    val body = if (s.startsWith("[") && matching(s, 0) == s.length - 1) s.substring(1, s.length - 1) else s
+  private def unwrap(bracketed: String): String = bracketed.substring(1, bracketed.length - 1)
+
+  /** Splits `a, f(b, c), [d]` into its top-level items `a`, `f(b, c)`,
+    * `[d]`. */
+  private def topLevel(body: String): Seq[String] = {
     val items = Seq.newBuilder[String]
     var depth = 0
     var start = 0
@@ -120,22 +121,5 @@ object PlanDump {
     }
     items += body.substring(start).trim
     items.result()
-  }
-
-  /** Index of the bracket closing the one opened at `open`. */
-  private def matching(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
   }
 }

@@ -418,6 +418,94 @@ object NativeExpressions {
       copy(left = l, right = r)
   }
 
+  /** LSH banding of a MinHash signature in one row-local pass: band b
+    * hashes signature positions [b·rows, (b+1)·rows) with Spark's
+    * `xxhash64` array convention (seed 42, each non-null element chained
+    * through XXH64.hashLong; a missing slice hashes to the seed). The
+    * expression form `transform(sequence(0, bands-1), b ->
+    * struct(b, xxhash64(slice(sig, b*rows+1, rows))))` evaluated its
+    * lambda interpreted and built a slice array per band; the output here
+    * is bit-identical, a null signature included (every band hash 42). */
+  case class LshBands(child: Expression, bands: Int, rows: Int)
+      extends UnaryExpression
+      with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes with CodegenFallback {
+    require(bands >= 1 && rows >= 1, s"bands=$bands, rows=$rows must be positive")
+    override def inputTypes: Seq[ArrayType] = Seq(ArrayType(LongType))
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("band", IntegerType, nullable = false),
+      StructField("band_hash", LongType, nullable = false))), containsNull = false)
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+      val sig = child.eval(input).asInstanceOf[ArrayData]
+      val n = if (sig == null) 0 else sig.numElements()
+      val out = new Array[Any](bands)
+      var b = 0
+      while (b < bands) {
+        var h = 42L
+        var i = b * rows
+        val end = math.min(i + rows, n)
+        while (i < end) {
+          if (!sig.isNullAt(i))
+            h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig.getLong(i), h)
+          i += 1
+        }
+        out(b) = org.apache.spark.sql.catalyst.InternalRow(b, h)
+        b += 1
+      }
+      new GenericArrayData(out)
+    }
+    override protected def withNewChildInternal(c: Expression): LshBands = copy(child = c)
+  }
+
+  /** Exact set Jaccard |A∩B| / |A∪B| over the DISTINCT elements of two
+    * arrays (a null element counts as one value), in one hash pass — the
+    * same double as `size(array_intersect(a, b)) / size(array_union(a,
+    * b))`, without building either intermediate array. Null when either
+    * input is null, and when both are empty (0/0 is undefined; the
+    * expression form divides by zero there). Both inputs must be arrays
+    * of one element type, STRING or BIGINT. */
+  case class SetJaccard(left: Expression, right: Expression)
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
+
+    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+      (left.dataType, right.dataType) match {
+        case (ArrayType(a, _), ArrayType(b, _)) if a == b && (a == StringType || a == LongType) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (l, r) => TypeCheckResult.TypeCheckFailure(
+          s"graft jaccard: two array<string> or array<bigint> inputs expected, got " +
+            s"${l.simpleString} / ${r.simpleString}")
+      }
+    }
+
+    @transient private lazy val elementType = left.dataType.asInstanceOf[ArrayType].elementType
+
+    override def nullSafeEval(a: Any, b: Any): Any = {
+      val va = a.asInstanceOf[ArrayData]
+      val vb = b.asInstanceOf[ArrayData]
+      // one map over both sets: element -> whether B has been seen to hold it
+      val seen = new java.util.HashMap[Any, java.lang.Boolean](math.max(16, va.numElements() * 2))
+      var i = 0
+      while (i < va.numElements()) { seen.put(va.get(i, elementType), java.lang.Boolean.FALSE); i += 1 }
+      val distinctA = seen.size
+      var onlyB = 0
+      var inter = 0
+      i = 0
+      while (i < vb.numElements()) {
+        val before = seen.put(vb.get(i, elementType), java.lang.Boolean.TRUE)
+        if (before == null) onlyB += 1 else if (!before) inter += 1
+        i += 1
+      }
+      val union = distinctA + onlyB
+      if (union == 0) null else inter.toDouble / union.toDouble
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): SetJaccard =
+      copy(left = l, right = r)
+  }
+
   /** K-permutation MinHash signature in ONE row-local pass, replicating
     * Dedup.portableBase bit-for-bit: per shingle, h1 = md5 hex chars
     * [1,15] (60 bits), h2 = hex chars [16,30] masked to 57 bits;
@@ -1142,6 +1230,118 @@ object NativeExpressions {
       copy(qv = c(0), pqv = c(1), idExpr = c(2))
   }
 
+  /** One bucket's members while it stays within the cap: `rows` counts
+    * every input row (null ids included) up to cap + 1; `ids` holds the
+    * non-null ids and is dropped once `rows` passes the cap. */
+  final class BucketIdsBuf(var rows: Int, var ids: Array[Long], var size: Int)
+
+  /** Bounded `collect_list` of BIGINT ids per bucket — the degenerate-
+    * bucket guard and the member list of a bucket self-join in ONE
+    * grouping. A bucket of more than `maxBucket` rows evaluates to null
+    * (dropped whole, as the count + anti-join cap did); otherwise to its
+    * ids in ascending order. No buffer ever holds more than `maxBucket`
+    * ids, map-side partials included, so one boilerplate bucket costs a
+    * counter, not a list. Hash-based (ObjectHashAggregateExec), like
+    * ArgMaxByOrd. */
+  case class BucketIds(idExpr: Expression, maxBucket: Int,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[BucketIdsBuf]
+      with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
+    require(maxBucket >= 1, s"positive bucket cap expected, got $maxBucket")
+
+    override def children: Seq[Expression] = Seq(idExpr)
+    override def inputTypes: Seq[DataType] = Seq(LongType)
+    override def nullable: Boolean = true
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+    override def createAggregationBuffer(): BucketIdsBuf = new BucketIdsBuf(0, new Array[Long](4), 0)
+
+    private def overflowed(b: BucketIdsBuf): Boolean = b.rows > maxBucket
+
+    private def add(b: BucketIdsBuf, id: Long): Unit = {
+      if (b.size == b.ids.length) b.ids = java.util.Arrays.copyOf(b.ids, math.min(b.size * 2, maxBucket))
+      b.ids(b.size) = id
+      b.size += 1
+    }
+
+    private def overflow(b: BucketIdsBuf): BucketIdsBuf = {
+      b.rows = maxBucket + 1; b.ids = null; b.size = 0
+      b
+    }
+
+    override def update(b: BucketIdsBuf, input: org.apache.spark.sql.catalyst.InternalRow): BucketIdsBuf = {
+      if (overflowed(b)) return b
+      b.rows += 1
+      if (overflowed(b)) return overflow(b)
+      val id = idExpr.eval(input)
+      if (id != null) add(b, id.asInstanceOf[Long])
+      b
+    }
+
+    override def merge(b: BucketIdsBuf, o: BucketIdsBuf): BucketIdsBuf = {
+      if (overflowed(b)) return b
+      if (overflowed(o) || b.rows + o.rows > maxBucket) return overflow(b)
+      b.rows += o.rows
+      var i = 0
+      while (i < o.size) { add(b, o.ids(i)); i += 1 }
+      b
+    }
+
+    override def eval(b: BucketIdsBuf): Any =
+      if (overflowed(b)) null
+      else {
+        val ids = java.util.Arrays.copyOf(b.ids, b.size)
+        java.util.Arrays.sort(ids)
+        new GenericArrayData(ids)
+      }
+
+    override def serialize(b: BucketIdsBuf): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(8 + 8 * b.size)
+      buf.putInt(b.rows).putInt(b.size)
+      var i = 0
+      while (i < b.size) { buf.putLong(b.ids(i)); i += 1 }
+      buf.array()
+    }
+
+    override def deserialize(bytes: Array[Byte]): BucketIdsBuf = {
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      val rows = buf.getInt()
+      val size = buf.getInt()
+      val ids = new Array[Long](math.max(size, 4))
+      var i = 0
+      while (i < size) { ids(i) = buf.getLong(); i += 1 }
+      new BucketIdsBuf(rows, ids, size)
+    }
+
+    override def withNewMutableAggBufferOffset(n: Int): BucketIds = copy(mutableAggBufferOffset = n)
+    override def withNewInputAggBufferOffset(n: Int): BucketIds = copy(inputAggBufferOffset = n)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BucketIds =
+      copy(idExpr = c.head)
+  }
+
+  /** Every pair (id_a < id_b) of the distinct ids in one ascending id
+    * array (a [[BucketIds]] result), generated lazily row by row; a null
+    * or single-id array yields nothing. */
+  case class BucketPairs(child: Expression)
+      extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.Generator
+      with CodegenFallback {
+    override def elementSchema: StructType = StructType(Seq(
+      StructField("id_a", LongType, nullable = false),
+      StructField("id_b", LongType, nullable = false)))
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow)
+        : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+      val arr = child.eval(input).asInstanceOf[ArrayData]
+      if (arr == null) return Iterator.empty
+      val ids = arr.toLongArray().distinct
+      Iterator.range(0, ids.length).flatMap { i =>
+        Iterator.range(i + 1, ids.length).map(j =>
+          org.apache.spark.sql.catalyst.InternalRow(ids(i), ids(j)))
+      }
+    }
+    override protected def withNewChildInternal(c: Expression): BucketPairs = copy(child = c)
+  }
+
   /** Banded (Ukkonen) Levenshtein distance capped at `k`: returns the
     * exact edit distance when ≤ k, else k+1. The DP only visits the
     * 2k+1-wide diagonal band — O(k·n) instead of O(n·m) — with an
@@ -1239,6 +1439,20 @@ object NativeExpressions {
 
   def sigAgreeCount(a: Column, b: Column): Column =
     ColumnBridge.column(SigAgreeCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  def lshBands(signature: Column, bands: Int, rows: Int): Column =
+    ColumnBridge.column(LshBands(ColumnBridge.expression(signature), bands, rows))
+
+  def setJaccard(a: Column, b: Column): Column =
+    ColumnBridge.column(SetJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** Bounded per-bucket id list — see BucketIds. */
+  def bucketIds(id: Column, maxBucket: Int): Column =
+    ColumnBridge.column(BucketIds(ColumnBridge.expression(id), maxBucket).toAggregateExpression())
+
+  /** Generator of (id_a, id_b) pairs within one bucket — see BucketPairs. */
+  def bucketPairs(ids: Column): Column =
+    ColumnBridge.column(BucketPairs(ColumnBridge.expression(ids)))
 
   /** 60-bit portable md5 hash of the BINARY form of `c` (strings hash
     * their UTF-8 bytes, matching `md5(CAST(x AS BLOB))` on the SQL side). */

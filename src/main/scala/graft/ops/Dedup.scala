@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale design, common to all ops here:
   *   - candidate generation is always *bucketed* (LSH bands / simhash
-  *     chunks / blocking keys) so the self-join is an equi-join on the
-  *     bucket key — never an O(n²) cross join;
-  *   - per-doc work (shingling, signatures) is narrow higher-order-array
-  *     computation — no shuffle, no UDF, no driver involvement;
+  *     chunks / blocking keys): pairs come from a grouping or an
+  *     equi-join on the bucket key — never an O(n²) cross join;
+  *   - per-doc work (shingling, signatures, band hashes) is narrow
+  *     row-local native computation — no shuffle, no UDF, no driver
+  *     involvement;
   *   - hot buckets (degenerate content) are capped before pairing so one
   *     pathological key cannot produce a quadratic blowup.
   */
@@ -39,21 +40,6 @@ object Dedup {
     graft.functions.NativeExpressions.wordShingles(text, n)
 
   // -------------------------------------------------------- MinHash + LSH
-
-  /** K-permutation MinHash signature over shingles. Each "permutation" is
-    * xxhash64 seeded by the permutation index; min over shingles.
-    *
-    * Expression form (narrow, per-row) — fine for ad-hoc use, but the
-    * nested higher-order lambdas evaluate interpreted (no codegen). The
-    * pair pipeline below uses the one-pass native kernel
-    * (NativeExpressions.PortableMinHashSigs) instead; `minhashSignatures`
-    * (explode + codegen'd hash-aggregate) remains for custom base-hash
-    * families. */
-  @deprecated("interpreted per-row form (nested higher-order lambdas, no codegen); " +
-    "use NativeExpressions.portableMinHashSigs or minhashSignatures instead", "0.4")
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      p => array_min(transform(shingles, s => xxhash64(s, p))))
 
   /** Masks keeping h1 ≤ 60 bits and h2 ≤ 57 bits so h1 + 31·h2 stays
     * below 2^63 — the permutation family then computes with plain 64-bit
@@ -149,7 +135,10 @@ object Dedup {
     * only ≤ one narrow row per key per partition crosses the wire), keys
     * over the cap broadcast (tiny by construction — at most
     * totalRows/maxBucket keys), hot rows dropped MAP-SIDE by an anti-join
-    * before they ever cross an exchange.
+    * before they ever cross an exchange. The key compare is null-safe: a
+    * null key is one bucket, counted and capped like any other (a plain
+    * equi anti-join never matches null, so an oversized all-null bucket
+    * used to survive the cap).
     *
     * History: round 13 used a partitioned window count so the bucket
     * self-join could reuse the window's exchange — measured faster THEN
@@ -161,15 +150,35 @@ object Dedup {
     * a billion-row boilerplate bucket crossing the wire into a single
     * window partition is a liveness risk, not just wasted bytes (the
     * round-13 verdict's standing skew flag). The two-phase form drops
-    * those rows where they sit. */
-  private[ops] def dropOversizedBuckets(df: DataFrame, keys: Seq[String],
+    * those rows where they sit. The MinHash and hyperplane-LSH pair paths
+    * cap inside their bucket grouping instead ([[bucketPairs]]). */
+  private[graft] def dropOversizedBuckets(df: DataFrame, keys: Seq[String],
       maxBucket: Int): DataFrame = {
     val hot = df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__bucket_n"))
       .filter(col("__bucket_n") > maxBucket)
-      .select(keys.map(col): _*)
-    df.join(broadcast(hot), keys, "left_anti")
+      .select(keys.map(k => col(k).as(s"__hot_$k")): _*)
+    df.join(broadcast(hot), keys.map(k => col(k) <=> col(s"__hot_$k")).reduce(_ && _),
+      "left_anti")
   }
+
+  /** Candidate pairs of a bucket self-join in ONE grouping on the bucket
+    * key: each bucket collects its BIGINT `id`s through the bounded
+    * [[graft.functions.NativeExpressions.BucketIds]] aggregate (a bucket
+    * over `maxBucket` rows evaluates to null and is dropped whole — the
+    * same cap as [[dropOversizedBuckets]], a null key included), pairs
+    * (id_a < id_b) are generated inside each bucket, and a pair shared by
+    * several buckets is kept once. Replaces count aggregate + broadcast
+    * anti-join + checkpoint + self-join: the cap and the member lists are
+    * one shared aggregate pass (map-side partials, no buffer above
+    * `maxBucket` ids), nothing is broadcast, and the bucketed frame has a
+    * single consumer, so it needs no materialization. Returns
+    * (id_a, id_b). */
+  private[graft] def bucketPairs(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(graft.functions.NativeExpressions.bucketIds(col("id"), maxBucket).as("ids"))
+      .select(graft.functions.NativeExpressions.bucketPairs(col("ids")).as(Seq("id_a", "id_b")))
+      .dropDuplicates("id_a", "id_b")
 
   /** Diagnostic twin of `dropOversizedBuckets` — the no-silent-caps
     * posture, MEASURED: how much would the cap drop on this banded frame?
@@ -241,32 +250,31 @@ object Dedup {
   }
 
   /** LSH banding: split the signature into `bands` bands of `rows` values,
-    * hash each band. Output one (band, bandHash) struct per band. */
+    * hash each band. Output one (band, band_hash) struct per band; one
+    * native row-local pass (NativeExpressions.LshBands), bit-identical to
+    * `xxhash64` over each band's slice. */
   def lshBands(signature: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"), xxhash64(slice(signature, b * rows + 1, lit(rows))).as("band_hash")))
+    graft.functions.NativeExpressions.lshBands(signature, bands, rows)
 
   /** Near-duplicate pairs via MinHash LSH, verified with exact Jaccard on
     * the shingle sets.
     *
-    * Pipeline: shingle → signature → explode bands → bucket self-join on
-    * (band, band_hash) with id< id (dedup across bands via distinct pair)
-    * → join signatures back → exact Jaccard filter.
+    * Pipeline: shingle → signature → explode bands → [[bucketPairs]] on
+    * (band, band_hash): one capped grouping per bucket, pairs id_a < id_b
+    * generated inside each bucket and deduplicated across bands → join
+    * shingle sets back → exact Jaccard filter.
     *
-    * `maxBucket` drops degenerate buckets (e.g. boilerplate shared by
+    * `maxBucket` drops degenerate buckets whole (e.g. boilerplate shared by
     * thousands of docs) — at 100 TB such buckets otherwise dominate the
-    * pair count quadratically; callers get them reported separately if
-    * needed by inspecting bucket sizes themselves.
-    */
-  /** `base = None` (default) signs with the one-pass portable-md5 kernel
-    * (oracle-verifiable); pass `Some(xxhashBase)` to trade oracle parity
-    * for a faster hash family at 100 TB — the signature pipeline then
-    * runs the generic explode+aggregate path. */
-  /** `maxDegree > 0` caps each node's emitted pairs to its `maxDegree`
+    * pair count quadratically; `bucketCapStats` measures what it drops.
+    * `base = None` (default) signs with the one-pass portable-md5 kernel
+    * (oracle-verifiable); `Some(xxhashBase)` trades oracle parity for a
+    * faster hash family, through the generic explode+aggregate path.
+    * `maxDegree > 0` caps each node's emitted pairs to its `maxDegree`
     * HIGHEST-jaccard neighbors (union semantics, [[capPairDegree]]).
-    * `materialize = false` returns the LAZY plan with no persist/
-    * checkpoint — the plan-audit seam (PlanAuditSpec) and the escape
-    * hatch for callers composing further before acting. */
+    * `materialize = false` returns the LAZY plan with no checkpoint — the
+    * plan-audit seam (PlanAuditSpec) and the escape hatch for callers
+    * composing further before acting. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       jaccardThreshold: Double = 0.5, maxBucket: Int = 1000,
@@ -276,7 +284,8 @@ object Dedup {
     require(bands * rows == k, "k must be divisible by bands")
 
     // Materialize the shingle table once, spread across cores — eager
-    // localCheckpoint, not persist: it is both a recompute guard
+    // localCheckpoint, not persist: the signatures and both verification
+    // joins read it, and it is both a recompute guard
     // (CollapseProject would otherwise inline the shingle expression into
     // every downstream consumer) and block-lifecycle-safe — a persist held
     // by a returned lazy frame leaks for the session (the Graph lesson);
@@ -292,9 +301,10 @@ object Dedup {
     // recompute) and materialization happens at operator construction; a
     // deployment preferring elasticity can pass materialize = false and
     // manage persist lifecycle itself.
-    val shingledBase = spread(docs.select(
-      col(idCol).as("id"),
-      wordShingles(col(textCol), shingleN).as("shingles")))
+    // The text is spread, not the shingles: the shuffle carries the
+    // smaller column and shingling runs on every core.
+    val shingledBase = spread(docs.select(col(idCol).as("id"), col(textCol).as("text")))
+      .select(col("id"), wordShingles(col("text"), shingleN).as("shingles"))
     val shingled =
       if (materialize) shingledBase.localCheckpoint(true)
       else shingledBase
@@ -307,52 +317,38 @@ object Dedup {
         graft.functions.NativeExpressions.portableMinHashSigs(col("shingles"), k).as("sig"))
       case Some(b) => minhashSignatures(shingled, k, b)
     }
-    // Materialized ONCE: the banded table is read by the cap's count
-    // aggregate AND both sides of the bucket self-join — unmaterialized,
-    // the signature kernel (k md5 digests per document) re-ran per
-    // consumer (when AQE picks a broadcast build for the self-join there
-    // is no shared exchange to reuse; measured at sf0.1: the duplicate
-    // pipelines were the query's top stages). Narrow (id, band,
-    // band_hash) rows; the capped result below stays LAZY — evaluating
-    // it is a map-side scan + broadcast filter of this checkpoint.
-    val banded0 = signatures
-      .withColumn("banded", lshBands(col("sig"), bands, rows))
-      .select(col("id"), explode(col("banded")).as("b"))
+    // Narrow (id, band, band_hash) rows with ONE consumer, the bucket
+    // grouping — signatures and bands are computed once, in its map stage.
+    val banded = signatures
+      .select(col("id"), explode(lshBands(col("sig"), bands, rows)).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
-    val banded = if (materialize) banded0.localCheckpoint(true) else banded0
-
-    // Cap pathological buckets before pairing (quadratic-blowup guard);
-    // materialized too — the capped table feeds both self-join sides, and
-    // a second materialization of the narrow rows is cheaper than each
-    // side re-running the scan + broadcast anti-filter.
-    val bucketed0 = dropOversizedBuckets(banded, Seq("band", "band_hash"), maxBucket)
-    val bucketed = if (materialize) bucketed0.localCheckpoint(true) else bucketed0
 
     // Candidate pairs ride as bare (id_a, id_b) — shingle arrays re-join
     // AFTER band-dedup, so the wide arrays cross the shuffle once per
     // surviving pair instead of once per band copy.
-    val l = bucketed.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val r = bucketed.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val pairs = l.join(r, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val pairs = bucketPairs(banded, Seq("band", "band_hash"), maxBucket)
 
+    // The score leaves through a one-element explode: the optimizer pushes
+    // a filter on a projected alias below the projection by inlining the
+    // expression (the kernel then ran in the join condition and again in
+    // the projection), but never past a generator's output — so each
+    // candidate is scored once.
     val verified = pairs
       .join(shingled.select(col("id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
       .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .select(col("id_a"), col("id_b"),
+        explode(array(jaccard(col("sh_a"), col("sh_b")))).as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
     if (maxDegree > 0) capPairDegree(verified, maxDegree, "jaccard", ascending = false)
     else verified
   }
 
-  /** Exact Jaccard over two distinct-element arrays: |A∩B| / |A∪B| as a
-    * ratio of exact ints. */
+  /** Exact Jaccard over the distinct elements of two STRING or BIGINT
+    * arrays: |A∩B| / |A∪B| as a ratio of exact ints, one native pass per pair
+    * (NativeExpressions.SetJaccard) — the same double as
+    * `size(array_intersect(a, b)) / size(array_union(a, b))`. */
   def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+    graft.functions.NativeExpressions.setJaccard(a, b)
 
   // ----------------------------------------- incremental (batch-vs-index)
 
@@ -667,6 +663,26 @@ object Dedup {
 
   // -------------------------------------------------- duplicate clusters
 
+  /** The session the connected-components star loop runs on: a
+    * `newSession()` of the caller's (same SparkContext, own SQLConf) that
+    * first takes over every runtime-modifiable SQL conf the caller set,
+    * then turns AQE off (with AQE on, every exchange of every round
+    * materializes as its own scheduling round — the job-count-bound
+    * census family paid ~3× the driver barriers) and pins the shuffle
+    * partition count (the per-round frames are checkpointed, so nothing
+    * downstream re-sizes them). Round 13 set both on the SHARED session
+    * conf and restored them in `finally` — thread-unsafe under
+    * GraftService, which runs queries concurrently on one session; a bare
+    * `newSession()` dropped the caller's runtime confs instead. */
+  private[graft] def loopSession(sess: org.apache.spark.sql.SparkSession,
+      partitions: Int): org.apache.spark.sql.SparkSession = {
+    val loop = sess.newSession()
+    sess.conf.getAll.foreach { case (k, v) => if (sess.conf.isModifiable(k)) loop.conf.set(k, v) }
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    loop
+  }
+
   /** Connected components over a near-dup pair set → duplicate clusters:
     * every member labeled with the cluster's minimum id (the canonical
     * "keep" document). The step every real dedup pipeline needs after
@@ -742,19 +758,9 @@ object Dedup {
 
     val sess = pairs.sparkSession
     // The star loop runs on an ISOLATED session (same SparkContext,
-    // separate SQLConf): it wants AQE off (with AQE on, every exchange of
-    // every round materializes as its own scheduling round — the
-    // job-count-bound census family paid ~3× the driver barriers) and a
-    // pinned partition count (the per-round frames are checkpointed, so
-    // nothing downstream re-sizes them). Round 13 set both on the SHARED
-    // session conf and restored them in `finally` — thread-unsafe under
-    // GraftService, which runs queries concurrently on one session. The
-    // isolated session scopes both confs to this loop; the (u, v) edge
-    // rows cross the session boundary via their materialized RDDs.
-    val loopSess = sess.newSession()
-    val loopParts = math.max(2, edges.rdd.getNumPartitions)
-    loopSess.conf.set("spark.sql.adaptive.enabled", "false")
-    loopSess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    // separate SQLConf) — see [[loopSession]]; the (u, v) edge rows cross
+    // the session boundary via their materialized RDDs.
+    val loopSess = loopSession(sess, math.max(2, edges.rdd.getNumPartitions))
     def toSession(df: DataFrame, s: org.apache.spark.sql.SparkSession): DataFrame =
       s.createDataFrame(df.rdd, df.schema)
     var loopEdges = toSession(edges, loopSess)

@@ -55,22 +55,27 @@ object Similarity {
     * LSH: `tables` independent sign signatures of `planes` Rademacher
     * hyperplanes each; a pair is a candidate if it collides in ANY table
     * (recall 1-(1-s^planes)^tables for angular similarity s), then
-    * verified with the engine-reproducible quantized cosine. Bucket key is
-    * (table, signature) — always an equi-join; `maxBucket` caps degenerate
-    * buckets (the near-zero-vector bucket at 100 TB would otherwise pair
-    * quadratically).
+    * verified with the engine-reproducible quantized cosine. Candidates
+    * come from one capped grouping per bucket key (table, signature)
+    * ([[Dedup.bucketPairs]]) — never a cross join; `maxBucket` drops
+    * degenerate buckets whole (the near-zero-vector bucket at 100 TB would
+    * otherwise pair quadratically).
     *
     * Every stage is integer-exact and hash-derived (see
     * NativeExpressions.RademacherSigs), so the whole candidate set AND the
     * verified pairs are bit-reproducible by the DuckDB oracle — the ANN
-    * scale path is correctness-gated, not just recall-spec'd. */
-  /** `maxDegree > 0` additionally caps each node's verified pairs to its
+    * scale path is correctness-gated, not just recall-spec'd.
+    *
+    * `maxDegree > 0` additionally caps each node's verified pairs to its
     * `maxDegree` highest-cosine neighbors (union semantics,
     * Dedup.capPairDegree): on a dup-heavy corpus the verified pair set is
     * output-quadratic by construction — a cluster of m near-identical
     * vectors yields Θ(m²) pairs however well the buckets are capped — and
     * the per-node cap bounds it at 2·maxDegree·n with the drop rate
-    * measured, not silent (ScaleProbe). */
+    * measured, not silent (ScaleProbe). The plan is always lazy: the
+    * signature table's only consumer is the bucket grouping, so nothing
+    * is materialized and `materialize` (kept for the shared pair-operator
+    * signature) changes nothing. */
   def lshNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, planes: Int = 6, tables: Int = 16,
       cosineThreshold: Double = 0.9, maxBucket: Int = 5000,
@@ -80,30 +85,15 @@ object Similarity {
     // All tables' signatures come from one native kernel pass per vector
     // (tight primitive loops; the higher-order-lambda formulation was
     // ~50× slower), then explode to (table, sig) rows.
-    // eager localCheckpoint (not persist — block lifecycle, the Graph
-    // lesson; measured tradeoff in the Dedup minhash comment): consumed
-    // by the cap scan and both sides of the bucket join
-    val signedBase = Dedup.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
+    val signed = Dedup.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
       .select(col("id"),
         posexplode(graft.functions.NativeExpressions.rademacherSigs(
           col("v"), tables, planes, dim)).as(Seq("t", "sig")))
-    val signed =
-      if (materialize) signedBase.localCheckpoint(true)
-      else signedBase
-    // degenerate-bucket guard: map-side anti-join drop (two-phase exact
-    // count, see Dedup.dropOversizedBuckets); materialized — the capped
-    // table feeds both sides of the bucket self-join
-    val capped0 = Dedup.dropOversizedBuckets(signed, Seq("t", "sig"), maxBucket)
-    val capped = if (materialize) capped0.localCheckpoint(true) else capped0
     // candidate pairs carry ONLY scalar ids: dropDuplicates over array
     // payloads would plan as SortAggregate(first(v)) — a full sort of all
     // candidate pairs with 2 vectors each. Dedup the id pairs hash-side,
     // then fetch vectors back from the corpus (unique ids by contract).
-    val l = capped.select(col("t"), col("sig"), col("id").as("id_a"))
-    val r = capped.select(col("t"), col("sig"), col("id").as("id_b"))
-    val cand = l.join(r, Seq("t", "sig"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val cand = Dedup.bucketPairs(signed, Seq("t", "sig"), maxBucket)
     val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val verified = cand
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))

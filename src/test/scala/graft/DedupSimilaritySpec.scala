@@ -507,4 +507,59 @@ class DedupSimilaritySpec extends SparkSpec {
       (4L, 0L, 0L, 0L)),  // no window fits
       s"got $got")
   }
+
+  test("bucketPairs = capped bucket self-join with id_a < id_b, each pair once") {
+    val rnd = new scala.util.Random(17)
+    // ~25 rows per bucket, with repeated ids inside a bucket
+    val df = (1 to 3000).map(_ => (rnd.nextInt(3), rnd.nextInt(40).toLong, rnd.nextInt(400).toLong))
+      .toDF("band", "band_hash", "id").repartition(4)
+    val keys = Seq("band", "band_hash")
+    for (cap <- Seq(20, 25, 30, 1000)) {
+      val capped = Dedup.dropOversizedBuckets(df, keys, cap)
+      val selfJoin = capped.select(col("band"), col("band_hash"), col("id").as("id_a"))
+        .join(capped.select(col("band"), col("band_hash"), col("id").as("id_b")), keys)
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b")).distinct()
+        .as[(Long, Long)].collect().toSet
+      val grouped = Dedup.bucketPairs(df, keys, cap).as[(Long, Long)].collect()
+      assert(grouped.length == grouped.toSet.size, s"cap=$cap: duplicate pairs")
+      assert(grouped.toSet == selfJoin, s"cap=$cap")
+      if (cap == 1000) assert(selfJoin.size > 1000)
+    }
+  }
+
+  test("bucket cap: an oversized all-null bucket is dropped by both caps and counted alike") {
+    val cap = 5
+    val keys = Seq("band", "band_hash")
+    def bucket(band: Option[Int], hash: Option[Long], ids: Seq[Long]) =
+      ids.map(id => (band.map(Int.box).orNull, hash.map(Long.box).orNull, id))
+    val df = (bucket(None, None, 0L until cap + 3L) ++ bucket(Some(1), Some(7L), Seq(100L, 101L, 102L)))
+      .toDF("band", "band_hash", "id")
+    assert(Dedup.dropOversizedBuckets(df, keys, cap).select("id").as[Long].collect().toSet ==
+      Set(100L, 101L, 102L))
+    assert(Dedup.bucketPairs(df, keys, cap).as[(Long, Long)].collect().toSet ==
+      Set((100L, 101L), (100L, 102L), (101L, 102L)))
+    assert(Dedup.bucketCapStats(df, keys, cap) == ((1L, cap + 3L, cap + 6L)))
+    // within the cap, the null key is a bucket like any other
+    val small = bucket(None, None, Seq(1L, 2L)).toDF("band", "band_hash", "id")
+    assert(Dedup.dropOversizedBuckets(small, keys, cap).count() == 2)
+    assert(Dedup.bucketPairs(small, keys, cap).as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+  }
+
+  test("connected components: the loop session carries the caller's confs; the caller's stay put") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "1234567")
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val loop = Dedup.loopSession(caller, 3)
+    assert(loop.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1234567")
+    assert(loop.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(loop.conf.get("spark.sql.shuffle.partitions") == "3")
+    val before = caller.conf.getAll
+    val pairs = caller.createDataFrame(Seq((1L, 2L), (2L, 3L), (5L, 6L))).toDF("id_a", "id_b")
+    val labels = Dedup.connectedComponents(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    assert(caller.conf.getAll == before)
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
 }

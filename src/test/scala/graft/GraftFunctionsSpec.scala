@@ -553,4 +553,87 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(df.select(graft.functions.NativeExpressions.sigAgreeCount(col("lb"), col("lb")))
       .as[Int].head() == 3)
   }
+  test("lshBands kernel = transform(sequence, xxhash64(slice)) banding bit for bit") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val rnd = new scala.util.Random(11)
+    val random = (1 to 2000).map(_ => Seq.fill(32)(rnd.nextLong() & ((1L << 60) - 1)))
+    // short signatures leave trailing bands empty; null elements are
+    // skipped by the array hash; a null signature hashes every band to 42
+    val edges = Seq(Seq.empty[java.lang.Long], Seq[java.lang.Long](1L, 2L, 3L),
+      Seq.tabulate[java.lang.Long](32)(i => if (i % 5 == 0) null else java.lang.Long.valueOf(i)), null)
+    val rows = random.map(r => org.apache.spark.sql.Row(r.map(java.lang.Long.valueOf))) ++
+      edges.map(org.apache.spark.sql.Row(_))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+      StructType(Seq(StructField("sig", ArrayType(LongType, containsNull = true)))))
+    def expression(sig: Column, bands: Int, rows: Int): Column =
+      transform(sequence(lit(0), lit(bands - 1)), b =>
+        struct(b.as("band"), xxhash64(slice(sig, b * rows + 1, lit(rows))).as("band_hash")))
+    for ((bands, r) <- Seq((8, 4), (4, 8), (16, 2), (3, 5))) {
+      val kernel = df.select(NativeExpressions.lshBands(col("sig"), bands, r).as("b"))
+      val old = df.select(expression(col("sig"), bands, r).as("b"))
+      assert(kernel.schema == old.schema, s"${kernel.schema} vs ${old.schema}")
+      val got = kernel.collect().toSeq
+      assert(got == old.collect().toSeq, s"bands=$bands rows=$r")
+      assert(got.size == rows.size && got.forall(_.getSeq[Any](0).size == bands))
+    }
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq(1, 2)).toDF("s").select(NativeExpressions.lshBands(col("s"), 1, 2)))
+    assert(e.getMessage.contains("ARRAY<BIGINT>"), e.getMessage)
+  }
+
+  test("set Jaccard kernel = size(array_intersect) / size(array_union), repeats and nulls included") {
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+    val rnd = new scala.util.Random(13)
+    def draw(n: Int): Seq[String] = Seq.fill(n)(s"w${rnd.nextInt(12)}")
+    val random = (1 to 500).map(_ => (draw(rnd.nextInt(15)), draw(1 + rnd.nextInt(15))))
+    val edges = Seq(
+      (Seq("a", "a", "b"), Seq("b", "b", "c", "c")),
+      (Seq("a", null, null), Seq(null, "b")),
+      (Seq("x"), Seq.empty[String]),
+      (null, Seq("a")), (Seq("a"), null), (null, null))
+    val schema = StructType(Seq(StructField("a", ArrayType(StringType)), StructField("b", ArrayType(StringType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      (random ++ edges).map { case (a, b) => org.apache.spark.sql.Row(a, b) }, 3), schema)
+    val got = df.select(NativeExpressions.setJaccard(col("a"), col("b"))).collect().map(_.get(0)).toSeq
+    val old = df.select(size(array_intersect(col("a"), col("b"))).cast("double") /
+      size(array_union(col("a"), col("b"))).cast("double")).collect().map(_.get(0)).toSeq
+    assert(got == old)
+    assert(got.takeRight(3).forall(_ == null) && got(random.size) == 1.0 / 3)
+    // two empty sets: 0/0 is undefined — null, where the expression form divides by zero
+    val empty = Seq((Seq.empty[String], Seq.empty[String])).toDF("a", "b")
+    assert(empty.select(NativeExpressions.setJaccard(col("a"), col("b"))).head().isNullAt(0))
+    // BIGINT sets take the same path; mixed element types fail analysis
+    val longs = Seq((Seq(1L, 2L, 2L, 3L), Seq(3L, 4L))).toDF("a", "b")
+    assert(longs.select(NativeExpressions.setJaccard(col("a"), col("b"))).as[Double].head() == 0.25)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1L), Seq("1"))).toDF("a", "b").select(NativeExpressions.setJaccard(col("a"), col("b"))))
+  }
+
+  test("bucketIds: ids at maxBucket rows, null at maxBucket + 1, across partitions") {
+    val cap = 50
+    // spark.range splits each bucket over 4 partitions, so the cap is
+    // decided in the merge of map-side partials, not in one update loop
+    val df = spark.range(0, cap, 1, 4).select(lit("full").as("k"), col("id"))
+      .unionByName(spark.range(100, 101 + cap, 1, 4).select(lit("over").as("k"), col("id")))
+      // a null id still counts toward the cap, but is never listed
+      .unionByName(spark.range(200, 200 + cap - 1, 1, 4).select(lit("nulls").as("k"), col("id")))
+      .unionByName(Seq(("nulls", null.asInstanceOf[java.lang.Long]), ("over2", null),
+        ("over2", null)).toDF("k", "id"))
+      .unionByName(spark.range(300, 300 + cap - 1, 1, 4).select(lit("over2").as("k"), col("id")))
+    val got = df.groupBy(col("k")).agg(NativeExpressions.bucketIds(col("id"), cap).as("ids"))
+      .collect().map(r => r.getString(0) -> Option(r.getSeq[Long](1))).toMap
+    assert(got("full").contains((0L until cap).toSeq))
+    assert(got("over").isEmpty)
+    assert(got("nulls").contains((200L until 200L + cap - 1).toSeq))
+    assert(got("over2").isEmpty)
+    // shuffled input order: the list is still ascending
+    val shuffled = spark.range(0, cap, 1, 4).select(lit(1).as("k"), (lit(cap) - col("id")).as("id"))
+      .repartition(3)
+    val ids = shuffled.groupBy(col("k")).agg(NativeExpressions.bucketIds(col("id"), cap).as("ids"))
+      .head().getSeq[Long](1)
+    assert(ids == (1L to cap.toLong).toSeq)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Seq((1, 2)).toDF("k", "id").groupBy(col("k")).agg(NativeExpressions.bucketIds(col("id"), cap)))
+  }
 }

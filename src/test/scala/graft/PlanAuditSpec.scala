@@ -77,6 +77,31 @@ class PlanAuditSpec extends SparkSpec {
       "degree cap lost the window-group-limit pushdown")
   }
 
+  test("MinHash and hyperplane-LSH candidates: native banding, one capped grouping per bucket") {
+    val plans = dedupLazyPlans
+    for ((q, key) <- Seq("q12_minhash_neardup" -> "band_hash#", "q15b_ann_lsh" -> "sig#")) {
+      val p = plans(q)
+      // banding, signatures and verification are native kernels
+      assert(!p.contains("lambdafunction"), s"$q evaluates an interpreted lambda:\n$p")
+      // the cap lives in the grouping: no hot-key anti-join or broadcast
+      assert(!p.contains("LeftAnti"), s"$q still anti-joins a broadcast of hot buckets:\n$p")
+      assert(p.contains("bucketids("), s"$q lost the bounded bucket grouping:\n$p")
+      val bucketJoins = p.split("\n").filter(l => l.contains("Join") && l.contains(key))
+      assert(bucketJoins.isEmpty, s"$q self-joins on the bucket key: ${bucketJoins.mkString("\n")}")
+    }
+  }
+
+  test("a warm q12 runs at most 10 Spark jobs") {
+    // one rep as the runner times it: the whole result into a noop sink
+    def rep(): Unit = Registry.byName("q12_minhash_neardup").run(spark, sf())
+      .write.format("noop").mode("overwrite").save()
+    rep()
+    val n = jobsOf(rep())
+    // the count aggregate + broadcast anti-join + checkpoints + bucket
+    // self-join form ran 13 jobs per warm q12 on a 2,000-document corpus
+    assert(n <= 10, s"warm q12 ran $n jobs")
+  }
+
   test("near-dup candidate generation never plans a cross product") {
     val plans = dedupLazyPlans
     for (q <- Seq("q12_minhash_neardup", "q13b_simhash_neardup", "q14_ngram_jaccard")) {

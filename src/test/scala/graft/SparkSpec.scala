@@ -33,6 +33,38 @@ trait SparkSpec extends AnyFunSuite {
     assert(left.isEmpty, s"$clue leaked ${left.size} persisted RDD(s): " +
       left.values.take(5).map(_.toString).mkString("; "))
   }
+
+  /** Spark jobs started while `body` runs, streaming micro-batches
+    * excluded. The listener bus delivers events in order, so a marker job
+    * run before and after `body` fences the count: once the marker's
+    * start event arrives, every job started before it has been counted. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val markKey = "graft.test.jobMark"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var mark: (String, java.util.concurrent.CountDownLatch) = null
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val m = Option(e.properties).map(_.getProperty(markKey)).orNull
+        if (m != null) { val cur = mark; if (cur != null && cur._1 == m) cur._2.countDown() }
+        // micro-batches of a stream another suite left running are not ours
+        else if (Option(e.properties).forall(_.getProperty("sql.streaming.queryId") == null))
+          jobs.incrementAndGet()
+      }
+    }
+    def settle(): Unit = {
+      val token = java.util.UUID.randomUUID().toString
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      mark = (token, latch)
+      val sc = spark.sparkContext
+      sc.setLocalProperty(markKey, token)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(markKey, null)
+      assert(latch.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { settle(); val j0 = jobs.get; body; settle(); jobs.get - j0 }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
