@@ -74,12 +74,11 @@ object Similarity {
     * the per-node cap bounds it at 2·maxDegree·n with the drop rate
     * measured, not silent (ScaleProbe). The plan is always lazy: the
     * signature table's only consumer is the bucket grouping, so nothing
-    * is materialized and `materialize` (kept for the shared pair-operator
-    * signature) changes nothing. */
+    * is materialized. */
   def lshNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, planes: Int = 6, tables: Int = 16,
       cosineThreshold: Double = 0.9, maxBucket: Int = 5000,
-      maxDegree: Int = 0, materialize: Boolean = true): DataFrame = {
+      maxDegree: Int = 0): DataFrame = {
     // spread before the CPU-dense signature computation: a single small
     // parquet file otherwise serializes all projection dots onto one task.
     // All tables' signatures come from one native kernel pass per vector

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
 import graft.model._
 
 /** Raw-file directory ingestion — the reference's entry point
@@ -22,6 +23,14 @@ import graft.model._
   */
 object DirectoryIngest {
 
+  /** The `binaryFile` source's fixed schema. A streaming file source
+    * refuses schema inference even for a fixed-schema format, and
+    * learning it from a batch load would list the whole landing zone at
+    * every stream start. */
+  val BinaryFileSchema: StructType = StructType(Seq(
+    StructField("path", StringType), StructField("modificationTime", TimestampType),
+    StructField("length", LongType), StructField("content", BinaryType)))
+
   /** Batch directory scan: (path, modificationTime, length, content). */
   def scan(spark: SparkSession, dir: String, glob: String = "*.txt"): DataFrame =
     spark.read.format("binaryFile")
@@ -34,7 +43,7 @@ object DirectoryIngest {
   def scanStream(spark: SparkSession, dir: String, glob: String = "*.txt"): DataFrame =
     spark.readStream.format("binaryFile")
       .option("pathGlobFilter", glob)
-      .schema(scan(spark, dir, glob).schema)
+      .schema(BinaryFileSchema)
       .load(dir)
 
   /** Scanned files → CREATE events. Record id is the numeric file-name

@@ -582,10 +582,7 @@ object Warc {
     * A4 scheduled re-walk shape, same parser). */
   def scanStream(spark: SparkSession, dir: String, glob: String = "*.warc*"): Dataset[WarcRecord] = {
     import spark.implicits._
-    val schema = spark.read.format("binaryFile").option("pathGlobFilter", glob)
-      .load(dir).schema
-    spark.readStream.format("binaryFile").option("pathGlobFilter", glob)
-      .schema(schema).load(dir)
+    DirectoryIngest.scanStream(spark, dir, glob)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
       .flatMap { case (p, bytes) => parseAll(p, bytes) }
   }

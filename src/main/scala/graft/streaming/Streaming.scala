@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model._
@@ -189,14 +189,7 @@ object Streaming {
       stateTtl: Option[String] = Some("1 hour")): Dataset[(Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rows = k / bands
-    require(bands * rows == k, "k must be divisible by bands")
-    val sig = graft.functions.NativeExpressions.portableMinHashSigs(
-      graft.ops.Dedup.wordShingles(col(textCol), shingleN), k)
-    val banded = docs
-      .select(col(idCol).cast("long").as("id"),
-        explode(graft.ops.Dedup.lshBands(sig, bands, rows)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
+    val banded = lshBanded(docs, idCol, textCol, shingleN, k, bands)
       .as[(Long, Int, Long)]
     val timeoutConf = if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
@@ -214,6 +207,21 @@ object Streaming {
             pairs.iterator
           }
       }
+  }
+
+  /** The banding step both near-dup variants share: the batch kernels'
+    * word shingles → portable MinHash → LSH band hashes, one
+    * (id, carry…, band, band_hash) row per band. */
+  private def lshBanded(docs: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, k: Int, bands: Int, carry: Column*): DataFrame = {
+    val rows = k / bands
+    require(bands * rows == k, "k must be divisible by bands")
+    val sig = graft.functions.NativeExpressions.portableMinHashSigs(
+      graft.ops.Dedup.wordShingles(col(textCol), shingleN), k)
+    docs.select(col(idCol).cast("long").as("id") +: carry :+
+        explode(graft.ops.Dedup.lshBands(sig, bands, rows)).as("b"): _*)
+      .select(col("*"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
+      .drop("b")
   }
 
   /** Shared per-bucket collision step for both near-dup variants: cap the
@@ -251,16 +259,8 @@ object Streaming {
       maxBucket: Int = 1000): Dataset[(Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rows = k / bands
-    require(bands * rows == k, "k must be divisible by bands")
-    val sig = graft.functions.NativeExpressions.portableMinHashSigs(
-      graft.ops.Dedup.wordShingles(col(textCol), shingleN), k)
-    val banded = docs
-      .withWatermark(tsCol, watermark)
-      .select(col(idCol).cast("long").as("id"), col(tsCol).as("ets"),
-        explode(graft.ops.Dedup.lshBands(sig, bands, rows)).as("b"))
-      .select(col("id"), col("ets"), col("b.band").as("band"),
-        col("b.band_hash").as("band_hash"))
+    val banded = lshBanded(docs.withWatermark(tsCol, watermark), idCol, textCol,
+        shingleN, k, bands, col(tsCol).as("ets"))
       .as[(Long, java.sql.Timestamp, Int, Long)]
     banded
       .groupByKey { case (_, _, band, bh) => (band, bh) }
@@ -284,6 +284,76 @@ object Streaming {
       }
   }
 
+  // ------------------------------------------------ batch_run sink chassis
+
+  /** The partition column every incremental sink writes one micro-batch
+    * under, and the one [[foldBatchRuns]] folds. */
+  private val BatchRunCol = "batch_run"
+  private def runPart(id: Any): String = s"$BatchRunCol=$id"
+
+  /** The chassis every incremental sink below runs on — the family's
+    * replay rule, stated once. It is the [[keyedSink]] posture applied
+    * to durable partition trees (the reference gets the same guarantee
+    * from keyed topology writes):
+    *
+    *  - start-up: append mode, `foreachBatch`, and `checkpointDir` as the
+    *    checkpoint location when given;
+    *  - empty triggers: the micro-batch is persisted for the trigger (the
+    *    emptiness probe would otherwise run its whole plan, file parse
+    *    included, a second time) and an empty batch writes nothing — no
+    *    empty partition accumulates per idle trigger;
+    *  - writes ([[BatchRun.write]]): every output goes to its tree's
+    *    `batch_run=<id>` partition with overwrite, so a batch replayed
+    *    after a crash before its checkpoint commit rewrites its own
+    *    partitions instead of appending duplicates;
+    *  - the prior-runs read ([[BatchRun.prior]]): a sink's durable state is
+    *    its tree minus the current run, so a crash AFTER a write still
+    *    reproduces the original output. It is `None` only when no
+    *    committed run exists: an absent tree, or one holding nothing but
+    *    a crashed write's `_temporary` debris (or an empty partitioned
+    *    write's lone `_SUCCESS`). Any other read failure — an unreadable
+    *    part file, a listing error — fails the trigger, so Spark replays
+    *    it from the checkpoint instead of probing an empty state.
+    *
+    * Each sink's Scaladoc states only what differs: whether it defends
+    * replay by partition alone or also by id, and which offline
+    * compactor its tree takes. */
+  private def batchRunSink(input: DataFrame, checkpointDir: Option[String])(
+      body: (DataFrame, BatchRun) => Unit): StreamingQuery = {
+    val writer = input.writeStream
+      .outputMode("append")
+      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
+        val batch = rawBatch.persist()
+        try if (!batch.isEmpty) body(batch, new BatchRun(batch.sparkSession, batchId))
+        finally batch.unpersist()
+      }
+    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
+  }
+
+  /** What a tree without a committed run throws on read: the root is
+    * absent, or it holds no data file to infer a schema from. */
+  private val NoCommittedRun = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+  /** One trigger of a [[batchRunSink]]. */
+  private final class BatchRun(spark: SparkSession, id: Long) {
+    def write(df: DataFrame, root: String, partitionCols: String*): Unit =
+      df.write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(s"$root/${runPart(id)}")
+
+    def prior(root: String): Option[DataFrame] =
+      try Some(spark.read.parquet(root).filter(col(BatchRunCol) =!= id))
+      catch { case e: AnalysisException if NoCommittedRun(e.getCondition) => None }
+
+    /** [[prior]] on `like`'s columns; empty, with `like`'s schema, when
+      * there is none (keeps a probe plan's shape on the first trigger). */
+    def priorOr(root: String, like: DataFrame): DataFrame =
+      prior(root).fold(like.limit(0))(_.select(like.columns.toSeq.map(col): _*))
+
+    /** `df`'s rows whose `keys` no prior run holds. */
+    def unseen(df: DataFrame, root: String, keys: String*): DataFrame =
+      prior(root).fold(df)(p => df.join(p.select(keys.map(col): _*), keys, "left_anti"))
+  }
+
   /** Continuous incremental near-dup maintenance — the production form
     * of [[graft.ops.Dedup.incrementalNearDups]] (q81): every micro-batch
     * of documents is probed against the DURABLE (id, sig) signature
@@ -293,65 +363,27 @@ object Streaming {
     * earlier ones. The text is shingled exactly once per batch: the same
     * materialized signature frame feeds the probe and the index append.
     *
-    * Both writes go to a per-microbatch `batch_run=<id>` partition with
-    * overwrite — a batch replayed after a crash-before-checkpoint
-    * rewrites its own partitions instead of appending duplicates (the
-    * [[keyedSink]] posture), and the index read broadcast-anti-joins
-    * away the replayed batch's own ids so a crash AFTER the index write
-    * still reproduces the original match set instead of matching every
-    * document to itself. Index growth is k·8 B per document (~256 B at
-    * k=32); it is re-read per trigger, so partition-tree compaction is an
-    * offline concern, not a correctness one. */
+    * Replay defense is by id on top of the chassis's prior-runs read:
+    * the index read broadcast-anti-joins away the batch's own ids, so a
+    * replayed batch never matches a document to itself even after
+    * [[compactIndex]] has folded its partition away. Index growth is
+    * k·8 B per document (~256 B at k=32). */
   def incrementalDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, matchesDir: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 8, minMatches: Int = 16,
       maxBucket: Int = 1000, maxMatchesPerProbe: Int = 0,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val bsig = graft.ops.Dedup
-          .minhashIndex(batch, idCol, textCol, shingleN, k)
-          .localCheckpoint(true)
-        // first trigger: no index directory yet — an empty frame with the
-        // signature schema keeps the probe plan identical
-        val index = scala.util.Try(spark.read.parquet(indexDir)).toOption
-          .map(_.select(col("id"), col("sig")))
-          .getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), bsig.schema))
-          .join(broadcast(bsig.select(col("id"))), Seq("id"), "left_anti")
-        graft.ops.Dedup.incrementalNearDupsSigs(bsig, index, k, bands,
-            minMatches, maxBucket, maxMatchesPerProbe)
-          .write.mode("overwrite").parquet(s"$matchesDir/batch_run=$batchId")
-        bsig.write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(docs, checkpointDir) { (batch, run) =>
+      val bsig = graft.ops.Dedup
+        .minhashIndex(batch, idCol, textCol, shingleN, k)
+        .localCheckpoint(true)
+      val index = run.priorOr(indexDir, bsig)
+        .join(broadcast(bsig.select(col("id"))), Seq("id"), "left_anti")
+      run.write(graft.ops.Dedup.incrementalNearDupsSigs(bsig, index, k, bands,
+        minMatches, maxBucket, maxMatchesPerProbe), matchesDir)
+      run.write(bsig, indexDir)
+    }
 
-  /** OFFLINE compaction for the SIGNATURE dedup sinks' durable indexes
-    * ([[incrementalDedupSink]] / [[incrementalImageDedupSink]] — (id,
-    * sig/simhash) rows): folds the accumulated `batch_run=<id>`
-    * partition tree (one dir per micro-batch ever run — thousands after
-    * a month of triggers, and the sink re-reads the tree every trigger)
-    * into ONE partition, keyed by the LOWEST existing batch id — batch
-    * ids only grow from the checkpoint, so the sink can never collide
-    * with it, and the replay defense is untouched because those sinks
-    * anti-join the index by the replayed batch's IDS, never by
-    * partition. NOT for [[incrementalParagraphDedupSink]]'s fingerprint
-    * index: that sink has no id column and defends replay BY PARTITION,
-    * which folding would defeat (fail-fast require below).
-    *
-    * Crash safety: the swap is move-aside → move-in → delete, every
-    * rename checked, and a crash between the renames is repaired by the
-    * recovery prologue on the next invocation (the move-aside dir is
-    * restored before anything else happens). Rows are deduplicated by
-    * id on the way through, so a crash after move-in but before the
-    * redundant-partition deletes only leaves duplicates the next
-    * compaction removes. Run it while the sink is stopped (a
-    * maintenance window) — readers racing the swap can observe a
-    * partially-deleted tree. Returns the number of partitions folded
-    * (0 = nothing to do). */
   /** The ONE batch_run fold choreography every offline compactor here
     * runs (the signature, frontier, ANN, link-graph, and postings
     * compactors all delegate): recovery prologue — a prior crash between
@@ -376,7 +408,7 @@ object Streaming {
       require(fs.rename(src, dst), s"$name: rename $src -> $dst failed")
     def glob(pattern: String) = // some Hadoop FS impls return null, not empty
       Option(fs.globStatus(p(pattern))).getOrElse(Array.empty)
-    val runDirs = glob("batch_run=*").map(_.getPath.getName)
+    val runDirs = glob(runPart("*")).map(_.getPath.getName)
     glob(".compact_old_*").foreach { st =>
       val orig = st.getPath.getName.stripPrefix(".compact_old_")
       if (runDirs.contains(orig)) fs.delete(st.getPath, true) // redundant copy
@@ -384,30 +416,47 @@ object Streaming {
     }
     val df = spark.read.parquet(root)
     guard(df)
-    val runs = df.select(col("batch_run").cast("long")).distinct()
+    val runs = df.select(col(BatchRunCol).cast("long")).distinct()
       .as[Long].collect().sorted
     if (runs.length <= 1) return 0
     val lo = runs.head
     val staging = p(".compact_staging")
-    val w0 = fold(df).write.mode("overwrite")
-    val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
-    w.parquet(staging.toString)
-    val loName = s"batch_run=$lo"
+    fold(df).write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staging.toString)
+    val loName = runPart(lo)
     move(p(loName), p(s".compact_old_$loName"))
     move(staging, p(loName))
     fs.delete(p(s".compact_old_$loName"), true)
-    runs.tail.foreach(r => fs.delete(p(s"batch_run=$r"), true))
+    runs.tail.foreach(r => fs.delete(p(runPart(r)), true))
     runs.length
   }
 
+  /** OFFLINE compaction for the SIGNATURE dedup sinks' durable indexes
+    * ([[incrementalDedupSink]] / [[incrementalImageDedupSink]] — (id,
+    * sig/simhash) rows): folds the accumulated `batch_run=<id>`
+    * partition tree (one dir per micro-batch ever run — thousands after
+    * a month of triggers, and the sink re-reads the tree every trigger)
+    * into ONE partition, keyed by the LOWEST existing batch id — batch
+    * ids only grow from the checkpoint, so the sink can never collide
+    * with it, and the replay defense is untouched because those sinks
+    * anti-join the index by the replayed batch's IDS, not only by
+    * partition. NOT for [[incrementalParagraphDedupSink]]'s fingerprint
+    * index: that sink has no id column and defends replay BY PARTITION,
+    * which folding would defeat (fail-fast require below).
+    *
+    * Crash safety is [[foldBatchRuns]]': rows are deduplicated by id on
+    * the way through, so a crash after move-in but before the redundant-
+    * partition deletes only leaves duplicates the next compaction
+    * removes. Run it while the sink is stopped (a maintenance window) —
+    * readers racing the swap can observe a partially-deleted tree.
+    * Returns the number of partitions folded (0 = nothing to do). */
   def compactIndex(spark: SparkSession, indexDir: String): Int =
     foldBatchRuns(spark, indexDir, "compactIndex",
       guard = df => require(df.columns.contains("id"),
         "compactIndex is for the (id, sig) signature indexes; the paragraph " +
           "sink's fingerprint index defends replay by partition and must not " +
           "be folded"),
-      fold = df => df.select(df.columns.filterNot(_ == "batch_run").map(col): _*)
-        .dropDuplicates("id"),
+      fold = _.drop(BatchRunCol).dropDuplicates("id"),
       partitionCols = Nil)
 
   /** The daily-crawl production loop END-TO-END: newly-landed WARC
@@ -433,15 +482,21 @@ object Streaming {
       warcTypes: Seq[String] = Seq("response"),
       shingleN: Int = 3, k: Int = 32, bands: Int = 8, minMatches: Int = 16,
       maxBucket: Int = 1000, maxMatchesPerProbe: Int = 0,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val docs = graft.sources.Warc.scanStream(spark, crawlDir, glob).toDF()
+      checkpointDir: Option[String] = None): StreamingQuery =
+    incrementalDedupSink(crawlDocs(spark, crawlDir, glob, idExpr, warcTypes),
+      "doc_id", "text", indexDir, matchesDir,
+      shingleN, k, bands, minMatches, maxBucket, maxMatchesPerProbe,
+      checkpointDir)
+
+  /** The crawl sinks' document selection: newly-landed WARC records,
+    * corrupt ones and non-`warcTypes` ones gated out before identity
+    * assignment, as (doc_id, text). */
+  private def crawlDocs(spark: SparkSession, crawlDir: String, glob: String,
+      idExpr: Column, warcTypes: Seq[String]): DataFrame =
+    graft.sources.Warc.scanStream(spark, crawlDir, glob).toDF()
       .filter(col("error").isNull && col("warc_type").isin(warcTypes: _*))
       .select(idExpr.cast("long").as("doc_id"),
         col("payload").cast("string").as("text"))
-    incrementalDedupSink(docs, "doc_id", "text", indexDir, matchesDir,
-      shingleN, k, bands, minMatches, maxBucket, maxMatchesPerProbe,
-      checkpointDir)
-  }
 
   /** INCREMENTAL POSTINGS-INDEX maintenance — the serving-index twin of
     * [[incrementalDedupSink]]: each micro-batch of newly-ingested
@@ -461,52 +516,33 @@ object Streaming {
     * through one code path and scores stay bit-identical to a
     * from-scratch build over the same documents).
     *
-    * Replay/crash semantics are the [[keyedSink]] posture: both writes
-    * go to the batch's own `batch_run=<id>` partition with overwrite, so
-    * a batch replayed after a crash-before-checkpoint rewrites its own
-    * shard instead of double-counting it. Ingest must be append-only on
-    * doc_id (the register path's idempotency gate upstream — a
-    * re-UPSERTED document would otherwise post twice under two
-    * batch_runs; content updates go through a rebuild, as in every
+    * No prior-runs read: the chassis's partition overwrite alone keeps a
+    * replayed batch from double-counting its shard, and the empty-
+    * trigger rule keeps a NULL-`sdl` stats row out of the tree. Ingest
+    * must be append-only on doc_id (the register path's idempotency gate
+    * upstream — a re-UPSERTED document would otherwise post twice under
+    * two batch_runs; content updates go through a rebuild, as in every
     * segment-merge search engine). Per-trigger cost is one shuffle of
     * the BATCH's postings — the durable index is never read, let alone
-    * rewritten; shard-count growth is an offline compaction concern
-    * exactly like the dedup sinks' (one dir per trigger). */
+    * rewritten; shard-count growth is [[compactPostingsIndex]]'s
+    * concern. */
   def incrementalPostingsSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, nBuckets: Int = 64,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        // an empty micro-batch (a trigger that found no new files) must
-        // not write shards: its stats row would carry sum(tf) = NULL
-        // (n_docs=0, sdl=NULL) — serving survives only because every
-        // current stats reader SUMs (nulls ignored), but a non-summing
-        // future reader would trip on the NULL; skipping is also free
-        // (no empty postings dirs accumulating per idle trigger).
-        // persist for the trigger: the isEmpty probe would otherwise
-        // execute the full micro-batch plan (file parse included) once,
-        // and the write a second time
-        val batch = rawBatch.persist()
-        try if (!batch.isEmpty) {
-          val post = batch
-            .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-            .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
-              explode(col("__toks")).as("term"))
-            .groupBy(col("term"), col("doc_id"), col("dl"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
-            .repartition(col("bucket")) // contiguous writers per bucket dir
-            .localCheckpoint(true) // two consumers: shard write + stats
-          post.write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$indexDir/postings/batch_run=$batchId")
-          post.agg(count_distinct(col("doc_id")).as("n_docs"),
-              coalesce(sum(col("tf")), lit(0L)).as("sdl"))
-            .write.mode("overwrite").parquet(s"$indexDir/stats/batch_run=$batchId")
-        } finally batch.unpersist()
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(docs, checkpointDir) { (batch, run) =>
+      val post = batch
+        .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
+        .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
+          explode(col("__toks")).as("term"))
+        .groupBy(col("term"), col("doc_id"), col("dl"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
+        .repartition(col("bucket")) // contiguous writers per bucket dir
+        .localCheckpoint(true) // two consumers: shard write + stats
+      run.write(post, s"$indexDir/postings", "bucket")
+      run.write(post.agg(count_distinct(col("doc_id")).as("n_docs"),
+        coalesce(sum(col("tf")), lit(0L)).as("sdl")), s"$indexDir/stats")
+    }
 
   /** OFFLINE compaction for [[incrementalPostingsSink]]'s partition
     * trees: folds the accumulated per-trigger postings shards (every
@@ -537,8 +573,7 @@ object Streaming {
       foldBatchRuns(spark, root, "compactPostingsIndex",
         guard = _ => (),
         fold = { df =>
-          val dataCols = df.columns.filterNot(_ == "batch_run").map(col)
-          val folded = agg(df.select(dataCols: _*))
+          val folded = agg(df.drop(BatchRunCol))
           if (dedupKeys.nonEmpty) folded.dropDuplicates(dedupKeys) else folded
         },
         partitionCols = partitionCols)
@@ -570,14 +605,9 @@ object Streaming {
       idExpr: Column = xxhash64(col("record_id")),
       warcTypes: Seq[String] = Seq("response"),
       nBuckets: Int = 64,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val docs = graft.sources.Warc.scanStream(spark, crawlDir, glob).toDF()
-      .filter(col("error").isNull && col("warc_type").isin(warcTypes: _*))
-      .select(idExpr.cast("long").as("doc_id"),
-        col("payload").cast("string").as("text"))
-    incrementalPostingsSink(docs, "doc_id", "text", indexDir, nBuckets,
-      checkpointDir)
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    incrementalPostingsSink(crawlDocs(spark, crawlDir, glob, idExpr, warcTypes),
+      "doc_id", "text", indexDir, nBuckets, checkpointDir)
 
   /** Streaming CRAWL FRONTIER — the seen-URL gate every continuous
     * crawler runs ahead of fetch scheduling (the URL-level companion of
@@ -600,54 +630,36 @@ object Streaming {
     * single 64-bit key would birthday-collide around 2³² URLs and
     * silently drop the colliding page forever, while 128 bits is
     * collision-free for any real crawl). Crash-replay defense is the
-    * PARAGRAPH sink's, by PARTITION, not by id: identities here are
-    * content-derived, so a RE-CRAWLED url in a later batch shares its
-    * identity with the index row that must gate it — an id anti-join
-    * (the signature sinks' defense) would strip exactly that evidence.
-    * Instead each batch writes `batch_run=<id>` overwrite partitions and
-    * the index read excludes the CURRENT batch's partition, so a crash
-    * after the index write still reproduces the original frontier.
-    * Consequently NOT [[compactIndex]]-compatible (folding partitions
-    * would defeat the defense — the hash columns are deliberately not
-    * named `id` so its fail-fast refuses); use [[compactFrontierIndex]]
-    * in a maintenance window: only after a clean stop with the
-    * checkpoint committed past every written partition. */
+    * chassis's prior-runs read alone, by PARTITION, not by id:
+    * identities here are content-derived, so a RE-CRAWLED url in a later
+    * batch shares its identity with the index row that must gate it — an
+    * id anti-join (the signature sinks' defense) would strip exactly
+    * that evidence. Consequently NOT [[compactIndex]]-compatible
+    * (folding partitions would defeat the defense — the hash columns
+    * are deliberately not named `id` so its fail-fast refuses); use
+    * [[compactFrontierIndex]] in a maintenance window: only after a
+    * clean stop with the checkpoint committed past every written
+    * partition. */
   def urlFrontierSink(urls: DataFrame, urlCol: String, indexDir: String,
       frontierDir: String, checkpointDir: Option[String] = None): StreamingQuery = {
     import graft.ops.UrlOps
-    val writer = urls.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // one canonicalization pass; eager — feeds probe AND index append
-        val bcanon = batch
-          .select(UrlOps.canonicalizeUrl(col(urlCol)).as("canon"))
-          .groupBy(col("canon")).agg(count(lit(1)).as("n_in_batch"))
-          .select(col("canon"), col("n_in_batch"),
-            xxhash64(col("canon")).as("h1"),
-            xxhash64(col("canon"), lit(1)).as("h2"),
-            UrlOps.registrableDomain(UrlOps.urlHost(col("canon"))).as("domain"))
-          .localCheckpoint(true)
-        val seen = scala.util.Try(spark.read.parquet(indexDir)).toOption
-          // partition-scoped replay defense: a crashed-before-checkpoint
-          // batch already wrote its own partition — exclude it (partition
-          // pruning, not a scan filter), never anti-join by identity: a
-          // re-crawled url SHARES its identity with the row gating it
-          .map(_.filter(col("batch_run") =!= batchId).select(col("h1"), col("h2")))
-          .getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            bcanon.select(col("h1"), col("h2")).schema))
-        // only the NEW pages extend the index: a re-crawled URL (the
-        // common case in a steady-state crawl) must not regrow the index
-        // with a duplicate identity every time it reappears
-        val fresh = bcanon.join(seen, Seq("h1", "h2"), "left_anti")
-          .localCheckpoint(true)
-        fresh.select(col("canon"), col("domain"), col("n_in_batch"))
-          .write.mode("overwrite").parquet(s"$frontierDir/batch_run=$batchId")
-        fresh.select(col("h1"), col("h2"))
-          .write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
+    batchRunSink(urls, checkpointDir) { (batch, run) =>
+      // one canonicalization pass; eager — feeds probe AND index append
+      val bcanon = batch
+        .select(UrlOps.canonicalizeUrl(col(urlCol)).as("canon"))
+        .groupBy(col("canon")).agg(count(lit(1)).as("n_in_batch"))
+        .select(col("canon"), col("n_in_batch"),
+          xxhash64(col("canon")).as("h1"),
+          xxhash64(col("canon"), lit(1)).as("h2"),
+          UrlOps.registrableDomain(UrlOps.urlHost(col("canon"))).as("domain"))
+        .localCheckpoint(true)
+      // only the NEW pages extend the index: a re-crawled URL (the
+      // common case in a steady-state crawl) must not regrow the index
+      // with a duplicate identity every time it reappears
+      val fresh = run.unseen(bcanon, indexDir, "h1", "h2").localCheckpoint(true)
+      run.write(fresh.select(col("canon"), col("domain"), col("n_in_batch")), frontierDir)
+      run.write(fresh.select(col("h1"), col("h2")), indexDir)
+    }
   }
 
   /** OFFLINE compaction for [[urlFrontierSink]]'s seen-URL index — the
@@ -671,7 +683,7 @@ object Streaming {
   def compactFrontierIndex(spark: SparkSession, indexDir: String): Int =
     foldBatchRuns(spark, indexDir, "compactFrontierIndex",
       guard = df => require(
-        df.columns.filterNot(_ == "batch_run").sorted.sameElements(Array("h1", "h2")),
+        df.drop(BatchRunCol).columns.sorted.sameElements(Array("h1", "h2")),
         "compactFrontierIndex is for the frontier's (h1, h2) identity index; " +
           "id-keyed signature indexes fold with compactIndex"),
       fold = _.select(col("h1"), col("h2")).dropDuplicates("h1", "h2"),
@@ -707,50 +719,41 @@ object Streaming {
     * via the q110 banding, and then appended to the index so later
     * batches see earlier images. Corrupt images isolate per record (the
     * A19 posture — a failed decode contributes no hash and no match).
-    * Crash-replay defense is identical to the text sink: per-batch
-    * `batch_run=<id>` overwrite partitions + broadcast anti-join of the
-    * replayed batch's own ids out of the index read. Matches carry
+    * Replay defense is the text sink's: by id on top of the prior-runs
+    * read, so [[compactIndex]] folds this index too. Matches carry
     * src = 'corpus' (durable index hit) or 'batch' (within-batch, the
     * LATER id probes the earlier). */
   def incrementalImageDedupSink(media: DataFrame, idCol: String,
       contentCol: String, indexDir: String, matchesDir: String,
       maxHamming: Int = 7, maxBucket: Int = 5000, maxMatchesPerProbe: Int = 0,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val bsig = batch.select(col(idCol).cast("long"), col(contentCol))
-          .as[(Long, Array[Byte])]
-          .mapPartitions(_.flatMap { case (id, bytes) =>
-            scala.util.Try(graft.multimodal.Multimodal.ImageCodec.aHash64(bytes))
-              .toOption.map { case (hi, lo, _) => (id, (hi << 32) | lo) }
-          })
-          .toDF("id", "simhash")
-          .localCheckpoint(true) // probe + in-batch pairs + index append
-        val index = scala.util.Try(spark.read.parquet(indexDir)).toOption
-          .map(_.select(col("id"), col("simhash")))
-          .getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), bsig.schema))
-          .join(broadcast(bsig.select(col("id"))), Seq("id"), "left_anti")
-        val corpus = graft.ops.Dedup.hammingProbe(bsig, index,
-            maxHamming, maxBucket, maxMatchesPerProbe)
-          .withColumn("src", lit("corpus"))
-        // the caller's per-probe bound must hold for the UNION: uncapped
-        // in-batch pairs would reintroduce the quadratic identical-hash
-        // blowup on a duplicate-heavy batch even when the corpus probe
-        // is capped
-        val inBatch = graft.ops.Dedup.simhashNearDupPairs(bsig, maxHamming,
-            maxBucket, maxDegree = maxMatchesPerProbe)
-          .select(col("id_b").as("batch_id"), col("id_a").as("match_id"),
-            col("hamming"), lit("batch").as("src"))
-        corpus.unionByName(inBatch)
-          .write.mode("overwrite").parquet(s"$matchesDir/batch_run=$batchId")
-        bsig.write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(media, checkpointDir) { (batch, run) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val bsig = batch.select(col(idCol).cast("long"), col(contentCol))
+        .as[(Long, Array[Byte])]
+        .mapPartitions(_.flatMap { case (id, bytes) =>
+          scala.util.Try(graft.multimodal.Multimodal.ImageCodec.aHash64(bytes))
+            .toOption.map { case (hi, lo, _) => (id, (hi << 32) | lo) }
+        })
+        .toDF("id", "simhash")
+        .localCheckpoint(true) // probe + in-batch pairs + index append
+      val index = run.priorOr(indexDir, bsig)
+        .join(broadcast(bsig.select(col("id"))), Seq("id"), "left_anti")
+      val corpus = graft.ops.Dedup.hammingProbe(bsig, index,
+          maxHamming, maxBucket, maxMatchesPerProbe)
+        .withColumn("src", lit("corpus"))
+      // the caller's per-probe bound must hold for the UNION: uncapped
+      // in-batch pairs would reintroduce the quadratic identical-hash
+      // blowup on a duplicate-heavy batch even when the corpus probe
+      // is capped
+      val inBatch = graft.ops.Dedup.simhashNearDupPairs(bsig, maxHamming,
+          maxBucket, maxDegree = maxMatchesPerProbe)
+        .select(col("id_b").as("batch_id"), col("id_a").as("match_id"),
+          col("hamming"), lit("batch").as("src"))
+      run.write(corpus.unionByName(inBatch), matchesDir)
+      run.write(bsig, indexDir)
+    }
 
   /** Continuous CCNet-style paragraph dedup — the streaming form of
     * [[graft.ops.Dedup.paragraphDedup]] (q87), on the
@@ -762,58 +765,42 @@ object Streaming {
     * appends the surviving fingerprints to the index.
     *
     * The index holds ONLY (h1, h2) — 16 B per distinct paragraph ever
-    * seen, never the text. Crash-replay defense mirrors the near-dup
-    * sink: writes go to `batch_run=<id>` partitions with overwrite, and
-    * the index read filters out the replayed batch's own partition (by
-    * the partition column) so a crash after the index write still
-    * reproduces the original survivor set instead of dropping every
-    * paragraph as "seen". */
+    * seen, never the text. Replay defense is the prior-runs read alone,
+    * by partition (there is no id column), so [[compactIndex]] refuses
+    * this index. */
   def incrementalParagraphDedupSink(docs: DataFrame, idCol: String,
       textCol: String, indexDir: String, cleanDir: String, paraLen: Int = 7,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        val paras = batch
-          .withColumn("__ws", split(col(textCol), " "))
-          .select(col(idCol).as("id"), posexplode(expr(
-            s"transform(sequence(0, cast(ceil(size(__ws)/$paraLen.0) as int) - 1)," +
-              s" i -> concat_ws(' ', slice(__ws, i*$paraLen + 1, $paraLen)))"))
-            .as(Seq("idx", "para")))
-          .withColumn("h1", xxhash64(col("para")))
-          .withColumn("h2", xxhash64(lit("graft::para2"), col("para")))
-          .localCheckpoint(true) // one materialization: window + index append
-        val seen = scala.util.Try(spark.read.parquet(indexDir)).toOption
-          .map(_.filter(col("batch_run") =!= batchId).select(col("h1"), col("h2")))
-          .getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            paras.select(col("h1"), col("h2")).schema))
-        val firstWin = Window.partitionBy(col("h1"), col("h2"))
-          .orderBy(col("id").asc, col("idx").asc)
-        val survivors = paras
-          .withColumn("__rn", row_number().over(firstWin))
-          .filter(col("__rn") === 1)
-          .join(seen, Seq("h1", "h2"), "left_anti")
-          .localCheckpoint(true) // two consumers: clean docs + index append
-        val clean = survivors
-          .groupBy(col("id"))
-          .agg(count(lit(1)).as("n_kept"),
-            concat_ws(" ", transform(
-              array_sort(collect_list(struct(col("idx"), col("para")))),
-              p => p.getField("para"))).as("clean_text"))
-        val counts = paras.groupBy(col("id")).agg(count(lit(1)).as("n_paras"))
-        counts.join(clean, Seq("id"), "left")
-          .select(col("id"), col("n_paras"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            coalesce(col("clean_text"), lit("")).as("clean_text"))
-          .write.mode("overwrite").parquet(s"$cleanDir/batch_run=$batchId")
-        survivors.select(col("h1"), col("h2"))
-          .write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(docs, checkpointDir) { (batch, run) =>
+      import org.apache.spark.sql.expressions.Window
+      val paras = batch
+        .withColumn("__ws", split(col(textCol), " "))
+        .select(col(idCol).as("id"), posexplode(expr(
+          s"transform(sequence(0, cast(ceil(size(__ws)/$paraLen.0) as int) - 1)," +
+            s" i -> concat_ws(' ', slice(__ws, i*$paraLen + 1, $paraLen)))"))
+          .as(Seq("idx", "para")))
+        .withColumn("h1", xxhash64(col("para")))
+        .withColumn("h2", xxhash64(lit("graft::para2"), col("para")))
+        .localCheckpoint(true) // one materialization: window + index append
+      val firstWin = Window.partitionBy(col("h1"), col("h2"))
+        .orderBy(col("id").asc, col("idx").asc)
+      val survivors = run.unseen(
+          paras.withColumn("__rn", row_number().over(firstWin)).filter(col("__rn") === 1),
+          indexDir, "h1", "h2")
+        .localCheckpoint(true) // two consumers: clean docs + index append
+      val clean = survivors
+        .groupBy(col("id"))
+        .agg(count(lit(1)).as("n_kept"),
+          concat_ws(" ", transform(
+            array_sort(collect_list(struct(col("idx"), col("para")))),
+            p => p.getField("para"))).as("clean_text"))
+      val counts = paras.groupBy(col("id")).agg(count(lit(1)).as("n_paras"))
+      run.write(counts.join(clean, Seq("id"), "left")
+        .select(col("id"), col("n_paras"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          coalesce(col("clean_text"), lit("")).as("clean_text")), cleanDir)
+      run.write(survivors.select(col("h1"), col("h2")), indexDir)
+    }
 
   /** STREAMING CURATION DECISION LOG — the Dolma-attributes twin of the
     * batch q160 for the crawl loop: every landed document gets exactly
@@ -842,18 +829,14 @@ object Streaming {
     * is [[incrementalParagraphDedupSink]]'s job; compose by feeding this
     * sink that sink's clean output when the deployment wants both.
     *
-    * Replay/crash defense is the family posture: both writes go to the
-    * batch's own `batch_run=<id>` partition with overwrite, and the
-    * digest-index read excludes the replaying batch's own partition. An
-    * at-least-once upstream re-delivering an ALREADY-LOGGED id in a
+    * Replay defense is the prior-runs read of both trees, by partition.
+    * An at-least-once upstream re-delivering an ALREADY-LOGGED id in a
     * later batch is dropped silently on BOTH legs: a re-delivered
     * canonical id is caught because its digest's durable canon IS itself
     * (the fresh leg's `__canon_seen.isNull` guard), and a re-delivered
     * duplicate id — one whose durable canon is ANOTHER document, so the
     * digest index alone cannot recognize it — is caught by anti-joining
-    * the exact-dup leg against the ids already in the decision log
-    * (read excluding the replaying batch's own partition, so a crash
-    * between the two writes still reproduces the original rows). The
+    * the exact-dup leg against the ids already in the decision log. The
     * same id twice in ONE batch collapses before adjudication
     * (`dropDuplicates(id)`). Together: exactly one durable verdict row
     * per document, under any at-least-once delivery or crash replay.
@@ -865,90 +848,74 @@ object Streaming {
     * prunes to the `id` column alone (8 B per document ever logged). */
   def incrementalCurationLogSink(docs: DataFrame, idCol: String,
       textCol: String, modelDir: String, digestIndexDir: String,
-      logDir: String, checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val batch = rawBatch.persist()
-        try if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.expressions.Window
-          val rows = batch
-            .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-            .dropDuplicates("id") // same id twice in one trigger = one decision
-            .withColumn("digest", md5(col("text").cast("binary")))
-            .withColumn("__canon_batch",
-              min(col("id")).over(Window.partitionBy(col("digest"))))
-            .localCheckpoint(true) // consumers: dup split + scoring + index append
-          val seen = scala.util.Try(spark.read.parquet(digestIndexDir)).toOption
-            .map(_.filter(col("batch_run") =!= batchId)
-              .select(col("digest"), col("canon").as("__canon_seen")))
-            .getOrElse(spark.range(0).select(
-              lit("").as("digest"), lit(0L).as("__canon_seen")).limit(0))
-          val adjudicated = rows.join(seen, Seq("digest"), "left")
-            .withColumn("__canon", coalesce(col("__canon_seen"), col("__canon_batch")))
-            .localCheckpoint(true) // dup rows + fresh rows + index append
-          // the exact-dup leg's re-delivery guard: a duplicate id that
-          // was ALREADY logged (its durable canon is another doc, so the
-          // digest index can't flag it) must not get a second verdict
-          // row — anti-join against the logged ids, excluding the
-          // replaying batch's own partition (crash-replay posture)
-          val logged = scala.util.Try(spark.read.parquet(logDir)).toOption
-            .map(_.filter(col("batch_run") =!= batchId).select(col("id")))
-            .getOrElse(spark.range(0).select(col("id")))
-          val exact = adjudicated.filter(col("__canon") =!= col("id"))
-            .join(logged, Seq("id"), "left_anti")
-            .select(col("id"), lit("exact_dup").as("verdict"),
-              col("__canon").as("canon_doc"), lit(-1).as("bucket"))
-          // canon == id AND never seen durably: the decision to make.
-          // canon == id AND seen durably: a re-delivery of an
-          // already-logged id — dropped (see scaladoc).
-          val fresh = adjudicated
-            .filter(col("__canon") === col("id") && col("__canon_seen").isNull)
-          val uni = broadcast(spark.read.parquet(s"$modelDir/uni"))
-          val bgT = broadcast(spark.read.parquet(s"$modelDir/bg"))
-          val thr = broadcast(spark.read.parquet(s"$modelDir/thr"))
-          val scored = fresh
-            .withColumn("__ws", split(col("text"), " "))
-            .filter(size(col("__ws")) >= 2)
-            .select(col("id"), explode(expr(
-              "transform(sequence(0, size(__ws) - 2)," +
-                " i -> struct(element_at(__ws, i + 1) AS w1," +
-                " concat(element_at(__ws, i + 1), ' ', element_at(__ws, i + 2)) AS bg))"))
-              .as("__b"))
-            .select(col("id"), col("__b.w1").as("w1"), col("__b.bg").as("bg"))
-            .join(bgT, Seq("bg"), "left")
-            .join(uni, Seq("w1"), "left")
-            .withColumn("bits", when(col("c12").isNull, lit(20L))
-              .otherwise((length(bin(col("c1"))) - length(bin(col("c12")))).cast("long")))
-            .groupBy(col("id"))
-            .agg(sum(col("bits")).as("bits_total"), count(lit(1)).as("n_bigrams"))
-            .withColumn("avg_micro", expr("bits_total * 1000000 div n_bigrams"))
-            .crossJoin(thr)
-            .select(col("id"),
-              when(col("avg_micro") <= col("t2"), "kept")
-                .otherwise("low_quality").as("verdict"),
-              col("id").as("canon_doc"),
-              when(col("avg_micro") <= col("t1"), 1)
-                .when(col("avg_micro") <= col("t2"), 2).otherwise(3).as("bucket"))
-          val noEvidence = fresh
-            .filter(size(split(col("text"), " ")) < 2)
-            .select(col("id"), lit("no_evidence").as("verdict"),
-              col("id").as("canon_doc"), lit(-1).as("bucket"))
-          exact.unionByName(scored).unionByName(noEvidence)
-            .select(col("id"), col("verdict"), col("canon_doc"),
-              col("bucket").cast("int").as("bucket"))
-            .write.mode("overwrite").parquet(s"$logDir/batch_run=$batchId")
-          fresh.select(col("digest"), col("id").as("canon"))
-            .write.mode("overwrite").parquet(s"$digestIndexDir/batch_run=$batchId")
-        } finally batch.unpersist()
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      logDir: String, checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(docs, checkpointDir) { (batch, run) =>
+      val spark = batch.sparkSession
+      import org.apache.spark.sql.expressions.Window
+      val rows = batch
+        .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+        .dropDuplicates("id") // same id twice in one trigger = one decision
+        .withColumn("digest", md5(col("text").cast("binary")))
+        .withColumn("__canon_batch",
+          min(col("id")).over(Window.partitionBy(col("digest"))))
+        .localCheckpoint(true) // consumers: dup split + scoring + index append
+      val adjudicated = run.prior(digestIndexDir)
+        .fold(rows.withColumn("__canon_seen", lit(null).cast("long"))) { seen =>
+          rows.join(seen.select(col("digest"), col("canon").as("__canon_seen")),
+            Seq("digest"), "left")
+        }
+        .withColumn("__canon", coalesce(col("__canon_seen"), col("__canon_batch")))
+        .localCheckpoint(true) // dup rows + fresh rows + index append
+      // the exact-dup leg's re-delivery guard: a duplicate id that
+      // was ALREADY logged (its durable canon is another doc, so the
+      // digest index can't flag it) must not get a second verdict row
+      val exact = run.unseen(adjudicated.filter(col("__canon") =!= col("id")), logDir, "id")
+        .select(col("id"), lit("exact_dup").as("verdict"),
+          col("__canon").as("canon_doc"), lit(-1).as("bucket"))
+      // canon == id AND never seen durably: the decision to make.
+      // canon == id AND seen durably: a re-delivery of an
+      // already-logged id — dropped (see scaladoc).
+      val fresh = adjudicated
+        .filter(col("__canon") === col("id") && col("__canon_seen").isNull)
+      val uni = broadcast(spark.read.parquet(s"$modelDir/uni"))
+      val bgT = broadcast(spark.read.parquet(s"$modelDir/bg"))
+      val thr = broadcast(spark.read.parquet(s"$modelDir/thr"))
+      val scored = fresh
+        .withColumn("__ws", split(col("text"), " "))
+        .filter(size(col("__ws")) >= 2)
+        .select(col("id"), explode(expr(
+          "transform(sequence(0, size(__ws) - 2)," +
+            " i -> struct(element_at(__ws, i + 1) AS w1," +
+            " concat(element_at(__ws, i + 1), ' ', element_at(__ws, i + 2)) AS bg))"))
+          .as("__b"))
+        .select(col("id"), col("__b.w1").as("w1"), col("__b.bg").as("bg"))
+        .join(bgT, Seq("bg"), "left")
+        .join(uni, Seq("w1"), "left")
+        .withColumn("bits", when(col("c12").isNull, lit(20L))
+          .otherwise((length(bin(col("c1"))) - length(bin(col("c12")))).cast("long")))
+        .groupBy(col("id"))
+        .agg(sum(col("bits")).as("bits_total"), count(lit(1)).as("n_bigrams"))
+        .withColumn("avg_micro", expr("bits_total * 1000000 div n_bigrams"))
+        .crossJoin(thr)
+        .select(col("id"),
+          when(col("avg_micro") <= col("t2"), "kept")
+            .otherwise("low_quality").as("verdict"),
+          col("id").as("canon_doc"),
+          when(col("avg_micro") <= col("t1"), 1)
+            .when(col("avg_micro") <= col("t2"), 2).otherwise(3).as("bucket"))
+      val noEvidence = fresh
+        .filter(size(split(col("text"), " ")) < 2)
+        .select(col("id"), lit("no_evidence").as("verdict"),
+          col("id").as("canon_doc"), lit(-1).as("bucket"))
+      run.write(exact.unionByName(scored).unionByName(noEvidence)
+        .select(col("id"), col("verdict"), col("canon_doc"),
+          col("bucket").cast("int").as("bucket")), logDir)
+      run.write(fresh.select(col("digest"), col("id").as("canon")), digestIndexDir)
+    }
 
   /** The served curation log / digest index (batch_run stripped). */
   def curationLogRows(spark: SparkSession, logDir: String): DataFrame =
-    spark.read.parquet(logDir).drop("batch_run")
+    spark.read.parquet(logDir).drop(BatchRunCol)
 
   /** OFFLINE compaction for [[incrementalCurationLogSink]]'s digest
     * index: digests are unique across batch_runs by construction (later
@@ -977,14 +944,9 @@ object Streaming {
       glob: String = "*.warc*",
       idExpr: Column = xxhash64(col("record_id")),
       warcTypes: Seq[String] = Seq("response"),
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val docs = graft.sources.Warc.scanStream(spark, crawlDir, glob).toDF()
-      .filter(col("error").isNull && col("warc_type").isin(warcTypes: _*))
-      .select(idExpr.cast("long").as("doc_id"),
-        col("payload").cast("string").as("text"))
-    incrementalCurationLogSink(docs, "doc_id", "text", modelDir,
-      digestIndexDir, logDir, checkpointDir)
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    incrementalCurationLogSink(crawlDocs(spark, crawlDir, glob, idExpr, warcTypes),
+      "doc_id", "text", modelDir, digestIndexDir, logDir, checkpointDir)
 
   /** INCREMENTAL ANN (IVF) index sink — the embedding-side standing
     * index, completing the durable-index family (near-dup signatures,
@@ -1003,51 +965,32 @@ object Streaming {
     * sink concern). The per-batch read of the k-row centroid table is
     * negligible against the assignment it parameterizes.
     *
-    * Replay/duplicate defense happens AT WRITE TIME, because serving
+    * Duplicate defense happens AT WRITE TIME, because serving
     * correctness depends on id uniqueness (a duplicate id would occupy
-    * two rank slots in every probe): arrivals anti-join the existing
-    * index's id column (narrow scan — ids only, the dedup sinks' probe
-    * cost profile) EXCLUDING the current batch_run, so a
-    * checkpoint-replayed batch rewrites its own partition with identical
-    * content (idempotent) while an at-least-once upstream re-sending an
-    * id in a LATER batch is dropped before it lands. Index growth is
-    * (8·dim + 16) B/vector — bounded, content never stored. */
+    * two rank slots in every probe): arrivals anti-join the ids of the
+    * prior runs (narrow scan — ids only), so an at-least-once upstream
+    * re-sending an id in a LATER batch is dropped before it lands, while
+    * a replayed batch still rewrites its own partition identically.
+    * Index growth is (8·dim + 16) B/vector — bounded, content never
+    * stored; [[compactAnnIndex]] folds the tree. */
   def incrementalAnnSink(vecs: DataFrame, idCol: String, vecCol: String,
       centroidsDir: String, indexDir: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        // empty trigger → no empty batch_run dirs accumulating. persist
-        // for the trigger: the isEmpty probe would otherwise run the
-        // whole micro-batch plan once and the assign/write a second time
-        val batch = rawBatch.persist()
-        try if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val cents = spark.read.parquet(centroidsDir)
-          // dropDuplicates FIRST: two landed files carrying the same id
-          // can share one micro-batch, and the anti-join below only
-          // defends against OTHER batch_runs — without this, both
-          // in-batch copies land and the id occupies two rank slots in
-          // every probe until a compaction window
-          val assigned = graft.ops.Similarity.ivfExactAssign(
-            batch.select(col(idCol).as("id"),
-              graft.ops.Similarity.quantize(col(vecCol)).as("qv"))
-              .dropDuplicates("id"),
-            cents)
-          // first trigger: no index tree yet — nothing to defend against
-          val fresh = scala.util.Try(spark.read.parquet(indexDir)).toOption
-            .map(idx => assigned.join(
-              idx.filter(col("batch_run") =!= batchId).select(col("id")),
-              Seq("id"), "left_anti"))
-            .getOrElse(assigned)
-          fresh.repartition(col("cell")) // contiguous writers per cell dir
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$indexDir/batch_run=$batchId")
-        } finally batch.unpersist()
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(vecs, checkpointDir) { (batch, run) =>
+      // dropDuplicates FIRST: two landed files carrying the same id
+      // can share one micro-batch, and the anti-join below only
+      // defends against OTHER batch_runs — without this, both
+      // in-batch copies land and the id occupies two rank slots in
+      // every probe until a compaction window
+      val assigned = graft.ops.Similarity.ivfExactAssign(
+        batch.select(col(idCol).as("id"),
+          graft.ops.Similarity.quantize(col(vecCol)).as("qv"))
+          .dropDuplicates("id"),
+        batch.sparkSession.read.parquet(centroidsDir))
+      run.write(run.unseen(assigned, indexDir, "id")
+        .repartition(col("cell")), // contiguous writers per cell dir
+        indexDir, "cell")
+    }
 
   /** The streamed ANN index as a serving-ready (cell, id, qv) frame —
     * feed straight into [[graft.ops.Similarity.ivfExactTopK]]/
@@ -1083,34 +1026,19 @@ object Streaming {
     * in-batch-distinct edge set under `batch_run=<id>` — the durable
     * web-graph the authority/anchor operators (q211/q212/q215) read.
     *
-    * Replay/duplicate posture is DIFFERENT from the id-keyed sinks, and
-    * deliberately lighter: edges carry no per-row identity and every
-    * downstream consumer is set-semantied — [[graft.ops.Graph]]'s
-    * pageRankDirected/hits/undirected all `.distinct()` their edge
-    * input — so a re-fetched page landing the same (src, dst) twice is
-    * CORRECTNESS-neutral and costs only storage until
-    * [[compactLinkGraph]] folds the tree (dropDuplicates(src, dst)).
-    * A checkpoint-replayed batch rewrites its own partition
-    * (overwrite, idempotent). No read-side defense needed = no
-    * per-trigger index scan, the cheapest sink in the family. */
+    * No prior-runs read, deliberately: edges carry no per-row identity
+    * and every downstream consumer is set-semantied —
+    * [[graft.ops.Graph]]'s pageRankDirected/hits/undirected all
+    * `.distinct()` their edge input — so a re-fetched page landing the
+    * same (src, dst) twice is CORRECTNESS-neutral and costs only storage
+    * until [[compactLinkGraph]] folds the tree (dropDuplicates(src,
+    * dst)). No per-trigger index scan: the cheapest sink in the family. */
   def crawlLinkGraphSink(spark: SparkSession, crawlDir: String,
-      indexDir: String, checkpointDir: Option[String] = None): StreamingQuery = {
-    val edges = graft.sources.Warc.htmlLinkEdges(
-      graft.sources.Warc.scanStream(spark, crawlDir).toDF())
-    val writer = edges.writeStream
-      .outputMode("append")
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        // persist for the trigger: without it the isEmpty probe executes
-        // the full WARC parse + link extraction once and the distinct
-        // write re-executes it (two crawl parses per trigger)
-        val batch = rawBatch.persist()
-        try if (!batch.isEmpty)
-          batch.select(col("src"), col("dst")).distinct()
-            .write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-        finally batch.unpersist()
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      indexDir: String, checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(graft.sources.Warc.htmlLinkEdges(
+        graft.sources.Warc.scanStream(spark, crawlDir).toDF()), checkpointDir) {
+      (batch, run) => run.write(batch.select(col("src"), col("dst")).distinct(), indexDir)
+    }
 
   /** The streamed link graph as an edge frame for
     * [[graft.ops.Graph]] — batch_run stays out of the schema. Consumers
@@ -1167,92 +1095,68 @@ object Streaming {
     *
     * Identity/replay posture is the ANN sink's: media_id parses from the
     * landed file name (`<id>.<ext>`, the landing-zone convention),
-    * in-batch dropDuplicates catches two copies sharing one trigger, a
-    * write-time anti-join against the OTHER batch_runs drops at-least-
-    * once re-deliveries before they land, and a checkpoint-replayed
-    * batch rewrites its own partition (overwrite, idempotent). Corrupt
+    * in-batch dropDuplicates catches two copies sharing one trigger, and
+    * a write-time anti-join against the prior runs' media ids drops
+    * at-least-once re-deliveries before they land. Corrupt
     * payloads isolate as `media_error` rows (A19) — a rotted PNG costs
     * one error row, never the trigger. Unreadable magic → 'unknown'
     * modality error row, so nothing lands silently. */
   def incrementalMediaFeaturesSink(spark: SparkSession, landingDir: String,
       featuresDir: String, checkpointDir: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
-    // binaryFile's fixed schema, spelled out: the streaming source
-    // refuses schema inference even for fixed-schema formats
-    val binSchema = StructType(Seq(
-      StructField("path", StringType), StructField("modificationTime", TimestampType),
-      StructField("length", LongType), StructField("content", BinaryType)))
-    val writer = spark.readStream.format("binaryFile").schema(binSchema).load(landingDir)
+    val landed = spark.readStream.format("binaryFile")
+      .schema(graft.sources.DirectoryIngest.BinaryFileSchema).load(landingDir)
       .select(
         regexp_extract(col("path"), "([0-9]+)\\.[a-z]+$", 1).cast("long").as("media_id"),
         col("content"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        // persist for the trigger: isEmpty + the per-modality filters
-        // would otherwise re-read every landed payload per branch
-        val batch = rawBatch.persist()
-        try if (!batch.isEmpty) {
-          val inBatch = batch.dropDuplicates("media_id")
-          // write-time dup defense against OTHER batch_runs (ids only
-          // ever grow; first trigger has no tree yet)
-          val fresh0 = scala.util.Try(spark.read.parquet(featuresDir)).toOption
-            .map(idx => inBatch.join(
-              idx.filter(col("batch_run") =!= batchId)
-                .select(col("media_id")).distinct(),
-              Seq("media_id"), "left_anti"))
-            .getOrElse(inBatch)
-          val fresh = fresh0.localCheckpoint(true) // 4 modality branches read it
-          def magic(bytes: Column, m: String) =
-            bytes.substr(1, m.length) === lit(m.getBytes("ISO-8859-1"))
-          val png = magic(col("content"), "PNG")
-          val grav = magic(col("content"), "GRAV")
-          val wav = magic(col("content"), "RIFF")
-          val images = toMediaFeatureSchema(
-            fresh.filter(png).select(col("media_id"), col("content"))
-              .as[(Long, Array[Byte])]
-              .mapPartitions(_.map { case (id, bytes) =>
-                scala.util.Try(
-                  graft.multimodal.Multimodal.ImageCodec.allStats(bytes)).toOption match {
-                  case Some(st) => (id, Option(st), Option.empty[String])
-                  case None =>
-                    (id, Option.empty[graft.multimodal.ImageStatsRow], Option("bad-png"))
-                }
-              })
-              .select(col("_1").as("media_id"), col("_2.*"),
-                col("_3").as("media_error")),
-            "image")
-          val videos = toMediaFeatureSchema(
-            graft.multimodal.VideoCodec.frameFeatures(
-              fresh.filter(grav).select(col("media_id"), col("content")))
-              .withColumnRenamed("video_error", "media_error"),
-            "video")
-          val qc = graft.functions.NativeExpressions.wavQcStats(col("content"), 1000, 50)
-          val audios = toMediaFeatureSchema(
-            graft.multimodal.AudioWav.parsed(
-              fresh.filter(wav).select(col("media_id"), col("content")))
-              .withColumn("q", qc)
-              .select(col("media_id"), col("sample_rate"), col("n_samples"),
-                col("duration_ms"), col("sum_abs"), col("peak_abs"),
-                col("q.n_clipped").as("n_clipped"),
-                col("q.longest_silence").as("longest_silence"),
-                col("q.energy").as("energy"),
-                graft.multimodal.AudioWav.deltaFingerprint().as("fp"),
-                col("wav_error").as("media_error")),
-            "audio")
-          val unknown = toMediaFeatureSchema(
-            fresh.filter(!png && !grav && !wav)
-              .select(col("media_id"),
-                lit("unknown-magic").as("media_error")),
-            "unknown")
-          images.unionByName(videos).unionByName(audios).unionByName(unknown)
-            .repartition(col("modality"))
-            .write.mode("overwrite").partitionBy("modality")
-            .parquet(s"$featuresDir/batch_run=$batchId")
-        } finally batch.unpersist()
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
+    batchRunSink(landed, checkpointDir) { (batch, run) =>
+      val fresh = run.unseen(batch.dropDuplicates("media_id"), featuresDir, "media_id")
+        .localCheckpoint(true) // 4 modality branches read it
+      def magic(bytes: Column, m: String) =
+        bytes.substr(1, m.length) === lit(m.getBytes("ISO-8859-1"))
+      val png = magic(col("content"), "PNG")
+      val grav = magic(col("content"), "GRAV")
+      val wav = magic(col("content"), "RIFF")
+      val images = toMediaFeatureSchema(
+        fresh.filter(png).select(col("media_id"), col("content"))
+          .as[(Long, Array[Byte])]
+          .mapPartitions(_.map { case (id, bytes) =>
+            scala.util.Try(
+              graft.multimodal.Multimodal.ImageCodec.allStats(bytes)).toOption match {
+              case Some(st) => (id, Option(st), Option.empty[String])
+              case None =>
+                (id, Option.empty[graft.multimodal.ImageStatsRow], Option("bad-png"))
+            }
+          })
+          .select(col("_1").as("media_id"), col("_2.*"),
+            col("_3").as("media_error")),
+        "image")
+      val videos = toMediaFeatureSchema(
+        graft.multimodal.VideoCodec.frameFeatures(
+          fresh.filter(grav).select(col("media_id"), col("content")))
+          .withColumnRenamed("video_error", "media_error"),
+        "video")
+      val qc = graft.functions.NativeExpressions.wavQcStats(col("content"), 1000, 50)
+      val audios = toMediaFeatureSchema(
+        graft.multimodal.AudioWav.parsed(
+          fresh.filter(wav).select(col("media_id"), col("content")))
+          .withColumn("q", qc)
+          .select(col("media_id"), col("sample_rate"), col("n_samples"),
+            col("duration_ms"), col("sum_abs"), col("peak_abs"),
+            col("q.n_clipped").as("n_clipped"),
+            col("q.longest_silence").as("longest_silence"),
+            col("q.energy").as("energy"),
+            graft.multimodal.AudioWav.deltaFingerprint().as("fp"),
+            col("wav_error").as("media_error")),
+        "audio")
+      val unknown = toMediaFeatureSchema(
+        fresh.filter(!png && !grav && !wav)
+          .select(col("media_id"),
+            lit("unknown-magic").as("media_error")),
+        "unknown")
+      run.write(images.unionByName(videos).unionByName(audios).unionByName(unknown)
+        .repartition(col("modality")), featuresDir, "modality")
+    }
   }
 
   /** The streamed media feature table as a serving frame — batch_run
@@ -1260,7 +1164,7 @@ object Streaming {
     * built it); modality survives as the partition column consumers
     * prune on. */
   def mediaFeatureRows(spark: SparkSession, featuresDir: String): DataFrame =
-    spark.read.parquet(featuresDir).drop("batch_run")
+    spark.read.parquet(featuresDir).drop(BatchRunCol)
 
   /** OFFLINE compaction for [[incrementalMediaFeaturesSink]]'s tree:
     * folds every batch_run into ONE while PRESERVING the modality
@@ -1278,25 +1182,19 @@ object Streaming {
   /** Continuously-maintained KMV distinct sketches
     * ([[graft.ops.Sketches.kmvSketch]], q99) — the streaming form falls
     * out of MERGEABILITY: each micro-batch writes its own per-set k-min
-    * PARTIAL to a `batch_run=<id>` partition (overwrite → replay
-    * re-writes the same partial, idempotent by construction — no
-    * read-filter defense needed, unlike the dedup sinks, because
-    * k-min-of-k-mins is associative/commutative/idempotent), and
+    * PARTIAL to its `batch_run=<id>` partition (no prior-runs read
+    * needed, unlike the dedup sinks, because k-min-of-k-mins is
+    * associative/commutative/idempotent), and
     * [[mergedKmv]] folds all partials back to the exact same sketch a
     * batch build over the union would produce. State per set is k·8 B
     * per batch partition; compaction (re-merging old partitions) is an
     * offline concern, not a correctness one. */
   def kmvSketchSink(rows: DataFrame, setCol: String, valueCol: String,
       indexDir: String, k: Int = 128,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.kmvSketch(batch, setCol, col(valueCol), k)
-          .write.mode("overwrite").parquet(s"$indexDir/batch_run=$batchId")
-      }
-    checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    batchRunSink(rows, checkpointDir) { (batch, run) =>
+      run.write(graft.ops.Sketches.kmvSketch(batch, setCol, col(valueCol), k), indexDir)
+    }
 
   /** Merge every stored KMV partial back into one sketch per set —
     * k-min over the unioned k-mins, identical to a batch build over all

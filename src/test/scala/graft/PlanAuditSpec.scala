@@ -60,8 +60,7 @@ class PlanAuditSpec extends SparkSpec {
         blockCol = "source", shingleN = 2, threshold = 0.05, maxDf = 1000,
         materialize = false),
       "q15b_ann_lsh" -> Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
-        dim = 64, planes = 8, tables = 12, cosineThreshold = 0.3, maxDegree = 4,
-        materialize = false)
+        dim = 64, planes = 8, tables = 12, cosineThreshold = 0.3, maxDegree = 4)
     ).map { case (k, df) => k -> df.queryExecution.executedPlan.toString }
   }
 

@@ -1895,4 +1895,107 @@ class StreamingSpec extends SparkSpec {
     val after = feats().drop("modality").collect().map(_.toString).sorted
     assert(before.sameElements(after), "compaction changed what serves")
   }
+
+  test("binaryFile stream sources take the format's fixed schema, not a start-up listing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_binschema").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "1.txt"), "x".getBytes("UTF-8"))
+    val listed = spark.read.format("binaryFile").load(dir).schema
+    assert(graft.sources.DirectoryIngest.BinaryFileSchema == listed)
+    assert(graft.sources.DirectoryIngest.scanStream(spark, dir).schema == listed)
+  }
+
+  test("batch_run sinks: an unreadable committed prior run fails the trigger instead of probing an empty index") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft_rotten_run").toString
+    val input = MemoryStream[(Long, String)]
+    val q = Streaming.incrementalDedupSink(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      s"$root/index", s"$root/matches")
+    try {
+      input.addData((1L, "alpha beta gamma delta epsilon zeta"))
+      q.processAllAvailable()
+      // the committed run rots: its only part file becomes garbage
+      val run0 = new java.io.File(s"$root/index/batch_run=0")
+      run0.listFiles().foreach(_.delete())
+      java.nio.file.Files.write(run0.toPath.resolve("part-00000.snappy.parquet"),
+        "not a parquet file".getBytes("UTF-8"))
+      input.addData((2L, "alpha beta gamma delta epsilon zeta"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("batch_run=0")), s"failure names the rotten run: $msgs")
+      assert(!new java.io.File(s"$root/matches/batch_run=1").exists(),
+        "the failed trigger must not write matches probed against no index")
+    } finally q.stop()
+  }
+
+  test("batch_run sinks: a first trigger's crash debris does not stop the restart reproducing its matches") {
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta epsilon zeta"),
+      (3L, "totally different words entirely over here"))
+    def run(root: String): Set[(Long, Long, Int, String)] = {
+      val srcDir = s"$root/src"
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(srcDir)
+      val q = Streaming.incrementalDedupSink(
+        spark.readStream.schema(spark.read.parquet(srcDir).schema).parquet(srcDir),
+        "doc_id", "text", s"$root/index", s"$root/matches",
+        checkpointDir = Some(s"$root/ckpt"))
+      try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(s"$root/matches")
+        .select("batch_id", "match_id", "matches", "src")
+        .as[(Long, Long, Int, String)].collect().toSet
+    }
+    val clean = run(java.nio.file.Files.createTempDirectory("graft_clean_run").toString)
+    assert(clean.contains((2L, 1L, 32, "batch")), s"reference run: $clean")
+    // what a first trigger killed mid-write leaves: only uncommitted task
+    // output under _temporary, in both trees
+    val crashed = java.nio.file.Files.createTempDirectory("graft_debris_run").toString
+    Seq("index", "matches").foreach { tree =>
+      val attempt = java.nio.file.Paths.get(crashed, tree, "batch_run=0", "_temporary",
+        "0", "_temporary", "attempt_0")
+      java.nio.file.Files.createDirectories(attempt)
+      java.nio.file.Files.write(attempt.resolve("part-00000.snappy.parquet"),
+        "half-written".getBytes("UTF-8"))
+    }
+    assert(run(crashed) == clean)
+  }
+
+  test("batch_run sinks: a trigger with no good documents writes no partition in any crawl sink") {
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_trigger").toString
+    val crawl = s"$root/crawl"; new java.io.File(crawl).mkdirs()
+    def rec(id: Long, text: String, wtype: String = "response",
+        version: String = "WARC/1.0"): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      graft.sources.Warc.writeRecord(bos, wtype, s"<urn:crawl:$id>",
+        s"http://crawl.test/doc/$id", "2026-01-01T00:00:00Z", "text/plain",
+        text.getBytes("UTF-8"), version)
+      bos.toByteArray
+    }
+    def seg(name: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(crawl, name), bytes)
+    seg("seg0.warc", rec(1L, "alpha beta gamma delta epsilon zeta") ++
+      rec(2L, "totally different words entirely over here"))
+    val qs = Seq(
+      Streaming.crawlDedupSink(spark, crawl, s"$root/dedup/index", s"$root/dedup/matches",
+        checkpointDir = Some(s"$root/ckpt/dedup")),
+      Streaming.crawlPostingsSink(spark, crawl, s"$root/postings",
+        checkpointDir = Some(s"$root/ckpt/postings")),
+      Streaming.crawlFrontierSink(spark, crawl, s"$root/frontier/index",
+        s"$root/frontier/pages", checkpointDir = Some(s"$root/ckpt/frontier")))
+    try {
+      qs.foreach(_.processAllAvailable())
+      // a segment of nothing but a warcinfo and a corrupt record
+      seg("seg1.warc", rec(0L, "crawl metadata", wtype = "warcinfo") ++
+        rec(66L, "broken words", version = "WARC/9.9"))
+      qs.foreach(_.processAllAvailable())
+      qs.foreach(q => assert(q.recentProgress.map(_.batchId).max == 1,
+        s"${q.name}: the second segment must run a trigger"))
+      Seq("dedup/index", "dedup/matches", "postings/postings", "postings/stats",
+          "frontier/index", "frontier/pages").foreach { tree =>
+        val runs = new java.io.File(s"$root/$tree").list().filter(_.startsWith("batch_run="))
+        assert(runs.toSeq == Seq("batch_run=0"), s"$tree: ${runs.toSeq}")
+      }
+    } finally qs.foreach(_.stop())
+  }
 }
