@@ -13,8 +13,33 @@ import org.apache.spark.sql.SparkSession
   *     as a nanosecond Long keeps event-time arithmetic exact (no µs
   *     truncation), which the sessionization and interval-join operators
   *     rely on for determinism.
+  *   - Generated code is compiled once per JVM, not once per query run.
+  *     `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]] sizes
+  *     Spark's JVM-wide LRU cache of compiled classes. Its default of 100
+  *     is smaller than one cold q151 (133 compiles at sf0.001), and the
+  *     curate loop q8 + q12 + q151 compiles about 185, so at 100 every
+  *     warm pass recompiled all of them (179 per pass). 1024 holds the
+  *     loop and the three serving routes (lexical 89, hybrid 51, `/similar`
+  *     about 10 classes on a cold corpus) several times over; a class
+  *     compiled for the driver and again for the tasks takes two entries.
+  *     A retained class costs about 22 KB of heap (the curate loop's 192
+  *     classes held 4.1 MB on the benchmark's 2,000-document corpus), so a
+  *     full cache holds about 22 MB. The conf is static: Spark reads it
+  *     once per JVM, when its codegen cache is first initialized, from
+  *     the session active on the compiling thread ([[initCodegenCache]]).
+  *     [[ensureRuntimeConfs]] cannot apply it to a session built
+  *     elsewhere, which keeps 100.
+  *   - `spark.sql.codegen.useIdInClassName` = false: every whole-stage
+  *     class is named `GeneratedIterator`, not after its stage id. AQE
+  *     numbers the stages of a query in the order they are planned, which
+  *     varies from run to run, so identical code under another number
+  *     missed the cache; the stage id stays in the generated source's
+  *     comment.
   */
 object GraftSession {
+
+  /** Generated classes the JVM-wide codegen cache keeps (see the object doc). */
+  val CodegenCacheEntries = 1024
 
   /** Apply the standard graft tuning to an existing builder. */
   def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
@@ -34,6 +59,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
       // Straggler mitigation for CLUSTER deployments: speculative
@@ -57,17 +84,35 @@ object GraftSession {
       shufflePartitions = math.max(4, threads)
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    initCodegenCache(s)
     s
+  }
+
+  /** Spark sizes the codegen cache from `SQLConf.get` on the thread that
+    * first compiles generated code, and a thread with no active session
+    * reads Spark's defaults there: when a JVM's first compile was an
+    * encoder built on an HTTP serving thread, the tuned session kept 100
+    * entries. Initializing the cache here, with `spark` active, gives it
+    * the session's size; once the JVM has compiled, it changes nothing. */
+  def initCodegenCache(spark: SparkSession): Unit = {
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try Class.forName("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
+    finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
   }
 
   /** Defensive runtime re-apply for sessions we did not build (the driver
     * may hand `SparkEntry.queries` a vanilla session). All of these confs
-    * are runtime-settable SQLConfs.
+    * are runtime-settable SQLConfs; the static codegen cache size of
+    * [[tune]] is not among them.
     */
   def ensureRuntimeConfs(spark: SparkSession): SparkSession = {
+    initCodegenCache(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // see tune(): one class name for every whole-stage codegen stage
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     // see tune(): lets AQE right-size cached-plan output partitioning
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.AtomicLong
 
@@ -9,7 +10,11 @@ import java.util.concurrent.atomic.AtomicLong
   * stages, tasks, cumulative task time and shuffle bytes — from a
   * SparkListener. A query whose wall time is 2 s on 2 s of task time
   * across 40 stages is paying scheduling rounds, not compute; one with
-  * 60 s of task time in 3 stages needs a plan change. Usage:
+  * 60 s of task time in 3 stages needs a plan change. `compiles` counts
+  * the generated classes Janino compiled during the rep: a warm rep reuses
+  * the first rep's classes from the codegen cache, so anything above 0
+  * there is a cache that thrashes or code that differs between reps.
+  * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   SPARK_GRAFT_ONLY=q47_pagerank,q212_authority_quality \
   *   tools/run_graft.sh graft.Profile
@@ -17,7 +22,13 @@ import java.util.concurrent.atomic.AtomicLong
 object Profile {
   private class Counters extends SparkListener {
     val jobs, stages, tasks, taskMs, gcMs, shufR, shufW = new AtomicLong
-    def reset(): Unit = Seq(jobs, stages, tasks, taskMs, gcMs, shufR, shufW).foreach(_.set(0))
+    // the compile histogram is JVM-wide, so the counter is its change
+    private var compiles0 = 0L
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    def reset(): Unit = {
+      Seq(jobs, stages, tasks, taskMs, gcMs, shufR, shufW).foreach(_.set(0))
+      compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -41,7 +52,7 @@ object Profile {
       val t = Runner.time(spark, q.name) { c.reset(); q.run(spark, Runner.sfDir) }
       println(t.error.fold(
         f"${q.name}%-28s wall=${t.warm}%7.2fs jobs=${c.jobs.get}%3d stages=${c.stages.get}%4d " +
-        f"tasks=${c.tasks.get}%5d taskTime=${c.taskMs.get / 1000.0}%8.2fs " +
+        f"tasks=${c.tasks.get}%5d compiles=${c.compiles}%4d taskTime=${c.taskMs.get / 1000.0}%8.2fs " +
         f"gc=${c.gcMs.get / 1000.0}%5.2fs shufR=${c.shufR.get / 1e6}%9.1fMB " +
         f"shufW=${c.shufW.get / 1e6}%9.1fMB (first=${t.cold}%7.2fs)"
       )(e => f"${q.name}%-28s FAILED $e"))

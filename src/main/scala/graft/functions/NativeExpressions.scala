@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -1402,10 +1404,40 @@ object NativeExpressions {
     math.min(prev(m), inf)
   }
 
+  /** A per-request value bound into a plan as data. Codegen inlines a
+    * primitive `Literal` into the generated Java source, so requests that
+    * differ only in an id or a cut-off each compile their own classes, and
+    * the codegen cache keeps every one of them. This leaf reads its value
+    * from the stage's reference array instead, so the source, and the
+    * compiled class, is the same for every value. It is not foldable, or
+    * constant folding would turn it back into a literal; rules that need a
+    * literal (parquet pushdown, the window group limit) therefore do not
+    * see it — [[longIn]] keeps the pushdown of an id lookup. */
+  case class LongParam(value: Long) extends LeafExpression {
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("param", java.lang.Long.valueOf(value))
+      ev.copy(code = code"long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+    }
+  }
+
   // ------------------------------------------------------- Column bridges
 
   def simhash64(hashes: Column): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(hashes)))
+
+  /** `value` as data, not as inlined code — see LongParam. */
+  def longParam(value: Long): Column = ColumnBridge.column(LongParam(value))
+
+  /** `c = value` for an id lookup: planned as a one-element `InSet`, which
+    * parquet still receives as a pushed `In` filter and whose generated
+    * code reads the set from the reference array, so every id shares one
+    * compiled class (`=== value` would inline the id). */
+  def longIn(c: Column, value: Long): Column =
+    ColumnBridge.column(InSet(ColumnBridge.expression(c), Set[Any](value)))
 
   def rademacherSigs(vec: Column, tables: Int, planes: Int, dim: Int): Column =
     ColumnBridge.column(RademacherSigs(ColumnBridge.expression(vec), tables, planes, dim))

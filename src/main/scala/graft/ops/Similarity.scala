@@ -359,6 +359,19 @@ object Similarity {
   def ivfExactTopKMany(index: DataFrame, centroids: DataFrame,
       queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    ivfCandidates(index, centroids, queries, nProbe)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("id").asc)))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("id"), col("cosine"), col("rank"))
+  }
+
+  /** The candidates of [[ivfExactTopKMany]] before its ranking: every
+    * vector in each query's `nProbe` nearest cells, with its exact
+    * cosine to the query, as (cell, id, qv, query_id, q, cosine). */
+  def ivfCandidates(index: DataFrame, centroids: DataFrame,
+      queries: DataFrame, nProbe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val probed = queries.crossJoin(broadcast(centroids))
       .withColumn("sim", graft.functions.NativeExpressions.longCosine(col("cv"), col("q")))
       .withColumn("__rk", row_number().over(
@@ -367,10 +380,6 @@ object Similarity {
       .select(col("query_id"), col("q"), col("cell"))
     index.join(broadcast(probed), Seq("cell"))
       .withColumn("cosine", graft.functions.NativeExpressions.longCosine(col("qv"), col("q")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("id"), col("cosine"), col("rank"))
   }
 
   /** HARD-NEGATIVE mining for contrastive training (the SimCSE/DPR data

@@ -99,10 +99,4 @@ object Consolidate {
       .agg(new EventFold().toColumn.name("record"))
       .map(_._2)
   }
-
-  /** Reference-shaped sequential fold (for tests / property checks):
-    * events sorted by (timestamp, seq) then folded left. The Aggregator
-    * must agree with this on any permutation. */
-  def sequentialFold(events: Seq[DataRecordEvent]): DataRecord =
-    finishState(events.sortBy(e => (e.timestamp, e.seq)).foldLeft(FoldState.zero)(add))
 }

@@ -2429,7 +2429,9 @@ object SimilarityQueries {
     val queries = Seq((0L, probeQv)).toDF("query_id", "q")
     val top = Similarity.ivfExactTopKMany(index, cents, queries,
       k = listN + 1, nProbe = nProbe)
-    val sem = excludeId.fold(top)(id => top.filter(col("id") =!= id))
+    // the probe id as data: a new probe compiles no new classes
+    val sem = excludeId.fold(top)(id =>
+      top.filter(col("id") =!= graft.functions.NativeExpressions.longParam(id)))
       .withColumn("sem_rank", row_number().over(
         Window.orderBy(col("cosine").desc, col("id").asc)).cast("long"))
       .filter(col("sem_rank") <= listN)

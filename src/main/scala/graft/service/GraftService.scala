@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.functions.NativeExpressions
 import graft.model.DocumentRepresentation
 import graft.sources.Tables
 import graft.streaming.Streaming
@@ -132,7 +133,7 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
     ps.get("probeDoc").flatMap(s => scala.util.Try {
       val id = s.toLong
       val rows = embeddings
-        .filter(col("vec_id") === id)
+        .filter(NativeExpressions.longIn(col("vec_id"), id))
         .select(graft.ops.Similarity.quantize(col("embedding")))
         .collect()
       if (rows.isEmpty) None
@@ -365,13 +366,18 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
                   case None => (handle.ivfIndex, handle.centroids)
                 }
                 val queries = Seq((0L, qv)).toDF("query_id", "q")
-                // +1 headroom when the probe's own row will be excluded
-                val top = graft.ops.Similarity.ivfExactTopKMany(
-                  index, cents, queries, k = k + excl.size, nProbe = nProbe)
-                val page = excl.fold(top)(id => top.filter(col("id") =!= id))
-                  .withColumn("rank", row_number().over(
-                    Window.orderBy(col("cosine").desc, col("id").asc)).cast("long"))
-                  .filter(col("rank") <= k)
+                // ivfExactTopKMany's ranking, with the request's values kept
+                // out of generated code so a new probe or `k` compiles no
+                // classes: the probe id is a bound parameter, and `k` is a
+                // top-k limit (per-partition top-k, then one merge), which
+                // runs as plain JVM code. `nprobe` stays a literal: it has
+                // eight values.
+                val cands = graft.ops.Similarity.ivfCandidates(index, cents, queries, nProbe)
+                val byCosine = Seq(col("cosine").desc, col("id").asc)
+                val page = excl.fold(cands)(id =>
+                    cands.filter(col("id") =!= NativeExpressions.longParam(id)))
+                  .orderBy(byCosine: _*).limit(k)
+                  .withColumn("rank", row_number().over(Window.orderBy(byCosine: _*)).cast("long"))
                   .select(col("id"), col("rank"), col("cosine"))
                 val diversify = ps.get("diversify")
                   .flatMap(s => scala.util.Try(s.toInt).toOption)

@@ -2,6 +2,7 @@ package graft
 
 import graft.model._
 import graft.pipeline.Consolidate
+import graft.ConsolidateOracle._
 
 /** Properties the reference relies on but never tests (SURVEY.md §5):
   * the consolidation fold must be insensitive to event order (Kafka gave

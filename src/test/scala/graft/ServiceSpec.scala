@@ -590,6 +590,31 @@ class ServiceSpec extends SparkSpec {
     } finally svc.close()
   }
 
+  test("warm requests compile no generated class: a repeat on each route, an unseen probeDoc or k") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val dir = enc(sf())
+    val lex = s"/search?dir=$dir&q=${enc("customer line")}"
+    def hybrid(probe: Int) = s"/search?dir=$dir&mode=hybrid&probeDoc=$probe&q=${enc("customer line")}"
+    def similar(probe: Int, k: Int) = s"/similar?dir=$dir&probeDoc=$probe&k=$k"
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      def compiles(r: String): Long = compilesOf(assert(get(svc, r)._1 == 200, r))
+      Seq(lex, hybrid(5), similar(7, 10)).foreach(r => assert(get(svc, r)._1 == 200)) // warm
+      // An adaptive plan may pick another join build side on a later run,
+      // by which query stage finished first, and compile that variant's
+      // few classes once; so each check takes the least of three requests.
+      // A probe id or k planned as a primitive literal is inlined into
+      // generated code and compiled 4 new classes per new value here.
+      def least(rs: Seq[String]): Long = rs.map(compiles).min
+      assert(least(Seq.fill(3)(lex)) == 0, "a repeated lexical /search compiled")
+      assert(least(Seq.fill(3)(hybrid(5))) == 0, "a repeated hybrid /search compiled")
+      assert(least(Seq.fill(3)(similar(7, 10))) == 0, "a repeated /similar compiled")
+      assert(least(Seq(9, 11, 13).map(hybrid)) == 0, "an unseen hybrid probeDoc compiled")
+      assert(least(Seq(8, 12, 14).map(similar(_, 10))) == 0, "an unseen /similar probeDoc compiled")
+      assert(least(Seq(11, 12, 13).map(similar(7, _))) == 0, "an unseen /similar k compiled")
+    } finally svc.close()
+  }
+
   test("streamed /similar resolves its index per request: a batch_run added between requests is served") {
     import spark.implicits._
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")

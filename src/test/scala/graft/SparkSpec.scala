@@ -65,6 +65,16 @@ trait SparkSpec extends AnyFunSuite {
     try { settle(); val j0 = jobs.get; body; settle(); jobs.get - j0 }
     finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Generated classes Janino compiled while `body` runs, i.e. misses of
+    * the JVM-wide codegen cache. The count is JVM-wide, so a stream
+    * another suite left running would add its own compiles. */
+  def compilesOf(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = METRIC_COMPILATION_TIME.getCount
+    body
+    METRIC_COMPILATION_TIME.getCount - c0
+  }
 }
 
 object SparkSpec {

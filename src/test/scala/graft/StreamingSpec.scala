@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model._
 import graft.pipeline.Consolidate
+import graft.ConsolidateOracle._
 import graft.streaming.Streaming
 
 /** Streaming parity: the stateful streaming fold must agree with the
