@@ -359,19 +359,6 @@ object Similarity {
   def ivfExactTopKMany(index: DataFrame, centroids: DataFrame,
       queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    ivfCandidates(index, centroids, queries, nProbe)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("id"), col("cosine"), col("rank"))
-  }
-
-  /** The candidates of [[ivfExactTopKMany]] before its ranking: every
-    * vector in each query's `nProbe` nearest cells, with its exact
-    * cosine to the query, as (cell, id, qv, query_id, q, cosine). */
-  def ivfCandidates(index: DataFrame, centroids: DataFrame,
-      queries: DataFrame, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val probed = queries.crossJoin(broadcast(centroids))
       .withColumn("sim", graft.functions.NativeExpressions.longCosine(col("cv"), col("q")))
       .withColumn("__rk", row_number().over(
@@ -380,6 +367,67 @@ object Similarity {
       .select(col("query_id"), col("q"), col("cell"))
     index.join(broadcast(probed), Seq("cell"))
       .withColumn("cosine", graft.functions.NativeExpressions.longCosine(col("qv"), col("q")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("id").asc)))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("id"), col("cosine"), col("rank"))
+  }
+
+  /** The (cell, cv) rows of an integer-exact IVF centroid table
+    * ([[ivfExactCentroids]]), collected: k × dim longs, small enough to
+    * hold on the driver for the life of an index. */
+  def ivfCentroidRows(centroids: DataFrame): Seq[(Long, Seq[Long])] =
+    centroids.select(col("cell").cast("long"), col("cv")).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Long](1)))
+
+  /** The `nProbe` cells whose centroids are nearest the quantized probe
+    * `q`, ranked on the driver with the engine's own cosine
+    * ([[graft.functions.NativeExpressions.LongCosine]], evaluated as
+    * [[TextSearch.bucketId]] evaluates its hash) in Spark's SQL order:
+    * similarity descending (NaN above every number, as for an all-zero
+    * probe), then cell ascending — the cells [[ivfExactTopKMany]]'s
+    * per-query window picks. */
+  def ivfNearestCells(cents: Seq[(Long, Seq[Long])], q: Seq[Long],
+      nProbe: Int): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def vec(v: Seq[Long]) = Literal.create(v, ArrayType(LongType, containsNull = false))
+    val probe = vec(q)
+    cents.map { case (cell, cv) =>
+        (cell, graft.functions.NativeExpressions.LongCosine(vec(cv), probe)
+          .eval().asInstanceOf[Double])
+      }
+      .sortWith { case ((ca, sa), (cb, sb)) =>
+        val bySim = compareDoubles(sb, sa)
+        bySim < 0 || (bySim == 0 && ca < cb)
+      }
+      .take(nProbe).map(_._1)
+  }
+
+  /** Single-probe integer-exact IVF top-`k`: the vectors of the probe's
+    * `nProbe` nearest cells ([[ivfNearestCells]], chosen on the driver)
+    * ranked by exact cosine to `q` (cosine desc, id asc), as (id, rank,
+    * cosine) — one query of [[ivfExactTopKMany]], with `excludeId` (the
+    * probe's own corpus row) dropped before the ranking. The cells enter
+    * the plan as a static partition filter, so the scan of a
+    * cell-partitioned index lists only those directories and the read is
+    * one job. A request's values stay out of generated code, so a new
+    * probe, cell set or `k` compiles no class: the probe vector is a
+    * literal inside the interpreted cosine, the id a bound parameter, and
+    * `k` a top-k limit (per-partition top-k, then one merge). */
+  def ivfProbeTopK(index: DataFrame, cents: Seq[(Long, Seq[Long])], q: Seq[Long],
+      nProbe: Int, k: Int, excludeId: Option[Long]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cands = index.filter(col("cell").isin(ivfNearestCells(cents, q, nProbe): _*))
+      .select(col("id"),
+        graft.functions.NativeExpressions.longCosine(col("qv"), typedLit(q)).as("cosine"))
+    val byCosine = Seq(col("cosine").desc, col("id").asc)
+    excludeId.fold(cands)(id =>
+        cands.filter(col("id") =!= graft.functions.NativeExpressions.longParam(id)))
+      .orderBy(byCosine: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(byCosine: _*)).cast("long"))
+      .select(col("id"), col("rank"), col("cosine"))
   }
 
   /** HARD-NEGATIVE mining for contrastive training (the SimCSE/DPR data

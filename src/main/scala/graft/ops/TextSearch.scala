@@ -93,15 +93,17 @@ object TextSearch {
       .filter(col("tf") > 0)
     // tiny aggregate: corpus stats (1 row)
     val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sdl"))
-    bm25Score(tfRows, stats, k)
+    bm25Score(tfRows, _.crossJoin(broadcast(stats)), k)
   }
 
   /** The BM25 scoring tail shared by the scan path ([[bm25TopK]]) and the
     * stored-index path ([[bm25TopKIndexed]]): `tfRows` = matching
-    * (doc_id, dl, term, tf) rows, `stats` = the 1-row (n_docs, sdl)
-    * corpus table. Same expressions → bit-identical fixed-point scores
-    * whichever side produced the rows. */
-  private def bm25Score(tfRows: DataFrame, stats: DataFrame, k: Int): DataFrame = {
+    * (doc_id, dl, term, tf) rows, and `withTotals` attaches the corpus
+    * totals `n_docs` and `sdl` to them, from a 1-row stats table or as
+    * bound parameters. Same expressions → bit-identical fixed-point scores
+    * whichever side produced the rows and the totals. */
+  private def bm25Score(tfRows: DataFrame, withTotals: DataFrame => DataFrame,
+      k: Int): DataFrame = {
     val dfTab = tfRows.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val ratio = col("dl").cast("double") * col("n_docs").cast("double") /
       col("sdl").cast("double")
@@ -109,9 +111,7 @@ object TextSearch {
       (col("tf").cast("double") + lit(K1) * (lit(OneMinusB) + lit(B) * col("ratio")))
     val idf = (lit(2.0) * (col("n_docs") - col("df")).cast("double") + lit(1.0)) /
       (lit(2.0) * col("df").cast("double") + lit(1.0))
-    tfRows
-      .join(broadcast(dfTab), Seq("term"))
-      .crossJoin(broadcast(stats))
+    withTotals(tfRows.join(broadcast(dfTab), Seq("term")))
       .withColumn("ratio", ratio)
       .withColumn("term_score",
         round(idf * 1000000.0, 0).cast("long") *
@@ -168,28 +168,49 @@ object TextSearch {
     * growing (streamed) index is read as it stands now. */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, rawTerms: Seq[String], k: Int,
-      nBuckets: Int = PostingsBuckets): DataFrame =
-    bm25TopKIndexed(spark.read.parquet(s"$indexDir/postings"),
-      spark.read.parquet(s"$indexDir/stats"), rawTerms, k, nBuckets)
+      nBuckets: Int = PostingsBuckets): DataFrame = {
+    val tfRows = indexedTfRows(spark.read.parquet(s"$indexDir/postings"), rawTerms, nBuckets)
+    val totals = summedStats(spark.read.parquet(s"$indexDir/stats"))
+    bm25Score(tfRows, _.crossJoin(broadcast(totals)), k)
+  }
 
-  /** [[bm25TopKIndexed]] over already-resolved `postings` and `stats`
-    * frames of a stored index — the serving facade resolves a build-once
-    * index once and plans every request over the same relations. */
-  def bm25TopKIndexed(postings: DataFrame, stats: DataFrame,
+  /** [[bm25TopKIndexed]] over an already-resolved `postings` frame of a
+    * build-once index whose totals were read once ([[indexTotals]]) — the
+    * serving facade's per-corpus handle. The totals enter the plan as
+    * bound parameters, so a request runs no stats aggregate and no
+    * broadcast of it, and another corpus compiles no new class. */
+  def bm25TopKIndexed(postings: DataFrame, nDocs: Long, sdl: Long,
       rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame = {
+    import graft.functions.NativeExpressions.longParam
+    bm25Score(indexedTfRows(postings, rawTerms, nBuckets),
+      _.select(col("*"), longParam(nDocs).as("n_docs"), longParam(sdl).as("sdl")), k)
+  }
+
+  /** The BM25 totals `(n_docs, sdl)` of a stored index's stats table, in
+    * one collect. */
+  def indexTotals(stats: DataFrame): (Long, Long) = {
+    val r = summedStats(stats).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** A stats table's 1-row `(n_docs, sdl)` totals. SUM the stats read:
+    * identity over the batch builder's 1-row table, and the per-batch_run
+    * stats partitions of the incremental sink
+    * ([[graft.streaming.Streaming.incrementalPostingsSink]]) fold to the
+    * same integer totals — one serving path for both layouts. */
+  private def summedStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("sdl")).as("sdl"))
+
+  /** A stored index's matching (doc_id, dl, term, tf) rows: the scan
+    * prunes to the query terms' bucket partitions. */
+  private def indexedTfRows(postings: DataFrame, rawTerms: Seq[String],
+      nBuckets: Int): DataFrame = {
     val terms = rawTerms.distinct // same contract as bm25TopK
     require(terms.nonEmpty && terms.size <= 64, "bag-of-terms query expected")
     val bucketIds = terms.map(bucketId(_, nBuckets)).distinct
-    val tfRows = postings
+    postings
       .filter(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-    // SUM the stats read: identity over the batch builder's 1-row table,
-    // and the per-batch_run stats partitions of the incremental sink
-    // ([[graft.streaming.Streaming.incrementalPostingsSink]]) fold to the
-    // same integer totals — one serving path for both layouts
-    val totals = stats
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sdl")).as("sdl"))
-    bm25Score(tfRows, totals, k)
   }
 
   /** A term's postings bucket, `pmod(xxhash64(term), nBuckets)` as

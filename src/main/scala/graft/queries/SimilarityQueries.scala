@@ -2395,47 +2395,37 @@ object SimilarityQueries {
   /** The fusion with a USER-SUPPLIED probe vector, the semantic leg
     * served from the per-corpus IVF ARTIFACT
     * (GraftService.ivfIndexFor: `centroids` + cell-partitioned `index`)
-    * instead of a brute-force corpus scan: the probe ranks its nProbe
-    * nearest cells, the index read prunes to those cell partitions
-    * (dynamic partition pruning over the broadcast probe join —
-    * [[graft.ops.Similarity.ivfExactTopKMany]]'s serving shape), and
-    * the top-100 fuses with the caller's lexical leg exactly like
+    * instead of a brute-force corpus scan: the probe's nProbe nearest
+    * cells are ranked on the driver, the index read prunes to those cell
+    * partitions ([[graft.ops.Similarity.ivfProbeTopK]] — the cells
+    * [[graft.ops.Similarity.ivfExactTopKMany]] would probe), and the
+    * top-100 fuses with the caller's lexical leg exactly like
     * [[rrfFusionFrom]]. `excludeId` drops the probe's own corpus row
     * (cosine 1.0 by construction) when the probe IS a corpus member.
+    * This overload collects the centroids on every call.
     *
     * Scale: the corpus index is never shuffled and unprobed cells are
-    * never read; the re-rank after self-exclusion is a window over ≤101
-    * rows. */
+    * never read; the semantic ranking is a top-100 over the probed cells. */
   def rrfFusionIvfProbe(spark: SparkSession, ivfDir: String, lexTop: DataFrame,
       probeQv: Seq[Long], nProbe: Int, excludeId: Option[Long],
       extraLegs: Seq[(DataFrame, String)] = Nil): DataFrame =
     rrfFusionIvfProbe(spark.read.parquet(s"$ivfDir/index"),
-      spark.read.parquet(s"$ivfDir/centroids"), lexTop, probeQv, nProbe,
-      excludeId, extraLegs)
+      Similarity.ivfCentroidRows(spark.read.parquet(s"$ivfDir/centroids")),
+      lexTop, probeQv, nProbe, excludeId, extraLegs)
 
-  /** [[rrfFusionIvfProbe]] over already-resolved IVF `index` and
-    * `centroids` frames (the serving facade's per-corpus relations). */
-  def rrfFusionIvfProbe(index: DataFrame, cents: DataFrame, lexTop: DataFrame,
-      probeQv: Seq[Long], nProbe: Int, excludeId: Option[Long],
+  /** [[rrfFusionIvfProbe]] over an already-resolved IVF `index` and its
+    * collected centroid rows (the serving facade's per-corpus handle). */
+  def rrfFusionIvfProbe(index: DataFrame, cents: Seq[(Long, Seq[Long])],
+      lexTop: DataFrame, probeQv: Seq[Long], nProbe: Int, excludeId: Option[Long],
       extraLegs: Seq[(DataFrame, String)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = index.sparkSession
-    import spark.implicits._
     val listN = 100
     val lex = lexTop
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("score_e12").desc, col("doc_id").asc)).cast("long"))
       .select(col("doc_id"), col("lex_rank"))
-    val queries = Seq((0L, probeQv)).toDF("query_id", "q")
-    val top = Similarity.ivfExactTopKMany(index, cents, queries,
-      k = listN + 1, nProbe = nProbe)
-    // the probe id as data: a new probe compiles no new classes
-    val sem = excludeId.fold(top)(id =>
-      top.filter(col("id") =!= graft.functions.NativeExpressions.longParam(id)))
-      .withColumn("sem_rank", row_number().over(
-        Window.orderBy(col("cosine").desc, col("id").asc)).cast("long"))
-      .filter(col("sem_rank") <= listN)
-      .select(col("id").as("doc_id"), col("sem_rank"))
+    val sem = Similarity.ivfProbeTopK(index, cents, probeQv, nProbe, listN, excludeId)
+      .select(col("id").as("doc_id"), col("rank").as("sem_rank"))
     graft.ops.TextSearch.rrfFuse(
       Seq(lex, sem) ++ extraLegs.map(_._1), "doc_id",
       Seq("lex_rank", "sem_rank") ++ extraLegs.map(_._2), kConst = 60, topN = 20)

@@ -51,15 +51,22 @@ import graft.streaming.Streaming
   * Serving: requests run on a fixed pool of one thread per core, so
   * concurrent requests overlap their driver rounds (planning, job
   * scheduling, `collect()`) on the one session; `close()` shuts the pool
-  * down. `/search` and `/similar` plan over a per-corpus handle: the
+  * down. Each pool thread holds the service's session as its active
+  * session, and each request's Spark jobs carry the job description
+  * `graft <path>` (e.g. `graft /similar`), so a listener can attribute
+  * them. `/search` and `/similar` plan over a per-corpus handle: the
   * first request on a corpus dir (after the path check) builds its
-  * serving indexes and resolves the corpus tables and both indexes once
-  * — schema read, partition directories listed — and later requests on
-  * that dir reuse those relations instead of re-reading them. The
-  * immutable-corpus contract of the build-once artifacts covers the
-  * handles too: a mutated corpus needs a restarted service. A streamed
-  * index (`/similar?indexDir=&centroidsDir=`) grows, so it is resolved
-  * on every request.
+  * serving indexes and resolves, once, the corpus tables and both
+  * indexes (schema read, partition directories listed) plus two sets of
+  * per-corpus constants: the BM25 totals `(n_docs, sdl)` of the postings
+  * index and the IVF centroid rows `(cell, cv)`, held on the driver (k ×
+  * dim longs; 8 × 64 here). A request then plans only its own data: the
+  * totals enter the lexical ranking as bound parameters, and the probe's
+  * nearest cells are ranked on the driver, so the IVF read is a static
+  * partition filter. The immutable-corpus contract of the build-once
+  * artifacts covers the handles too: a mutated corpus needs a restarted
+  * service. A streamed index (`/similar?indexDir=&centroidsDir=`) grows,
+  * so it and its centroids are read on every request.
   */
 final class GraftService private (spark: SparkSession, server: HttpServer,
     pool: ExecutorService, pathRoots: Seq[String]) {
@@ -89,6 +96,10 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
   private def corpus(dir: String): GraftService.Corpus =
     corpora.computeIfAbsent(new java.io.File(dir).getCanonicalPath,
       GraftService.Corpus.resolve(spark, _))
+
+  /** Runs `f` on a serving thread and returns its result (for tests). */
+  private[graft] def onServingThread[T](f: => T): T =
+    pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f }).get()
 
   /** Canonical dirs that hold a resolved handle (for tests). */
   private[graft] def corpusDirs: Set[String] = {
@@ -147,6 +158,8 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
   // --------------------------------------------------------- handlers
 
   private def handle(ex: HttpExchange): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobDescription(s"graft ${ex.getRequestURI.getPath}")
     val (status, body) =
       try route(ex)
       catch { // reference: service.kt:25 routes exceptions to a printer;
@@ -158,7 +171,7 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
             s"path outside the configured serving roots: ${e.getMessage}")}}""")
         case e: Exception =>
           (500, s"""{"error":${GraftService.jstr(e.toString)}}""")
-      }
+      } finally sc.setJobDescription(null)
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
@@ -195,12 +208,14 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
         // fusion, snippets attached the same way. The LEXICAL ranking is
         // served from the STORED term-bucketed postings index (built once
         // per corpus dir, lazily): the request's scan prunes to the query
-        // terms' bucket partitions — a serving read touches the index,
-        // never the corpus text. Only the top-k doc_ids resolve back to
-        // text, for snippets. Rows are identical to the q143/q114
-        // oracles (bm25TopKIndexed is score-bit-equal to bm25TopK).
-        // The lexical leg, the probe's IVF leg and the snippets plan over
-        // the corpus handle's resolved relations.
+        // terms' bucket partitions, and the BM25 totals are the handle's
+        // constants. Rows are identical to the q143/q114 oracles
+        // (bm25TopKIndexed is score-bit-equal to bm25TopK). The snippets
+        // still read corpus text: the join of the ranked page to
+        // `documents(doc_id, text)` pushes only `IsNotNull(doc_id)` to
+        // the scan, so every lexical or hybrid request scans the whole
+        // documents table (SCALE.md). The lexical leg, the probe's IVF
+        // leg and the snippets plan over the corpus handle.
         val ps = GraftService.parseQuery(ex.getRequestURI.getRawQuery)
         ps.get("dir") match {
           case None => (400, """{"error":"dir required"}""")
@@ -240,7 +255,7 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
             else {
               val c = corpus(dir)
               def lexTop(k: Int) = graft.ops.TextSearch.bm25TopKIndexed(
-                c.postings, c.stats, terms, k, graft.ops.TextSearch.PostingsBuckets)
+                c.postings, c.nDocs, c.sdl, terms, k, graft.ops.TextSearch.PostingsBuckets)
               // `anchors=1` (hybrid only): a THIRD fusion leg — q217's
               // anchor-surrogate BM25 over the build-once anchor-document
               // artifact (what OTHER pages' link text says about each
@@ -347,8 +362,8 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
               ps.get("nprobe").flatMap(s => scala.util.Try(s.toInt).toOption)
                 .getOrElse(3)))
             // the build-once layout plans over the corpus handle; a
-            // streamed index grows, so it resolves on every request (and
-            // needs no handle)
+            // streamed index grows, so it and its centroids are read on
+            // every request (and need no handle)
             val streamed = for (i <- ps.get("indexDir"); c <- ps.get("centroidsDir"))
               yield (checkPath(i), checkPath(c))
             lazy val handle = corpus(dir)
@@ -358,27 +373,13 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
               case None =>
                 (400, """{"error":"probeDoc must be a known vec_id; probe must be 64 comma-separated numbers"}""")
               case Some((qv, excl)) =>
-                import org.apache.spark.sql.expressions.Window
-                import spark.implicits._
                 val (index, cents) = streamed match {
-                  case Some((i, c)) =>
-                    (Streaming.annIndexVectors(spark, i), spark.read.parquet(c))
+                  case Some((i, c)) => (Streaming.annIndexVectors(spark, i),
+                    graft.ops.Similarity.ivfCentroidRows(spark.read.parquet(c)))
                   case None => (handle.ivfIndex, handle.centroids)
                 }
-                val queries = Seq((0L, qv)).toDF("query_id", "q")
-                // ivfExactTopKMany's ranking, with the request's values kept
-                // out of generated code so a new probe or `k` compiles no
-                // classes: the probe id is a bound parameter, and `k` is a
-                // top-k limit (per-partition top-k, then one merge), which
-                // runs as plain JVM code. `nprobe` stays a literal: it has
-                // eight values.
-                val cands = graft.ops.Similarity.ivfCandidates(index, cents, queries, nProbe)
-                val byCosine = Seq(col("cosine").desc, col("id").asc)
-                val page = excl.fold(cands)(id =>
-                    cands.filter(col("id") =!= NativeExpressions.longParam(id)))
-                  .orderBy(byCosine: _*).limit(k)
-                  .withColumn("rank", row_number().over(Window.orderBy(byCosine: _*)).cast("long"))
-                  .select(col("id"), col("rank"), col("cosine"))
+                // ivfExactTopKMany's ranking for one probe, self excluded
+                val page = graft.ops.Similarity.ivfProbeTopK(index, cents, qv, nProbe, k, excl)
                 val diversify = ps.get("diversify")
                   .flatMap(s => scala.util.Try(s.toInt).toOption)
                   .filter(n => n >= 1 && n <= k)
@@ -552,20 +553,25 @@ object GraftService {
     graft.queries.ClusterArtifacts.ivfIndex(spark, dir)
 
   /** One corpus's build-once relations, each resolved once (schema read,
-    * partition directories listed) so a request only plans over them:
+    * partition directories listed) so a request only plans over them —
     * the corpus tables, the postings index ([[postingsIndexFor]]) and the
-    * IVF index ([[ivfIndexFor]]). */
+    * IVF index ([[ivfIndexFor]]) — and its constants, read once: the BM25
+    * totals `nDocs`/`sdl` of the postings index and the IVF centroid
+    * rows `(cell, cv)`. */
   private[service] final case class Corpus(documents: DataFrame, embeddings: DataFrame,
-      postings: DataFrame, stats: DataFrame, ivfIndex: DataFrame, centroids: DataFrame)
+      postings: DataFrame, nDocs: Long, sdl: Long, ivfIndex: DataFrame,
+      centroids: Seq[(Long, Seq[Long])])
 
   private[service] object Corpus {
     /** Builds the serving indexes first: a failed build leaves no handle. */
     def resolve(spark: SparkSession, dir: String): Corpus = {
       val idx = postingsIndexFor(spark, dir)
       val ivf = ivfIndexFor(spark, dir)
+      val (nDocs, sdl) = graft.ops.TextSearch.indexTotals(spark.read.parquet(s"$idx/stats"))
       Corpus(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
-        spark.read.parquet(s"$idx/postings"), spark.read.parquet(s"$idx/stats"),
-        spark.read.parquet(s"$ivf/index"), spark.read.parquet(s"$ivf/centroids"))
+        spark.read.parquet(s"$idx/postings"), nDocs, sdl,
+        spark.read.parquet(s"$ivf/index"),
+        graft.ops.Similarity.ivfCentroidRows(spark.read.parquet(s"$ivf/centroids")))
     }
   }
 
@@ -592,16 +598,29 @@ object GraftService {
   /** Start the facade on `port` (0 = ephemeral, for tests).
     * `pathRoots` — when non-empty, every path-taking request param must
     * resolve under one of these directories (403 otherwise); empty (the
-    * default) preserves the trusted-operator stance (class doc). */
+    * default) preserves the trusted-operator stance (class doc).
+    *
+    * Sets `sun.net.httpserver.nodelay=true` unless the JVM already has
+    * the property: the JDK server writes a reply's headers and body as two
+    * segments, and with Nagle's algorithm the body waits for the
+    * client's delayed ACK, about 40 ms per reply. The JDK reads the
+    * property once per JVM, when the first `HttpServer` is created, so a
+    * server created earlier in the JVM fixes the value for every later
+    * one. */
   def start(spark: SparkSession, port: Int = 7000,
       pathRoots: Seq[String] = Nil): GraftService = {
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     // one serving thread per core: concurrent requests overlap their
-    // driver rounds (planning, scheduling, collect) on the shared session
+    // driver rounds (planning, scheduling, collect) on the shared session.
+    // The HttpServer dispatcher creates these threads and holds no active
+    // session to pass on, so each thread makes `spark` its active session
+    // (what `SQLConf.get` reads outside an action)
     val threads = new java.util.concurrent.atomic.AtomicInteger()
     val pool = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
       (r: Runnable) => {
-        val t = new Thread(r,
+        val t = new Thread(() => { SparkSession.setActiveSession(spark); r.run() },
           s"graft-service-${server.getAddress.getPort}-${threads.incrementAndGet()}")
         t.setDaemon(true)
         t

@@ -164,6 +164,42 @@ class DedupSimilaritySpec extends SparkSpec {
       "cosine assignment must be centroid-scale-invariant")
   }
 
+  test("ivfNearestCells picks the cells of the crossJoin + window probe: random probes, ties, NaN, nProbe 1-8") {
+    import org.apache.spark.sql.expressions.Window
+    val ivf = graft.service.GraftService.ivfIndexFor(spark, sf())
+    val built = Similarity.ivfCentroidRows(spark.read.parquet(s"$ivf/centroids"))
+    assert(built.size == 8)
+    val rnd = new scala.util.Random(17)
+    def randVec() = Seq.fill(64)(rnd.nextInt(2001).toLong - 1000)
+    val v = randVec()
+    // equal similarities: a repeated vector and its double (cosine is
+    // scale-invariant, bit for bit) under several cells, plus an all-zero
+    // centroid whose similarity is NaN for every probe
+    val tied = Seq((9L, v), (3L, v), (7L, v.map(_ * 2)), (1L, randVec()),
+      (5L, Seq.fill(64)(0L)), (4L, randVec()), (8L, v), (2L, randVec()))
+    val probes = Seq.fill(12)(randVec()) ++ Seq(v, Seq.fill(64)(0L)) ++
+      Tables.embeddings(spark, sf()).filter($"vec_id" < 6)
+        .select(Similarity.quantize($"embedding")).as[Seq[Long]].collect().toSeq
+    for (cents <- Seq(built, tied)) {
+      // the window selection ivfExactTopKMany runs, every rank kept
+      val ranked = probes.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+        .toDF("query_id", "q")
+        .crossJoin(broadcast(cents.toDF("cell", "cv")))
+        .withColumn("sim", graft.functions.NativeExpressions.longCosine($"cv", $"q"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy($"query_id").orderBy($"sim".desc, $"cell".asc)))
+        .select($"query_id", $"rk", $"cell").as[(Long, Int, Long)].collect()
+      for ((q, i) <- probes.zipWithIndex; nProbe <- 1 to 8) {
+        val want = ranked.filter(r => r._1 == i && r._2 <= nProbe).sortBy(_._2).map(_._3).toSeq
+        assert(Similarity.ivfNearestCells(cents, q, nProbe) == want,
+          s"probe $i nProbe $nProbe over ${cents.map(_._1)}")
+      }
+    }
+    // the tie order is the lowest cell first, NaN (the zero centroid)
+    // above every number
+    assert(Similarity.ivfNearestCells(tied, v, 5) == Seq(5L, 3L, 7L, 8L, 9L))
+  }
+
   test("PQ codes: 4-bit range, ADC(query doc) == its own SSE, distortion sane") {
     val emb = Tables.embeddings(spark, sf())
     val qvecs = emb.select($"vec_id".as("id"), Similarity.quantize($"embedding").as("qv"))

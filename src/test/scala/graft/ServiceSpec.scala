@@ -203,10 +203,15 @@ class ServiceSpec extends SparkSpec {
       // the probe's own row never ranks (it would be cosine 1.0)
       assert(!want.take(1).contains(5L))
       // the semantic serving read PRUNES to the probed cells: the
-      // cell-partitioned index scan carries a dynamic pruning filter
+      // cell-partitioned index scan carries a static partition filter on
+      // exactly the nprobe=3 cells nearest the probe
       val plan = fused.queryExecution.executedPlan.toString
-      assert(plan.toLowerCase.contains("dynamicpruning"),
-        s"index scan does not dynamically prune cells:\n$plan")
+      val cells = graft.ops.Similarity.ivfNearestCells(graft.ops.Similarity
+        .ivfCentroidRows(spark.read.parquet(s"$ivf/centroids")), probeQv, 3)
+      val pruned = "PartitionFilters: \\[cell#\\d+ IN \\(([\\d,]+)\\)\\]".r
+        .findFirstMatchIn(plan).map(_.group(1).split(",").map(_.toLong).toSet)
+      assert(cells.size == 3 && pruned.contains(cells.toSet),
+        s"index scan not pruned to the cells $cells:\n$plan")
       // a raw 64-dim probe is accepted; malformed probes are client errors
       val vec = java.net.URLEncoder.encode(Seq.fill(64)("0.5").mkString(","), "UTF-8")
       assert(get(svc, s"/search?dir=$dir&mode=hybrid&probe=$vec")._1 == 200)
@@ -579,14 +584,66 @@ class ServiceSpec extends SparkSpec {
     try {
       val dir = java.net.URLEncoder.encode(sf(), "UTF-8")
       val lex = s"/search?dir=$dir&q=${java.net.URLEncoder.encode("customer line", "UTF-8")}"
+      val hybrid = s"$lex&mode=hybrid&probeDoc=5"
       val similar = s"/similar?dir=$dir&probeDoc=7&k=10"
-      Seq(lex, similar).foreach(r => assert(get(svc, r)._1 == 200)) // warm
+      Seq(lex, hybrid, similar).foreach(r => assert(get(svc, r)._1 == 200)) // warm
       val lexJobs = jobsOf(assert(get(svc, lex)._1 == 200))
+      val hybridJobs = jobsOf(assert(get(svc, hybrid)._1 == 200))
       val similarJobs = jobsOf(assert(get(svc, similar)._1 == 200))
-      // resolving the corpus per request cost 13 (lexical) and 9
-      // (/similar) jobs per warm request
-      assert(lexJobs <= 7, s"lexical /search ran $lexJobs jobs")
-      assert(similarJobs <= 6, s"/similar ran $similarJobs jobs")
+      // resolving the corpus per request cost 13 (lexical), 21 (hybrid)
+      // and 9 (/similar) jobs per warm request; aggregating the BM25
+      // totals and choosing the IVF cells per request, 7, 12 and 5
+      assert(lexJobs <= 5, s"lexical /search ran $lexJobs jobs")
+      assert(hybridJobs <= 6, s"hybrid /search ran $hybridJobs jobs")
+      assert(similarJobs <= 2, s"/similar ran $similarJobs jobs")
+    } finally svc.close()
+  }
+
+  test("every job of a warm /similar carries the request's job description") {
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      val similar = s"/similar?dir=${java.net.URLEncoder.encode(sf(), "UTF-8")}&probeDoc=7&k=10"
+      assert(get(svc, similar)._1 == 200) // warm
+      val descs = jobDescriptionsOf(assert(get(svc, similar)._1 == 200))
+      assert(descs.nonEmpty && descs.forall(_ == "graft /similar"), descs)
+      // cleared after the request: a later request's jobs are its own
+      val searchDescs = jobDescriptionsOf(assert(get(svc, s"/search?dir=${
+        java.net.URLEncoder.encode(sf(), "UTF-8")}")._1 == 200))
+      assert(searchDescs.nonEmpty && searchDescs.forall(_ == "graft /search"), searchDescs)
+    } finally svc.close()
+  }
+
+  test("a serving thread reads the session's conf (its active session), not Spark's defaults") {
+    import org.apache.spark.sql.internal.SQLConf
+    val key = SQLConf.SHUFFLE_PARTITIONS.key
+    val session = spark.conf.get(key)
+    assert(session != SQLConf.SHUFFLE_PARTITIONS.defaultValueString,
+      s"fixture degenerate: the session's $key is Spark's default")
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      // the pool's threads are created by a thread with no active session
+      // (the HttpServer dispatcher); reproduce that for every thread
+      val read = new java.util.concurrent.atomic.AtomicReference[Seq[String]]()
+      val creator = new Thread(() => {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        read.set((1 to 2 * Runtime.getRuntime.availableProcessors).map(_ =>
+          svc.onServingThread(SQLConf.get.getConfString(key))))
+      })
+      creator.start(); creator.join()
+      assert(read.get != null && read.get.forall(_ == session), read.get)
+    } finally svc.close()
+  }
+
+  test("a facade reply is not held back by Nagle's algorithm: median GET / under 20 ms") {
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      assert(get(svc, "/")._1 == 200) // warm the connection
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(svc, "/")._1 == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"GET / median ${ms(10)} ms: ${ms.mkString(", ")}")
     } finally svc.close()
   }
 

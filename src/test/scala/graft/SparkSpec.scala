@@ -35,13 +35,18 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Spark jobs started while `body` runs, streaming micro-batches
+    * excluded. */
+  def jobsOf(body: => Unit): Int = jobDescriptionsOf(body).size
+
+  /** The job description (`spark.job.description`, null if unset) of each
+    * Spark job started while `body` runs, streaming micro-batches
     * excluded. The listener bus delivers events in order, so a marker job
     * run before and after `body` fences the count: once the marker's
     * start event arrives, every job started before it has been counted. */
-  def jobsOf(body: => Unit): Int = {
+  def jobDescriptionsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val markKey = "graft.test.jobMark"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     @volatile var mark: (String, java.util.concurrent.CountDownLatch) = null
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -49,7 +54,7 @@ trait SparkSpec extends AnyFunSuite {
         if (m != null) { val cur = mark; if (cur != null && cur._1 == m) cur._2.countDown() }
         // micro-batches of a stream another suite left running are not ours
         else if (Option(e.properties).forall(_.getProperty("sql.streaming.queryId") == null))
-          jobs.incrementAndGet()
+          jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))))
       }
     }
     def settle(): Unit = {
@@ -62,8 +67,11 @@ trait SparkSpec extends AnyFunSuite {
       assert(latch.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
     }
     spark.sparkContext.addSparkListener(listener)
-    try { settle(); val j0 = jobs.get; body; settle(); jobs.get - j0 }
-    finally spark.sparkContext.removeSparkListener(listener)
+    try {
+      settle(); jobs.clear(); body; settle()
+      import scala.jdk.CollectionConverters._
+      jobs.asScala.toSeq.map(_.orNull)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Generated classes Janino compiled while `body` runs, i.e. misses of
