@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-text relevance search over the `documents` corpus — the retrieval
@@ -9,11 +9,9 @@ import org.apache.spark.sql.functions._
   * search through its query surface; here it is a first-class operator).
   *
   * Two layers:
-  *   1. `postings` / `termStats` — the inverted index as a DataFrame:
-  *      (term, doc_id, tf) posting lists plus per-term document frequency.
-  *      At 100 TB the postings table is written bucketed by `term`
-  *      (sources.Bucketing), so per-term lookups prune to one bucket and
-  *      term-keyed joins need no exchange.
+  *   1. `writePostingsIndex` — the inverted index, stored: (term, doc_id,
+  *      dl, tf, df) postings partitioned by term bucket plus the corpus
+  *      totals, so a serving read prunes to its terms' buckets.
   *   2. `bm25TopK` — scores one query against the corpus WITHOUT building
   *      the full index: tokens are filtered to the query's terms before any
   *      explode, so the per-doc stage is a narrow codegen'd pass and the
@@ -42,22 +40,6 @@ object TextSearch {
 
   /** Term buckets of a stored postings index ([[writePostingsIndex]]). */
   val PostingsBuckets = 64
-
-  /** The inverted index: one row per (term, doc_id) with term frequency.
-    * One explode + one shuffle on (term, doc_id); at 100 TB write this
-    * bucketed by term. */
-  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** Per-term document frequency + total term count — the index's
-    * dictionary table. Derived from `postings` with a map-side-partial
-    * aggregation. */
-  def termStats(postings: DataFrame): DataFrame =
-    postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
 
   /** Top-k docs for a bag-of-terms query, deterministic fixed-point BM25
     * score (`score_e12`, unit 1e-12), ties broken on doc_id.
@@ -93,25 +75,25 @@ object TextSearch {
       .filter(col("tf") > 0)
     // tiny aggregate: corpus stats (1 row)
     val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sdl"))
-    bm25Score(tfRows, _.crossJoin(broadcast(stats)), k)
+    bm25Score(countedDf(tfRows).crossJoin(broadcast(stats)), k)
   }
 
   /** The BM25 scoring tail shared by the scan path ([[bm25TopK]]) and the
-    * stored-index path ([[bm25TopKIndexed]]): `tfRows` = matching
-    * (doc_id, dl, term, tf) rows, and `withTotals` attaches the corpus
-    * totals `n_docs` and `sdl` to them, from a 1-row stats table or as
-    * bound parameters. Same expressions → bit-identical fixed-point scores
-    * whichever side produced the rows and the totals. */
-  private def bm25Score(tfRows: DataFrame, withTotals: DataFrame => DataFrame,
-      k: Int): DataFrame = {
-    val dfTab = tfRows.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    * stored-index paths ([[bm25TopKIndexed]]): `rows` = matching
+    * (doc_id, dl, term, tf) rows that carry their term's `df` and the
+    * corpus totals `n_docs` and `sdl`. The callers differ only in how
+    * those are attached: `df` counted from the matching rows
+    * ([[countedDf]]) or read from the stored column, the totals from a
+    * 1-row stats table or as bound parameters. Same expressions →
+    * bit-identical fixed-point scores whichever way they were attached. */
+  private def bm25Score(rows: DataFrame, k: Int): DataFrame = {
     val ratio = col("dl").cast("double") * col("n_docs").cast("double") /
       col("sdl").cast("double")
     val tfpart = col("tf").cast("double") * lit(K1Plus1) /
       (col("tf").cast("double") + lit(K1) * (lit(OneMinusB) + lit(B) * col("ratio")))
     val idf = (lit(2.0) * (col("n_docs") - col("df")).cast("double") + lit(1.0)) /
       (lit(2.0) * col("df").cast("double") + lit(1.0))
-    withTotals(tfRows.join(broadcast(dfTab), Seq("term")))
+    rows
       .withColumn("ratio", ratio)
       .withColumn("term_score",
         round(idf * 1000000.0, 0).cast("long") *
@@ -122,18 +104,32 @@ object TextSearch {
       .limit(k)
   }
 
+  /** `tfRows` with each term's `df` counted from the rows themselves: a
+    * per-term aggregate broadcast back. Right wherever `tfRows` holds
+    * every posting of its terms — the corpus scan, and a stored index of
+    * any layout, the streamed `batch_run=` tree included, whose shards
+    * carry no global `df`. */
+  private def countedDf(tfRows: DataFrame): DataFrame =
+    tfRows.join(broadcast(tfRows.groupBy(col("term")).agg(count(lit(1)).as("df"))),
+      Seq("term"))
+
   /** Build the SERVING index for [[bm25TopKIndexed]] under `indexDir`:
-    * the postings table (term, doc_id, tf, dl — dl denormalized so a
-    * serving read never joins a document table) written
+    * the postings table (term, doc_id, tf, dl, df) written
     * parquet-PARTITIONED by `bucket = pmod(xxhash64(term), nBuckets)`,
-    * plus the 1-row corpus stats table. A query's scan then prunes to
-    * its terms' bucket partitions (directory-level pruning) and
-    * row-group-filters on `term` inside them — the index is touched,
-    * never the corpus. One explode + one (term, doc_id) shuffle to
-    * build, same as [[postings]]; at 100 TB this runs once per corpus
-    * snapshot and every query amortizes it. */
+    * plus the 1-row corpus stats table (n_docs, sdl). `dl` (the doc's
+    * token count) and `df` (the number of postings of the row's term)
+    * are denormalized onto every posting, so a serving read neither
+    * joins a document table nor aggregates the term's posting list. A
+    * query's scan then prunes to its terms' bucket partitions
+    * (directory-level pruning) and row-group-filters on `term` inside
+    * them — the index is touched, never the corpus. One explode + one
+    * (term, doc_id) shuffle to build; `df` is a window over the
+    * bucket-clustered rows, a local sort with no added exchange. At
+    * 100 TB this runs once per corpus snapshot and every query
+    * amortizes it. */
   def writePostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, nBuckets: Int = PostingsBuckets): Unit = {
+    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     // ONE corpus scan: dl rides the group key (functionally dependent on
     // doc_id, so the key is no wider in practice)
@@ -148,6 +144,9 @@ object TextSearch {
       // files at corpus scale); with it each bucket dir gets its writers'
       // contiguous output
       .repartition(col("bucket"))
+      // a term's postings all sit in its bucket's partition, so the
+      // window needs no exchange of its own
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("bucket"), col("term"))))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
     // corpus stats from the index itself (column-pruned read; every doc
@@ -158,32 +157,38 @@ object TextSearch {
       .write.mode("overwrite").parquet(s"$indexDir/stats")
   }
 
-  /** BM25 top-k straight off the STORED postings index
-    * ([[writePostingsIndex]]): the postings scan prunes to the query
-    * terms' bucket partitions, per-term df is recomputed from exactly
-    * the matching rows, and the scoring tail is [[bm25Score]] — scores
-    * are bit-identical to [[bm25TopK]] over the same corpus. This is
-    * the serving read: cost scales with the queried terms' posting
-    * lists, not the corpus. Resolves `indexDir` on every call, so a
-    * growing (streamed) index is read as it stands now. */
+  /** BM25 top-k straight off a stored postings index at `indexDir`, in
+    * either layout: [[writePostingsIndex]]'s or the streamed `batch_run=`
+    * tree of [[graft.streaming.Streaming.incrementalPostingsSink]]. The
+    * postings scan prunes to the query terms' bucket partitions, per-term
+    * df is counted from exactly the matching rows (a streamed shard holds
+    * no global df), and the scoring tail is [[bm25Score]] — scores are
+    * bit-identical to [[bm25TopK]] over the same corpus. Cost scales with
+    * the queried terms' posting lists, not the corpus. Resolves
+    * `indexDir` on every call, so a growing (streamed) index is read as
+    * it stands now. */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, rawTerms: Seq[String], k: Int,
       nBuckets: Int = PostingsBuckets): DataFrame = {
-    val tfRows = indexedTfRows(spark.read.parquet(s"$indexDir/postings"), rawTerms, nBuckets)
+    val tfRows = matchingPostings(spark.read.parquet(s"$indexDir/postings"), rawTerms, nBuckets)
+      .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     val totals = summedStats(spark.read.parquet(s"$indexDir/stats"))
-    bm25Score(tfRows, _.crossJoin(broadcast(totals)), k)
+    bm25Score(countedDf(tfRows).crossJoin(broadcast(totals)), k)
   }
 
   /** [[bm25TopKIndexed]] over an already-resolved `postings` frame of a
-    * build-once index whose totals were read once ([[indexTotals]]) — the
-    * serving facade's per-corpus handle. The totals enter the plan as
-    * bound parameters, so a request runs no stats aggregate and no
-    * broadcast of it, and another corpus compiles no new class. */
+    * [[writePostingsIndex]] index whose totals were read once
+    * ([[indexTotals]]) — the serving facade's per-corpus handle. Each
+    * row brings its term's stored `df`, and the totals enter the plan as
+    * bound parameters, so a request is one pruned postings scan: no
+    * per-term aggregate, no stats aggregate, no broadcast, and another
+    * corpus compiles no new class. */
   def bm25TopKIndexed(postings: DataFrame, nDocs: Long, sdl: Long,
       rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame = {
     import graft.functions.NativeExpressions.longParam
-    bm25Score(indexedTfRows(postings, rawTerms, nBuckets),
-      _.select(col("*"), longParam(nDocs).as("n_docs"), longParam(sdl).as("sdl")), k)
+    bm25Score(matchingPostings(postings, rawTerms, nBuckets)
+      .select(col("doc_id"), col("dl"), col("term"), col("tf"), col("df"),
+        longParam(nDocs).as("n_docs"), longParam(sdl).as("sdl")), k)
   }
 
   /** The BM25 totals `(n_docs, sdl)` of a stored index's stats table, in
@@ -201,16 +206,14 @@ object TextSearch {
   private def summedStats(stats: DataFrame): DataFrame =
     stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("sdl")).as("sdl"))
 
-  /** A stored index's matching (doc_id, dl, term, tf) rows: the scan
-    * prunes to the query terms' bucket partitions. */
-  private def indexedTfRows(postings: DataFrame, rawTerms: Seq[String],
+  /** A stored index's postings of the query terms: the scan prunes to
+    * the terms' bucket partitions. */
+  private def matchingPostings(postings: DataFrame, rawTerms: Seq[String],
       nBuckets: Int): DataFrame = {
     val terms = rawTerms.distinct // same contract as bm25TopK
     require(terms.nonEmpty && terms.size <= 64, "bag-of-terms query expected")
     val bucketIds = terms.map(bucketId(_, nBuckets)).distinct
-    postings
-      .filter(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
-      .select(col("doc_id"), col("dl"), col("term"), col("tf"))
+    postings.filter(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
   }
 
   /** A term's postings bucket, `pmod(xxhash64(term), nBuckets)` as
@@ -289,8 +292,8 @@ object TextSearch {
     * filtered by the broadcast term set BEFORE any exchange, so only
     * positions of query terms shuffle — keyed by (query, doc, start) —
     * and the aggregate is map-side partial. At 100 TB with a
-    * term-bucketed stored postings table (sources.Bucketing, the
-    * `postings` layout above) the probe prunes to the query terms'
+    * term-bucketed stored postings table (the [[writePostingsIndex]]
+    * layout, with positions) the probe prunes to the query terms'
     * buckets and the explode disappears entirely.
     *
     * Output: (query, doc, n_hits, first_pos) per matching doc. */

@@ -164,9 +164,10 @@ object ClusterArtifacts {
     * stored term-bucketed index via `bm25TopKIndexed` (proven
     * score-bit-equal to the corpus-rescan `bm25TopK`): the index builds
     * once per corpus and every consumer's lexical path scans postings
-    * buckets, never the corpus text column. */
+    * buckets, never the corpus text column. `v2`: every posting carries
+    * its term's `df`, which the serving handle reads. */
   def postingsIndex(spark: SparkSession, dir: String): String =
-    Tables.buildOnce("graft_postings_index", dir, "bm25_b64_v1") { out =>
+    Tables.buildOnce("graft_postings_index", dir, "bm25_b64_v2") { out =>
       graft.ops.TextSearch.writePostingsIndex(
         Tables.documents(spark, dir), "doc_id", "text", out)
     }

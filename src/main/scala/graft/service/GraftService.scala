@@ -61,12 +61,14 @@ import graft.streaming.Streaming
   * per-corpus constants: the BM25 totals `(n_docs, sdl)` of the postings
   * index and the IVF centroid rows `(cell, cv)`, held on the driver (k ×
   * dim longs; 8 × 64 here). A request then plans only its own data: the
-  * totals enter the lexical ranking as bound parameters, and the probe's
-  * nearest cells are ranked on the driver, so the IVF read is a static
-  * partition filter. The immutable-corpus contract of the build-once
-  * artifacts covers the handles too: a mutated corpus needs a restarted
-  * service. A streamed index (`/similar?indexDir=&centroidsDir=`) grows,
-  * so it and its centroids are read on every request.
+  * lexical ranking is one pruned postings scan, each posting bringing
+  * its term's stored `df` and the totals entering as bound parameters,
+  * and the probe's nearest cells are ranked on the driver, so the IVF
+  * read is a static partition filter. The immutable-corpus contract of
+  * the build-once artifacts covers the handles too: a mutated corpus
+  * needs a restarted service. A streamed index
+  * (`/similar?indexDir=&centroidsDir=`) grows, so it and its centroids
+  * are read on every request.
   */
 final class GraftService private (spark: SparkSession, server: HttpServer,
     pool: ExecutorService, pathRoots: Seq[String]) {
@@ -207,8 +209,9 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
         // lexical = q45 BM25 + q143 snippets; hybrid = the q114 RRF
         // fusion, snippets attached the same way. The LEXICAL ranking is
         // served from the STORED term-bucketed postings index (built once
-        // per corpus dir, lazily): the request's scan prunes to the query
-        // terms' bucket partitions, and the BM25 totals are the handle's
+        // per corpus dir, lazily): the request reads its terms' postings
+        // once, a scan pruned to their bucket partitions whose rows carry
+        // each term's stored df, and the BM25 totals are the handle's
         // constants. Rows are identical to the q143/q114 oracles
         // (bm25TopKIndexed is score-bit-equal to bm25TopK). The snippets
         // still read corpus text: the join of the ranked page to

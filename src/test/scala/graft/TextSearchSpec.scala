@@ -49,17 +49,66 @@ class TextSearchSpec extends SparkSpec {
     assert(d23 < 2 * d12, s"saturating gains expected: $res")
   }
 
-  test("postings + termStats form a consistent inverted index") {
-    val p = TextSearch.postings(corpus, "doc_id", "text").cache()
-    val stats = TextSearch.termStats(p).collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(stats("spark") == ((3L, 5L)), s"spark df/total_tf: ${stats.get("spark")}")
-    assert(stats("vector") == ((2L, 3L)))
+  test("writePostingsIndex forms a consistent inverted index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_postings").toString
+    TextSearch.writePostingsIndex(corpus, "doc_id", "text", dir)
+    val p = spark.read.parquet(s"$dir/postings")
+    // df is stored on every posting of the term, so a term has one value
+    val stats = p.groupBy(col("term"))
+      .agg(collect_set(col("df")).as("df"), sum(col("tf")).as("total_tf")).collect()
+      .map(r => (r.getString(0), (r.getSeq[Long](1), r.getLong(2)))).toMap
+    assert(stats("spark") == ((Seq(3L), 5L)), s"spark df/total_tf: ${stats.get("spark")}")
+    assert(stats("vector") == ((Seq(2L), 3L)))
     // postings tf matches a direct recount for one (term, doc)
     val tf = p.filter(col("term") === "spark" && col("doc_id") === 1L)
       .select(col("tf")).collect().head.getLong(0)
     assert(tf == 3L)
-    p.unpersist()
+  }
+
+  test("a built index stores on every posting its term's df: the number of postings of the term") {
+    val p = spark.read.parquet(
+      s"${graft.queries.ClusterArtifacts.postingsIndex(spark, sf())}/postings")
+    val counted = p.groupBy(col("term")).agg(count(lit(1)).as("n"))
+    val joined = p.join(counted, Seq("term"), "left_outer")
+    assert(joined.count() == p.count() && p.count() > 0)
+    assert(joined.filter(col("df").isNull || col("df") =!= col("n")).count() == 0,
+      "stored df differs from the term's posting count")
+  }
+
+  test("stored-df handle, counted-df path overload and the corpus scan rank bit-identically") {
+    import spark.implicits._
+    import graft.queries.{ClusterArtifacts, TextQueries}
+    val docs = graft.sources.Tables.documents(spark, sf())
+    val idx = ClusterArtifacts.postingsIndex(spark, sf())
+    val postings = spark.read.parquet(s"$idx/postings")
+    val (nDocs, sdl) = TextSearch.indexTotals(spark.read.parquet(s"$idx/stats"))
+    val vocab = docs.select(explode(split(col("text"), " ")).as("t"))
+      .groupBy(col("t")).agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("t").asc).as[(String, Long)].collect().map(_._1).toSeq
+    // the fixture has fewer than 64 distinct words: the 64-term bag pads
+    // with absent terms
+    val bag64 = (vocab ++ (1 to 64).map("zz" + _)).take(64)
+    assert(bag64.distinct.size == 64)
+    val sameBucket = vocab.groupBy(TextSearch.bucketId(_, TextSearch.PostingsBuckets))
+      .values.map(_.take(2)).find(_.size == 2).get
+    val absent = "zz_not_in_corpus"
+    val bags = Seq(
+      "standard bag" -> TextQueries.Bm25Terms,
+      "one term" -> Seq(vocab.head),
+      "two terms in one bucket" -> sameBucket,
+      "an absent term" -> Seq(absent),
+      "an absent and a present term" -> Seq(absent, vocab(1)),
+      "a repeated term" -> Seq(vocab(2), vocab(3), vocab(2)),
+      "64 terms" -> bag64)
+    bags.foreach { case (name, terms) =>
+      val handle = TextSearch.bm25TopKIndexed(postings, nDocs, sdl, terms, 100,
+        TextSearch.PostingsBuckets).collect().toSeq
+      val path = TextSearch.bm25TopKIndexed(spark, idx, terms, 100).collect().toSeq
+      val scan = TextSearch.bm25TopK(docs, "doc_id", "text", terms, 100).collect().toSeq
+      assert(handle == scan, s"$name: handle vs corpus scan")
+      assert(path == scan, s"$name: path overload vs corpus scan")
+      assert(scan.nonEmpty == terms.exists(vocab.contains), s"$name: ${scan.size} rows")
+    }
   }
 
   test("tfidf keyphrases: integer scores, statistical stopword cut, tie-breaks") {
