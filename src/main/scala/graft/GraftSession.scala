@@ -72,8 +72,8 @@ object GraftSession {
       .config("spark.speculation", "true")
       .config("spark.speculation.multiplier", "3")
       .config("spark.speculation.quantile", "0.75")
-      // bucketed-table layouts (sources.Bucketing) need a writable
-      // warehouse; keep it out of the working tree
+      // the in-memory catalog creates its default-database directory in
+      // the warehouse; keep it out of the working tree
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
 
@@ -127,30 +127,24 @@ object GraftSession {
     if (spark.conf.get("spark.sql.shuffle.partitions") == "200")
       spark.conf.set("spark.sql.shuffle.partitions",
         math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    // Optimizer upgrade for plain `max_by`: rewrite to the hash-aggregable
-    // native argmax (see graft.plans.RewriteMaxBy). extraOptimizations is
-    // runtime-mutable, so vanilla sessions get it too; guard against
+    // Optimizer upgrades: plain `max_by` becomes the hash-aggregable
+    // native argmax (graft.plans.RewriteMaxBy), and a `levenshtein`
+    // compared against a literal becomes the banded kernel
+    // (graft.plans.RewriteBoundedLevenshtein). extraOptimizations is
+    // runtime-mutable, so vanilla sessions get them too; guard against
     // double registration on repeated ensure calls.
     //
     // API NOTE (session-wide side effect): this mutates the optimizer of
     // the WHOLE session, including queries a library user runs outside
-    // graft — semantics are preserved (same winners modulo max_by's
-    // documented tie nondeterminism; -0.0/0.0 orderings tie exactly like
-    // Spark SQL comparison, see ArgMaxByOrd.cmp), but a user who wants a
-    // pristine optimizer can set spark.graft.rewriteMaxBy=false before
-    // the first graft call.
-    val rewriteEnabled = spark.conf
-      .getOption("spark.graft.rewriteMaxBy").forall(_.toBoolean)
-    if (rewriteEnabled &&
-        !spark.experimental.extraOptimizations.contains(graft.plans.RewriteMaxBy))
+    // graft. Semantics are preserved: max_by keeps the same winners
+    // modulo its documented tie nondeterminism (-0.0/0.0 orderings tie
+    // exactly like Spark SQL comparison, see ArgMaxByOrd.cmp), and the
+    // bounded distance decides every comparison against k exactly as
+    // the full one does.
+    for (rule <- Seq(graft.plans.RewriteMaxBy, graft.plans.RewriteBoundedLevenshtein)
+         if !spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteMaxBy
-    val boundedLevEnabled = spark.conf
-      .getOption("spark.graft.rewriteBoundedLev").forall(_.toBoolean)
-    if (boundedLevEnabled && !spark.experimental.extraOptimizations
-        .contains(graft.plans.RewriteBoundedLevenshtein))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteBoundedLevenshtein
+        spark.experimental.extraOptimizations :+ rule
     spark
   }
 }

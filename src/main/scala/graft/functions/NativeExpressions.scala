@@ -273,46 +273,6 @@ object NativeExpressions {
       copy(left = l, right = r)
   }
 
-  /** ALL prefix-truncation cosines of two quantized long vectors in ONE
-    * pass — the Matryoshka-retrieval kernel (q209): running integer
-    * partials (dot, |a|², |b|²) snapshot a cosine at each cut point, so
-    * four truncation widths cost one traversal of the longest prefix
-    * instead of Σ cuts (8+16+32+64 = 120 element-multiplies → 64).
-    * Each emitted cosine is BIT-IDENTICAL to `LongCosine(slice(a, 1, cut),
-    * slice(b, 1, cut))`: the partial sums at element `cut` are the same
-    * exact longs a sliced evaluation would accumulate, and the final
-    * divide is the same double expression. Cuts must be ascending and
-    * within both arrays (a cut past the shorter array snapshots at its
-    * end — same min-length contract as LongCosine). */
-  case class PrefixLongCosines(left: Expression, right: Expression, cuts: Seq[Int])
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
-    require(cuts.nonEmpty && cuts == cuts.sorted && cuts.forall(_ >= 1),
-      s"ascending positive cut points expected, got $cuts")
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val va = a.asInstanceOf[ArrayData]
-      val vb = b.asInstanceOf[ArrayData]
-      val n = math.min(va.numElements(), vb.numElements())
-      val out = new Array[Double](cuts.size)
-      var dot = 0L; var na = 0L; var nb = 0L
-      var i = 0; var c = 0
-      while (c < cuts.size) {
-        val cut = math.min(cuts(c), n)
-        while (i < cut) {
-          val x = va.getLong(i)
-          val y = vb.getLong(i)
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        out(c) = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-        c += 1
-      }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): PrefixLongCosines =
-      copy(left = l, right = r)
-  }
-
   /** Cosine similarity of two float arrays in one primitive pass —
     * replaces the triple interpreted `aggregate(zip_with(...))` in
     * verification-heavy paths. */
@@ -1081,7 +1041,7 @@ object NativeExpressions {
     * cost of the query (measured 17 of 20 s at the 50× probe). A
     * TypedImperativeAggregate under ObjectHashAggregateExec keeps ONE
     * bounded heap per (probe, width) — update is an O(64) fused-cosine
-    * pass (the PrefixLongCosines running-partials loop inlined) plus an
+    * pass (running integer partials snapshot a cosine at each cut) plus an
     * O(k) ordered insert, map-side partials mean only O(groups · C · k)
     * rows ever cross the wire, and nothing is sorted. At 100 TB the
     * shuffle is |probes| buffers regardless of corpus size.
@@ -1155,8 +1115,9 @@ object NativeExpressions {
       val vb = p.asInstanceOf[ArrayData]
       val id = idv.asInstanceOf[Long]
       val n = math.min(va.numElements(), vb.numElements())
-      // PrefixLongCosines' running-partials loop, fused with the heap
-      // offers — bit-identical snapshots at each cut.
+      // running integer partials (dot, |a|², |b|²), fused with the heap
+      // offers — each cut's snapshot is bit-identical to the sliced
+      // LongCosine.
       var dot = 0L; var na = 0L; var nb = 0L
       var i = 0; var c = 0
       while (c < cuts.size) {
@@ -1490,10 +1451,6 @@ object NativeExpressions {
     * their UTF-8 bytes, matching `md5(CAST(x AS BLOB))` on the SQL side). */
   def hash60(c: Column): Column =
     ColumnBridge.column(Hash60(ColumnBridge.expression(c.cast("binary"))))
-
-  def prefixLongCosines(a: Column, b: Column, cuts: Seq[Int]): Column =
-    ColumnBridge.column(PrefixLongCosines(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), cuts))
 
   /** Grouped sort-free top-k per prefix-truncation width — see PrefixTopKAgg. */
   def prefixTopK(qv: Column, pqv: Column, id: Column, cuts: Seq[Int], k: Int): Column =

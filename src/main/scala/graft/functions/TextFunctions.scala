@@ -59,12 +59,9 @@ object TextFunctions {
   /** Heuristic quality score in [0,1]: length saturation, lexical
     * diversity, non-numeric share, word-length saturation. All four
     * components are ratios of exact integers, so the double result is
-    * bit-reproducible. Rounded to 6 decimals for stable presentation. */
-  def qualityScore(text: Column): Column = round(qualityScoreRaw(text), 6)
-
-  /** Unrounded score — use with integer micro-scaling for cross-engine
-    * exactness (rounding a double at decimal scale N is a half-ulp
-    * hazard; scale-0 rounding of the ×1e6 value is not). */
+    * bit-reproducible. Unrounded — use with integer micro-scaling for
+    * cross-engine exactness (rounding a double at decimal scale N is a
+    * half-ulp hazard; scale-0 rounding of the ×1e6 value is not). */
   def qualityScoreRaw(text: Column): Column = {
     val toks = tokens(text)
     val n = size(toks).cast("double")

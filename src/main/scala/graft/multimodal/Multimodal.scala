@@ -83,26 +83,6 @@ object Multimodal {
     }
   }
 
-  /** Transcode step shape: payload → payload with updated metadata. The
-    * codec is STUBBED (no image/audio libs in this container); the Spark
-    * plumbing — typed map, metadata propagation, partition batching — is
-    * real. A real `resize` swaps `transform` for an imaging call. */
-  trait MediaTransform extends Serializable {
-    def name: String
-    def transform(payload: Array[Byte], meta: MediaMeta): (Array[Byte], MediaMeta)
-  }
-
-  /** STUB resize: marks the metadata with the target box and truncates the
-    * payload deterministically (stand-in for a real scaled re-encode). */
-  class StubResize(maxW: Int, maxH: Int) extends MediaTransform {
-    override def name: String = s"resize-${maxW}x$maxH"
-    override def transform(payload: Array[Byte], meta: MediaMeta): (Array[Byte], MediaMeta) = {
-      val scale = math.min(1.0, maxW.toDouble / math.max(1, meta.width max 1))
-      val keep = math.max(1, (payload.length * scale).toInt)
-      (payload.take(keep), meta.copy(width = maxW min (meta.width max 1), height = maxH min (meta.height max 1)))
-    }
-  }
-
   /** STUB frame sampling: every `stride`-th byte window as a "frame" —
     * the shape (1 media row → N frame rows with ordinals) is the real
     * part; a real sampler decodes the container instead. */
@@ -116,26 +96,12 @@ object Multimodal {
     }.toDF("media_id", "frame_idx", "frame", "mime")
   }
 
-  def applyTransform(spark: SparkSession, media: DataFrame,
-      t: MediaTransform): DataFrame = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        val (p2, m2) = t.transform(r.payload, r.meta)
-        MediaRecord(r.media_id, p2, m2)
-      }
-    }.toDF()
-  }
-
   // ------------------------------------------------- REAL image codec
 
   /** REAL image path — `javax.imageio` ships IN the JDK, so PNG
-    * decode/encode and resize run through an actual lossless codec even
-    * in this no-external-libs container; only exotic media (video
-    * containers, audio codecs) stay behind the stub decoder. Everything
-    * here is deterministic: PNG round-trips pixel-exact, and the resize
-    * uses nearest-neighbour AffineTransformOp (integer sampling — no
-    * renderer-dependent filtering). */
+    * decode/encode run through an actual lossless codec with no external
+    * libraries; only exotic media codecs stay behind the stub decoder.
+    * Everything here is deterministic: PNG round-trips pixel-exact. */
   object ImageCodec extends MediaDecoder {
 
     // ImageIO defaults to a DISK-backed stream cache: every encode/decode
@@ -340,34 +306,6 @@ object Multimodal {
     }
   }
 
-  /** REAL resize: decode → nearest-neighbour scale into the target box
-    * (aspect preserved) → PNG re-encode. Deterministic integer pixel
-    * sampling; swaps in for StubResize wherever a MediaTransform goes. */
-  class PngResize(maxW: Int, maxH: Int) extends MediaTransform {
-    override def name: String = s"png-resize-${maxW}x$maxH"
-    override def transform(payload: Array[Byte], meta: MediaMeta): (Array[Byte], MediaMeta) = {
-      val img = ImageCodec.decode(payload)
-      val scale = math.min(1.0,
-        math.min(maxW.toDouble / img.getWidth, maxH.toDouble / img.getHeight))
-      val (w2, h2) = (math.max(1, (img.getWidth * scale).toInt),
-        math.max(1, (img.getHeight * scale).toInt))
-      // hand-rolled integer nearest-neighbour sampling (AffineTransformOp
-      // is renderer-dependent and refuses some src/dst type pairs; this is
-      // exact integer math, identical on any JVM)
-      val out = new java.awt.image.BufferedImage(w2, h2,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h2) {
-        var x = 0
-        while (x < w2) {
-          out.setRGB(x, y, img.getRGB(x * img.getWidth / w2, y * img.getHeight / h2))
-          x += 1
-        }
-        y += 1
-      }
-      (ImageCodec.encodePng(out), meta.copy(width = w2, height = h2))
-    }
-  }
 }
 
 /** Kernel output row for ImageCodec.allStats: every per-image feature

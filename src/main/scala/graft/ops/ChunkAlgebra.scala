@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model.{Chunk, ChunkType}
 
@@ -21,11 +20,8 @@ object ChunkCommandOp {
   * reference: pipeline/src/main/kotlin/chunks/sequence_management.kt:5-27,
   * tested by unittests/SequenceTests.kt:8-41.
   *
-  * Two forms:
-  *   - column form over an ordered ArrayType column (slice/concat —
-  *     codegen-friendly, for use inside DataFrame plans);
-  *   - Scala form over Seq[T] (for the typed fold of a chunk-command log
-  *     inside mapGroups / Aggregators).
+  * Scala form over Seq[T]: the typed fold of a chunk-command log
+  * (`foldCommandLog`, inside mapGroups) applies it per document.
   *
   * Indices are 0-based like the reference's. Out-of-bounds `update` is a
   * no-op (sequence_management.kt:14-17); `merge` collapses [from,to] into
@@ -51,32 +47,6 @@ object ChunkAlgebra {
   def removeAt[T](xs: Seq[T], i: Int): Seq[T] =
     if (i < 0 || i >= xs.length) xs
     else xs.take(i) ++ xs.drop(i + 1)
-
-  // --------------------------------------------------------- column form
-
-  /** 0-based insert into an array column (out-of-range appends at the
-    * clamped position, mirroring Seq-form semantics for valid i). */
-  def insertAtCol(arr: Column, i: Int, x: Column): Column =
-    concat(slice(arr, 1, i), array(x), slice(arr, lit(i + 1), size(arr)))
-
-  def updateAtCol(arr: Column, i: Int, x: Column): Column =
-    when(size(arr) > i,
-      concat(slice(arr, 1, i), array(x), slice(arr, lit(i + 2), size(arr))))
-      .otherwise(arr)
-
-  def removeAtCol(arr: Column, i: Int): Column =
-    when(size(arr) > i,
-      concat(slice(arr, 1, i), slice(arr, lit(i + 2), size(arr))))
-      .otherwise(arr)
-
-  /** Merge [from,to] (0-based, inclusive) of a string array into one
-    * space-joined element. */
-  def mergeRangeCol(arr: Column, from: Int, to: Int): Column =
-    when(size(arr) > to && lit(from) <= lit(to),
-      concat(slice(arr, 1, from),
-        array(concat_ws(" ", slice(arr, from + 1, to - from + 1))),
-        slice(arr, lit(to + 2), size(arr))))
-      .otherwise(arr)
 
   // ------------------------------------------------------ command-log fold
 

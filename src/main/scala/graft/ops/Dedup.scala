@@ -21,15 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // ---------------------------------------------------------------- exact
-
-  /** Exact dedup groups by content digest: one shuffle on the hash.
-    * Returns (digest, n_docs, keep_id = min id). */
-  def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.withColumn("digest", md5(col(textCol).cast("binary")))
-      .groupBy(col("digest"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
-
   // ------------------------------------------------------------- shingles
 
   /** Distinct word n-gram shingles; documents shorter than n collapse to a

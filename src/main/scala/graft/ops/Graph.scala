@@ -270,14 +270,6 @@ object Graph {
     out
   }
 
-  /** Degree distribution summary of an undirected edge set — the
-    * pre-flight skew probe for any graph workload (a power-law hub is
-    * exactly what maxBucket/salting guard against downstream). */
-  def degreeStats(undirectedEdges: DataFrame): DataFrame =
-    undirectedEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("n_halfedges"),
-        max(col("deg")).as("max_deg"), min(col("deg")).as("min_deg"))
-
   /** Synchronous label propagation (Raghavan et al. 2007) over an
     * UNDIRECTED edge set — community detection as iterated neighbor
     * majority vote: every node starts labeled with its own id; each

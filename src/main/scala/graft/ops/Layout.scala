@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Physical-layout operators — the write-side companion to Bucketing.
+/** Physical-layout keys.
   *
   * Z-ordering interleaves the bits of two dimension keys so that rows
   * close in BOTH dimensions land close in the sort order. Written with
@@ -34,23 +34,5 @@ object Layout {
       shiftleft(shiftright(a.cast("long"), i).bitwiseAND(lit(1L)), 2 * i) +
         shiftleft(shiftright(b.cast("long"), i).bitwiseAND(lit(1L)), 2 * i + 1)
     }.reduce(_ + _)
-  }
-
-  /** Even (dim 0 = `a`) / odd (dim 1 = `b`) de-interleave — the inverse
-    * of [[zorder2]], used by the round-trip spec. */
-  def zorderDim(z: Column, dim: Int, bits: Int = 20): Column =
-    (0 until bits).map { i =>
-      shiftleft(shiftright(z, 2 * i + dim).bitwiseAND(lit(1L)), i)
-    }.reduce(_ + _)
-
-  /** Write-shaped transform: append the z-key and range-partition+sort by
-    * it, ready for `.write.parquet` — each output file then covers a
-    * narrow rectangle of (a, b) space. */
-  def zorderBy(df: DataFrame, a: String, b: String, bits: Int = 20,
-      numFiles: Int = 0): DataFrame = {
-    val keyed = df.withColumn("zkey", zorder2(col(a), col(b), bits))
-    val parts = if (numFiles > 0) numFiles
-      else df.sparkSession.sparkContext.defaultParallelism
-    keyed.repartitionByRange(parts, col("zkey")).sortWithinPartitions(col("zkey"))
   }
 }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * nightly over a snapshot table.
   *
   * Scale shape: both sides hash-partition on the key and meet in a
-  * single shuffle (or zero shuffles if both are bucketed on the key —
-  * sources.Bucketing); no driver-side lookups, no per-row point reads.
+  * single shuffle (or zero shuffles if both are bucketed on the key);
+  * no driver-side lookups, no per-row point reads.
   * At 100 TB the change set is usually ≪ base, and AQE turns the join
   * into a broadcast automatically when it fits.
   */

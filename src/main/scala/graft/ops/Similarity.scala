@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
   * BASELINE.json north-star.
   *
   * Three tiers:
-  *   1. `cosine` / `bruteForceTopK` — exact, scan-everything baseline.
-  *      At 100 TB this is a single narrow map + TakeOrdered (per-partition
-  *      top-k, tiny reduce) per query vector; fine for few queries.
-  *   2. `quantizedCosine` — the same computation on floor(x*1000) BIGINTs:
-  *      exact integer dot/norms, so results are engine-reproducible (used
-  *      by the DuckDB-checked query surface).
-  *   3. `hyperplaneLsh*` — random-hyperplane signatures: candidate
-  *      generation becomes an equi-join on the signature bucket, the
-  *      scale path for all-pairs / many-query workloads.
+  *   1. `cosine` / `quantizedCosine` — exact pairwise similarity; the
+  *      quantized form runs on floor(x*1000) BIGINTs with exact integer
+  *      dot/norms, so results are engine-reproducible (used by the
+  *      DuckDB-checked query surface).
+  *   2. `lshNearDupPairs` — sign-projection signatures: all-pairs
+  *      candidate generation becomes a bounded grouping per signature
+  *      bucket, the scale path for near-dup pairs.
+  *   3. `ivfExact*` — an integer-exact IVF index: queries probe the
+  *      nearest cells only, and an index written partitioned by cell
+  *      prunes the unprobed ones at the scan.
   */
 object Similarity {
 
@@ -39,17 +40,6 @@ object Similarity {
     val nb = aggregate(transform(qb, x => x * x), lit(0L), _ + _).cast("double")
     dot / (sqrt(na) * sqrt(nb))
   }
-
-  /** Exact top-k neighbours of one query vector (given as a 1-row frame
-    * with column `q`). Broadcast of the single-row side + TakeOrdered —
-    * no shuffle of the corpus. */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      query: DataFrame, k: Int): DataFrame =
-    corpus.crossJoin(broadcast(query))
-      .withColumn("cosine", cosine(col(vecCol), col("q")))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
 
   /** All-pairs near-neighbour candidates via multi-table sign-projection
     * LSH: `tables` independent sign signatures of `planes` Rademacher
@@ -138,91 +128,11 @@ object Similarity {
         }).as("codes"))
   }
 
-  // ------------------------------------------------------------- IVF-Flat
-
-  /** IVF centroids: deterministic pseudo-random corpus sample (order by
-    * xxhash64 of the id) refined by `iters` Lloyd iterations (per-cell
-    * elementwise mean of assigned vectors, max-cosine assignment). Returns
-    * (cell, cv: array<float>).
-    *
-    * Scale: each Lloyd iteration is one narrow assignment pass (broadcast
-    * centroids, zero shuffle) + one aggregation over (cell, pos) rows —
-    * the standard distributed k-means step. Empty cells keep their previous
-    * centroid. */
-  def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int = 2): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    var cents = corpus
-      .orderBy(xxhash64(col(idCol)))
-      .limit(k)
-      .select(col(idCol).as("cell"), col(vecCol).as("cv"))
-    for (_ <- 0 until iters) {
-      val means = assignCells(vecs, cents)
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cell"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cell"),
-          transform(col("pm"), p => p.getField("m").cast("float")).as("mv"))
-      // empty cells fall back to their previous centroid (left join)
-      cents = cents.join(means, Seq("cell"), "left_outer")
-        .select(col("cell"), coalesce(col("mv"), col("cv")).as("cv"))
-        // tiny (k rows) — materialize so the lineage doesn't re-run
-        // assignment passes per downstream consumer
-        .localCheckpoint(true)
-    }
-    cents
-  }
-
-  /** Max-cosine cell assignment with ZERO shuffle: centroids collapse to a
-    * single broadcast array-of-structs row, and the argmax is a per-row
-    * array_max over struct(sim, -cell) — highest cosine, ties to the
-    * lowest cell id. (A row_number window here would shuffle+sort
-    * corpus×k rows just to take an argmax.) Returns (id, v, cell). */
-  private def assignCells(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    val centArr = broadcast(
-      centroids.agg(collect_list(struct(col("cell"), col("cv"))).as("cents")))
-    vecs.crossJoin(centArr)
-      .withColumn("best", array_max(transform(col("cents"), c => struct(
-        graft.functions.NativeExpressions.cosineSim(col("v"), c.getField("cv")).as("sim"),
-        (-c.getField("cell")).as("negcell")))))
-      .select(col("id"), col("v"), (-col("best.negcell")).as("cell"))
-  }
-
-  /** IVF cell assignment for the full corpus against pre-built centroids
-    * (build them once with `ivfCentroids` and share with `ivfTopK` — means
-    * are FP-order-dependent, so re-deriving would risk a divergent index).
-    * Returns (id, v, cell) — at 100 TB this is what gets written
-    * partitioned/bucketed by `cell`. */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame): DataFrame =
-    assignCells(corpus.select(col(idCol).as("id"), col(vecCol).as("v")), centroids)
-
-  /** IVF top-k: probe the `nProbe` cells whose centroids are nearest the
-    * query, exact-cosine only within those cells. At 100 TB the index is
-    * written partitioned by `cell`, so probing prunes partitions at the
-    * source — the scan touches nProbe/k of the corpus. `centroids` must be
-    * the same frame the index was assigned with. */
-  def ivfTopK(index: DataFrame, centroids: DataFrame,
-      query: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val probed = centroids.crossJoin(broadcast(query))
-      .withColumn("sim", graft.functions.NativeExpressions.cosineSim(col("cv"), col("q")))
-      .orderBy(col("sim").desc, col("cell").asc)
-      .limit(nProbe)
-      .select(col("cell"))
-    index.join(broadcast(probed), Seq("cell"))
-      .crossJoin(broadcast(query))
-      .withColumn("cosine", graft.functions.NativeExpressions.cosineSim(col("v"), col("q")))
-      .select(col("id"), col("cosine"))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .limit(k)
-  }
-
   // --------------------------------------- integer-exact IVF (oracle path)
 
-  /** The float `ivfCentroids` means are FP-summation-order-dependent, so
-    * that index can only ever be recall-checked. This variant is built so
-    * an independent engine replays the WHOLE index bit-for-bit: vectors
+  /** IVF centroids built so an independent engine replays the WHOLE
+    * index bit-for-bit (float Lloyd means are FP-summation-order-dependent
+    * and could only ever be recall-checked): vectors
     * quantized to floor(x·1000) longs, seeds picked by the portable md5
     * hash of the id, and centroids kept as per-cell component SUMS —
     * cosine is scale-invariant, so argmax-cosine against a sum-centroid is
@@ -322,8 +232,9 @@ object Similarity {
           col("code").cast("long"), -col("d2"), -col("code").cast("long")).as("code"),
         min(col("d2")).as("d2"))
 
-  /** Integer-exact IVF probe: same partition-pruning shape as `ivfTopK`
-    * but every number on the way to the ranking is engine-reproducible.
+  /** Integer-exact IVF probe: rank the `nProbe` cells whose centroids
+    * are nearest the query, then exact cosine only within those cells —
+    * every number on the way to the ranking is engine-reproducible.
     * `query` is a 1-row frame with a QUANTIZED vector column `q`. */
   def ivfExactTopK(index: DataFrame, centroids: DataFrame,
       query: DataFrame, k: Int, nProbe: Int): DataFrame = {

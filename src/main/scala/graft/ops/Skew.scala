@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation by key salting — for the joins AQE's runtime skew
@@ -34,17 +34,4 @@ object Skew {
     salted(big, uniqueCol, buckets)
       .join(replicated(even, buckets), Seq(key, "salt"))
       .drop("salt")
-
-  /** Two-stage salted aggregation for counts/sums skewed on the group
-    * key: partial agg on (key, salt), final agg on key. Spark's map-side
-    * partial aggregation usually makes this unnecessary — it is the
-    * explicit form for high-cardinality-payload aggregates (collect-like)
-    * where map-side combine can't shrink the hot key. */
-  def saltedCount(df: DataFrame, key: String, uniqueCol: String,
-      buckets: Int = 16): DataFrame =
-    salted(df, uniqueCol, buckets)
-      .groupBy(col(key), col("salt"))
-      .agg(count(lit(1)).as("partial_n"))
-      .groupBy(col(key))
-      .agg(sum(col("partial_n")).as("n"))
 }

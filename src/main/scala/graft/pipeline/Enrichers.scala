@@ -90,10 +90,4 @@ object Enrichers {
       }
     }
   }
-
-  /** The reference's rogue-producer test double (A19). */
-  class RogueEnricher(override val name: String = "rogue") extends Enricher {
-    override def values(record: DataRecord): Map[String, String] =
-      throw new RuntimeException("rogue producer")
-  }
 }

@@ -43,7 +43,7 @@ object StandardEnrichers {
   }
 
   /** Quality score ×1e6 as integer string (engine-exact; mirror of
-    * TextFunctions.qualityScore). Requires language detection first —
+    * TextFunctions.qualityScoreRaw). Requires language detection first —
     * exercising the dependency ordering (any real scorer gates on lang). */
   class QualityEnricher(resolver: ContentResolver = ContentResolver.default) extends Enricher {
     override def name: String = "quality"
@@ -180,7 +180,7 @@ object StandardEnrichers {
   }
 
   /** round(quality*1e6) with the exact double op order of
-    * TextFunctions.qualityScore / the q17 SQL. */
+    * TextFunctions.qualityScoreRaw / the q17 SQL. */
   def qualityMicro(text: String): Long = {
     val toks = text.split(" ", -1)
     val n = toks.length.toDouble

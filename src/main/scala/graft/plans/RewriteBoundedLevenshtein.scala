@@ -29,8 +29,8 @@ import graft.functions.NativeExpressions.BoundedLevenshtein
   * the built-in).
   *
   * Registered next to [[RewriteMaxBy]] via
-  * `spark.experimental.extraOptimizations` (GraftSession); disable with
-  * spark.graft.rewriteBoundedLev=false. */
+  * `spark.experimental.extraOptimizations` on every session
+  * `GraftSession.ensureRuntimeConfs` sees. */
 object RewriteBoundedLevenshtein extends Rule[LogicalPlan] {
 
   private def plainLev(e: Expression): Option[(Expression, Expression)] = e match {

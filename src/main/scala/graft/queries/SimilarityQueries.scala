@@ -584,8 +584,7 @@ object SimilarityQueries {
     * path (index stored partitioned by cell ⇒ scan touches nProbe/cells of
     * the corpus). The DuckDB oracle replays the ENTIRE index build —
     * seeding, assignment, Lloyd update, probe, ranking — bit-for-bit.
-    * (The float ivfCentroids path stays for production use; its recall is
-    * asserted in DedupSimilaritySpec.) */
+    * (Its recall against exact top-k is asserted in DedupSimilaritySpec.) */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val cents = Similarity.ivfExactCentroids(emb, "vec_id", "embedding", k = 8, iters = 1)

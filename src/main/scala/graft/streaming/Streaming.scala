@@ -134,15 +134,6 @@ object Streaming {
         .option("startingOffsets", "earliest")
         .load())
 
-  /** RocksDB state-store provider — the 100 TB keyspace configuration for
-    * the stateful fold: state spills to local disk instead of living on
-    * the JVM heap, with changelog checkpointing to the checkpoint
-    * location. Set BEFORE starting the stateful query (the provider is
-    * bound at query start). The rocksdbjni jar ships with Spark. */
-  def useRocksDbStateStore(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   /** Streaming exact dedup: first event per key set wins, duplicate
     * arrivals within the watermark horizon are dropped and state for
     * expired keys is evicted — the stream-scale form of the A8 idempotency
@@ -152,137 +143,6 @@ object Streaming {
       watermark: String = "10 minutes"): DataFrame =
     df.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
-
-  /** Per-bucket state for streaming near-dup: ids seen in this LSH band
-    * bucket within the TTL horizon (capped at the degenerate-bucket
-    * bound) and, for the event-time variant, the max event time seen —
-    * the eviction clock must never move backward on out-of-order
-    * arrivals. */
-  case class BucketState(ids: Seq[Long], maxEventMs: Long = 0L)
-
-  /** Streaming NEAR-duplicate candidate detection — the stream-scale twin
-    * of `Dedup.minhashNearDupPairs`'s candidate stage: every arriving
-    * document's MinHash band hashes are checked against the ids seen in
-    * the same (band, band_hash) bucket within the state TTL, and each
-    * collision emits a candidate pair (earlier id, later id).
-    *
-    * Signatures come from the SAME row-local kernels as batch (word
-    * shingles → portable MinHash → band hashes), so streaming flags
-    * exactly the buckets batch would. State is one bounded id list per
-    * bucket: `maxBucket` caps degenerate buckets (boilerplate text at
-    * corpus scale — the streaming form of dropOversizedBuckets; ids
-    * beyond the cap neither emit nor enter state, and the cap is a
-    * DOCUMENTED recall bound, not a silent drop), and — when `stateTtl`
-    * is set — processing-time timeout evicts idle buckets, so state is
-    * O(active buckets), not O(stream length).
-    *
-    * `stateTtl` note: ProcessingTimeTimeout makes Spark schedule
-    * micro-batches CONTINUOUSLY so expirations fire promptly
-    * (FlatMapGroupsWithStateExec.shouldRunAnotherBatch) — correct for a
-    * production stream (set a real trigger interval), but it never
-    * settles under a bounded test source, so pass None there. Candidates
-    * may repeat across bands; dedupe/verify (exact Jaccard over re-joined
-    * shingles) composes per micro-batch downstream, as in batch. */
-  def nearDupCandidates(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-      maxBucket: Int = 1000,
-      stateTtl: Option[String] = Some("1 hour")): Dataset[(Long, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val banded = lshBanded(docs, idCol, textCol, shingleN, k, bands)
-      .as[(Long, Int, Long)]
-    val timeoutConf = if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    banded
-      .groupByKey { case (_, band, bh) => (band, bh) }
-      .flatMapGroupsWithState[BucketState, (Long, Long)](
-        OutputMode.Append, timeoutConf) {
-        (_: (Int, Long), rows: Iterator[(Long, Int, Long)], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val seen = state.getOption.map(_.ids).getOrElse(Seq.empty)
-            val (kept, pairs) = collidePairs(seen, rows.map(_._1).toSeq, maxBucket)
-            state.update(BucketState(seen ++ kept))
-            stateTtl.foreach(state.setTimeoutDuration)
-            pairs.iterator
-          }
-      }
-  }
-
-  /** The banding step both near-dup variants share: the batch kernels'
-    * word shingles → portable MinHash → LSH band hashes, one
-    * (id, carry…, band, band_hash) row per band. */
-  private def lshBanded(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, k: Int, bands: Int, carry: Column*): DataFrame = {
-    val rows = k / bands
-    require(bands * rows == k, "k must be divisible by bands")
-    val sig = graft.functions.NativeExpressions.portableMinHashSigs(
-      graft.ops.Dedup.wordShingles(col(textCol), shingleN), k)
-    docs.select(col(idCol).cast("long").as("id") +: carry :+
-        explode(graft.ops.Dedup.lshBands(sig, bands, rows)).as("b"): _*)
-      .select(col("*"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
-      .drop("b")
-  }
-
-  /** Shared per-bucket collision step for both near-dup variants: cap the
-    * arrivals against the bucket bound, then emit candidate pairs vs
-    * prior state AND among this batch's kept arrivals. Returns
-    * (kept arrivals, ordered pairs). */
-  private def collidePairs(seen: Seq[Long], arrivals: Seq[Long],
-      maxBucket: Int): (Seq[Long], Seq[(Long, Long)]) = {
-    // Set membership, not Seq.contains: a near-full bucket (maxBucket ids)
-    // meeting a large batch would otherwise pay O(|state|·|batch|)
-    // linear scans per trigger
-    val seenSet = seen.toSet
-    val fresh = arrivals.distinct.filterNot(seenSet)
-    val kept = fresh.take(math.max(maxBucket - seen.size, 0))
-    val vsSeen = for (n <- kept; s <- seen)
-      yield (math.min(n, s), math.max(n, s))
-    val within = for {
-      i <- kept.indices; j <- (i + 1) until kept.size
-    } yield (math.min(kept(i), kept(j)), math.max(kept(i), kept(j)))
-    (kept, vsSeen ++ within)
-  }
-
-  /** Event-time variant of `nearDupCandidates`: bucket state is evicted
-    * when the WATERMARK passes the bucket's last activity + `ttl`, so
-    * batches rerun only when the watermark advances (data-driven — unlike
-    * ProcessingTimeTimeout's continuous scheduling, this settles under a
-    * bounded source too) and eviction follows stream time through
-    * backfills and replays instead of wall-clock luck. Input must carry
-    * an event-time column `tsCol` (TimestampType). Semantics otherwise
-    * identical: collide on (band, band_hash) within the horizon, capped
-    * buckets, candidates may repeat across bands. */
-  def nearDupCandidatesEventTime(docs: DataFrame, idCol: String, textCol: String,
-      tsCol: String, ttlMs: Long = 3600000L, watermark: String = "10 minutes",
-      shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-      maxBucket: Int = 1000): Dataset[(Long, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val banded = lshBanded(docs.withWatermark(tsCol, watermark), idCol, textCol,
-        shingleN, k, bands, col(tsCol).as("ets"))
-      .as[(Long, java.sql.Timestamp, Int, Long)]
-    banded
-      .groupByKey { case (_, _, band, bh) => (band, bh) }
-      .flatMapGroupsWithState[BucketState, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[(Long, java.sql.Timestamp, Int, Long)],
-            state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = rows.toSeq
-            val prev = state.getOption.getOrElse(BucketState(Seq.empty))
-            val (kept, pairs) = collidePairs(prev.ids, batch.map(_._1), maxBucket)
-            // max over ALL activity ever seen, not just this batch: an
-            // out-of-order (in-watermark) arrival must not pull the
-            // eviction horizon backward below "latest activity + ttl"
-            val maxEvent = math.max(prev.maxEventMs, batch.map(_._2.getTime).max)
-            state.update(BucketState(prev.ids ++ kept, maxEvent))
-            state.setTimeoutTimestamp(maxEvent + ttlMs)
-            pairs.iterator
-          }
-      }
-  }
 
   // ------------------------------------------------ batch_run sink chassis
 
@@ -1159,13 +1019,6 @@ object Streaming {
     }
   }
 
-  /** The streamed media feature table as a serving frame — batch_run
-    * stays out of the schema (serving must not care how many triggers
-    * built it); modality survives as the partition column consumers
-    * prune on. */
-  def mediaFeatureRows(spark: SparkSession, featuresDir: String): DataFrame =
-    spark.read.parquet(featuresDir).drop(BatchRunCol)
-
   /** OFFLINE compaction for [[incrementalMediaFeaturesSink]]'s tree:
     * folds every batch_run into ONE while PRESERVING the modality
     * partitioning, deduplicating by (media_id, frame_idx) — the
@@ -1178,39 +1031,6 @@ object Streaming {
       fold = _.dropDuplicates("media_id", "frame_idx")
         .repartition(col("modality")),
       partitionCols = Seq("modality"))
-
-  /** Continuously-maintained KMV distinct sketches
-    * ([[graft.ops.Sketches.kmvSketch]], q99) — the streaming form falls
-    * out of MERGEABILITY: each micro-batch writes its own per-set k-min
-    * PARTIAL to its `batch_run=<id>` partition (no prior-runs read
-    * needed, unlike the dedup sinks, because k-min-of-k-mins is
-    * associative/commutative/idempotent), and
-    * [[mergedKmv]] folds all partials back to the exact same sketch a
-    * batch build over the union would produce. State per set is k·8 B
-    * per batch partition; compaction (re-merging old partitions) is an
-    * offline concern, not a correctness one. */
-  def kmvSketchSink(rows: DataFrame, setCol: String, valueCol: String,
-      indexDir: String, k: Int = 128,
-      checkpointDir: Option[String] = None): StreamingQuery =
-    batchRunSink(rows, checkpointDir) { (batch, run) =>
-      run.write(graft.ops.Sketches.kmvSketch(batch, setCol, col(valueCol), k), indexDir)
-    }
-
-  /** Merge every stored KMV partial back into one sketch per set —
-    * k-min over the unioned k-mins, identical to a batch build over all
-    * data ever seen. */
-  def mergedKmv(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      k: Int = 128): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    spark.read.parquet(indexDir)
-      .select(col("set"), explode(col("hs")).as("h"))
-      .distinct()
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("set")).orderBy(col("h").asc)))
-      .filter(col("__rn") <= k)
-      .groupBy(col("set"))
-      .agg(sort_array(collect_list(col("h"))).as("hs"))
-  }
 
   /** Per-key funnel progress: the per-stage hit timestamps (ns), with
     * Long.MinValue = stage not reached (Option-free so the product

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.ChunkAlgebra._
 
 /** Parity with the reference's sequence-algebra unit tests
-  * (reference: pipeline/src/test/kotlin/unittests/SequenceTests.kt:8-41),
-  * for both the Seq form and the column form. */
+  * (reference: pipeline/src/test/kotlin/unittests/SequenceTests.kt:8-41). */
 class ChunkAlgebraSpec extends SparkSpec {
 
   private val xs = Seq("a", "b", "c", "d")
@@ -18,20 +16,6 @@ class ChunkAlgebraSpec extends SparkSpec {
     assert(mergeRange(xs, 1, 2, (ws: Seq[String]) => ws.mkString(" ")) == Seq("a", "b c", "d"))
     assert(removeAt(xs, 0) == Seq("b", "c", "d"))
     assert(removeAt(xs, 9) == xs)
-  }
-
-  test("column form agrees with Seq form") {
-    import spark.implicits._
-    val df = Seq(Tuple1(xs)).toDF("arr")
-    def got(c: org.apache.spark.sql.Column): Seq[String] =
-      df.select(c).as[Seq[String]].head()
-
-    assert(got(insertAtCol($"arr", 1, lit("x"))) == insertAt(xs, 1, "x"))
-    assert(got(updateAtCol($"arr", 2, lit("x"))) == updateAt(xs, 2, "x"))
-    assert(got(updateAtCol($"arr", 9, lit("x"))) == xs)
-    assert(got(removeAtCol($"arr", 0)) == removeAt(xs, 0))
-    assert(got(removeAtCol($"arr", 9)) == xs)
-    assert(got(mergeRangeCol($"arr", 1, 2)) == mergeRange(xs, 1, 2, (ws: Seq[String]) => ws.mkString(" ")))
   }
 
   test("chunkers produce ordinal-indexed chunks with parent FK") {

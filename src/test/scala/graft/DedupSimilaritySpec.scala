@@ -100,16 +100,6 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
-  test("exact dedup groups duplicates and keeps min id") {
-    val corpus = docs.select($"doc_id", $"text")
-      .unionByName(docs.select(($"doc_id" + 5000L).as("doc_id"), $"text"))
-    val groups = Dedup.exactGroups(corpus, "doc_id", "text")
-    assert(groups.count() == docs.count()) // every text appears exactly twice
-    val g = groups.collect()
-    assert(g.forall(_.getLong(1) == 2))
-    assert(g.forall(_.getLong(2) < 5000L), "canonical id is the original")
-  }
-
   test("cosine: self-similarity 1, quantized close to float path") {
     val emb = Tables.embeddings(spark, sf())
     val self = emb.select(Similarity.cosine($"embedding", $"embedding").as("c"))
@@ -126,20 +116,6 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect()
     assert(both.forall(r => math.abs(r.getDouble(0) - r.getDouble(1)) < 0.01),
       "quantized cosine within 0.01 of float cosine")
-  }
-
-  test("IVF-flat probing recalls most true top-5 neighbours") {
-    val emb = Tables.embeddings(spark, sf())
-    val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 16, iters = 2)
-    val index = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val q = emb.filter($"vec_id" === 0).select($"embedding".as("q"))
-    val got = Similarity.ivfTopK(index.filter($"id" =!= 0), cents,
-      q, k = 5, nProbe = 6).select($"id").as[Long].collect().toSet
-    val top = emb.filter($"vec_id" =!= 0).crossJoin(broadcast(q))
-      .select($"vec_id", Similarity.cosine($"embedding", $"q").as("c"))
-      .orderBy($"c".desc).limit(5).select($"vec_id").as[Long].collect().toSet
-    assert(got.intersect(top).size >= 3,
-      s"IVF(nProbe=6/16) should recall >=3 of true top-5; got ${got.intersect(top)} of $top")
   }
 
   test("integer-exact IVF (sum-centroids) recalls most true top-5 neighbours") {

@@ -29,7 +29,7 @@ class EnricherSpec extends SparkSpec {
   }
 
   test("a rogue enricher poisons only its own metadata (fault isolation)") {
-    val enrichers = StandardEnrichers.all() :+ new Enrichers.RogueEnricher()
+    val enrichers = StandardEnrichers.all() :+ new RogueEnricher()
     val out = Enrichers.enrich(spark.createDataset(records(3)), enrichers).collect()
     // every record still got all healthy enrichments...
     assert(out.forall(_.meta.count(!_.createdBy.endsWith("!error")) ==
@@ -76,4 +76,10 @@ class EnricherSpec extends SparkSpec {
     val missing = DocumentRepresentation("/no/such/file", "file")
     assert(ContentResolver.default.resolve(missing).isEmpty)
   }
+}
+
+/** The reference's rogue-producer test double (A19): every call throws. */
+class RogueEnricher(override val name: String = "rogue") extends Enricher {
+  override def values(record: DataRecord): Map[String, String] =
+    throw new RuntimeException("rogue producer")
 }

@@ -123,6 +123,14 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(thr.getInt(0) === -1)
   }
 
+  test("ensureRuntimeConfs registers each optimizer rule exactly once") {
+    GraftSession.ensureRuntimeConfs(spark)
+    GraftSession.ensureRuntimeConfs(spark)
+    val rules = spark.experimental.extraOptimizations
+    assert(rules.count(_ == graft.plans.RewriteMaxBy) === 1, s"rules: $rules")
+    assert(rules.count(_ == graft.plans.RewriteBoundedLevenshtein) === 1, s"rules: $rules")
+  }
+
   test("normalizeFold: composed/decomposed agree, marks strip, casefold, idempotent") {
     import graft.functions.NativeExpressions.normalizeFold
     val rows = Seq(
@@ -343,7 +351,7 @@ class GraftFunctionsSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "a", "b").localCheckpoint(true)
     val fused = df.select($"id",
-      NativeExpressions.prefixLongCosines($"a", $"b", dims).as("pc"))
+      PrefixCosineOracle.prefixLongCosines($"a", $"b", dims).as("pc"))
       .as[(Long, Seq[Double])].collect().toMap
     dims.zipWithIndex.foreach { case (d, i) =>
       val sliced = df.select($"id", NativeExpressions.longCosine(
@@ -382,7 +390,7 @@ class GraftFunctionsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     val viaWindow = pairs
       .select($"probe_id", $"vec_id",
-        posexplode(NativeExpressions.prefixLongCosines($"qv", $"pqv", dims))
+        posexplode(PrefixCosineOracle.prefixLongCosines($"qv", $"pqv", dims))
           .as(Seq("i", "cos")))
       .withColumn("trunc_dim",
         element_at(lit(dims.map(_.toLong).toArray), $"i" + 1))

@@ -87,13 +87,6 @@ class GraphSpec extends SparkSpec {
     assertNoLeakedBlocks("triangles", base)
   }
 
-  test("degreeStats summarizes the undirected degree distribution") {
-    val st = Graph.degreeStats(Graph.undirected(edges((0L, 1L), (0L, 2L), (0L, 3L))))
-      .head()
-    assert(st.getLong(0) == 4 && st.getLong(1) == 6 &&
-      st.getLong(2) == 3 && st.getLong(3) == 1, s"got $st")
-  }
-
   test("triangle counting: K4 exact, stars zero, orientation counts each triangle once") {
     import spark.implicits._
     def tri(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =

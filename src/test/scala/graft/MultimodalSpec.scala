@@ -4,7 +4,8 @@ import graft.multimodal.Multimodal
 import graft.sources.Tables
 
 /** Multimodal plumbing: binary payload + typed metadata through the
-  * partition-batched stub codec, transcode, and frame sampling. */
+  * partition-batched stub codec, frame sampling, and the real PNG, WAV
+  * and GRAV codecs. */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,10 +26,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("transform preserves ids and updates metadata; frames carry ordinals") {
-    val resized = Multimodal.applyTransform(spark, media, new Multimodal.StubResize(64, 64))
-    assert(resized.count() == media.count())
-    assert(resized.select($"meta.width").as[Int].collect().forall(_ <= 64))
-
     val frames = Multimodal.sampleFrames(spark, media, stride = 50, frameBytes = 16)
     assert(frames.count() > media.count(), "multi-frame expansion")
     val perDoc = frames.filter($"media_id" === 0)
@@ -52,12 +49,6 @@ class MultimodalSpec extends SparkSpec {
     // MediaDecoder features = [w, h, means]
     val f = ImageCodec.features(png, Multimodal.MediaMeta("image/png", 8, 8, 0L))
     assert(f(0) == 8f && f(1) == 8f && math.abs(f(2) - expected._1 / 64.0) < 1e-5)
-    // real resize halves the dims and re-encodes decodably
-    val (resized, meta2) = new Multimodal.PngResize(4, 4)
-      .transform(png, Multimodal.MediaMeta("image/png", 8, 8, 0L))
-    assert((meta2.width, meta2.height) == ((4, 4)))
-    val (w2, h2, _, _, _) = ImageCodec.channelSums(resized)
-    assert((w2, h2) == ((4, 4)))
   }
 
   test("columnar WAV decode: valid clip stats exact, corrupt clips isolate as wav_error") {

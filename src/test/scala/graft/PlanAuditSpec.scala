@@ -147,22 +147,6 @@ class PlanAuditSpec extends SparkSpec {
       s"mixture sampling shuffles the corpus: $p")
   }
 
-  test("IVF index written partitioned by cell prunes unprobed cells at the scan") {
-    import org.apache.spark.sql.functions._
-    import graft.ops.Similarity
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 8, iters = 1)
-    val index = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_layout").toString
-    index.write.mode("overwrite").partitionBy("cell").parquet(dir)
-    val probed = spark.read.parquet(dir).filter(col("cell").isin(0L, 1L))
-    val p = probed.queryExecution.executedPlan.toString
-    val scanLine = p.split("\n").find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scanLine.contains("cell"), s"no partition filter on cell: $p")
-    // the probe must also return only the two cells' vectors
-    assert(probed.select(col("cell")).distinct().count() <= 2)
-  }
-
   test("filter on the query vector is pushed down to the scan") {
     val p = plan("q15_embedding_topk")
     assert(p.contains("PushedFilters: [IsNotNull(vec_id)") ||

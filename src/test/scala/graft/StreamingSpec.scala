@@ -167,7 +167,8 @@ class StreamingSpec extends SparkSpec {
   test("consolidation fold runs on the RocksDB state store (100 TB config)") {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    Streaming.useRocksDbStateStore(spark)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val input = MemoryStream[DataRecordEvent]
       val q = Streaming.dataRecords(Streaming.consolidate(input.toDS()), "rocksdb_test")
@@ -206,31 +207,6 @@ class StreamingSpec extends SparkSpec {
       val digests = spark.sql("select digest from dedup_stream_test")
         .as[String].collect().sorted.toSeq
       assert(digests == Seq("digest-a", "digest-b"))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup flags band collisions across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val txt = "the quick brown fox jumps over the lazy dog again and again today"
-    // stateTtl=None: a TTL forces continuous timeout-check batches, which
-    // never settle under a bounded MemoryStream (see operator scaladoc)
-    val q = Streaming.nearDupCandidates(
-      input.toDS().toDF("doc_id", "text"), "doc_id", "text", stateTtl = None)
-      .toDF("id_a", "id_b")
-      .writeStream.format("memory").queryName("neardup_stream_test")
-      .outputMode("append").start()
-    try {
-      input.addData(Seq((1L, txt), (50L, "completely unrelated words about ships and harbours tonight")))
-      q.processAllAvailable()
-      // near-identical doc arrives in a LATER batch → collides with state
-      input.addData(Seq((2L, txt + " x")))
-      q.processAllAvailable()
-      val pairs = spark.sql("select distinct id_a, id_b from neardup_stream_test")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs.contains((1L, 2L)), s"planted near-dup not flagged: $pairs")
-      assert(!pairs.exists(p => p._1 == 50L || p._2 == 50L),
-        s"unrelated doc flagged: $pairs")
     } finally q.stop()
   }
 
@@ -315,37 +291,6 @@ class StreamingSpec extends SparkSpec {
         .select(col("s_pos"), col("s_neg"), col("alert"))
         .as[(Long, Long, Boolean)].collect().last
       assert(k3 === ((0L, 160000L, false)), s"downward shift: $k3")
-    } finally q.stop()
-  }
-
-  test("event-time near-dup: collides within ttl, evicts after the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val txt = "the quick brown fox jumps over the lazy dog again and again today"
-    def ts(minute: Long) = new java.sql.Timestamp(1704067200000L + minute * 60000L)
-    val q = Streaming.nearDupCandidatesEventTime(
-      input.toDS().toDF("doc_id", "ets", "text"), "doc_id", "text", "ets",
-      ttlMs = 10 * 60000L, watermark = "0 seconds")
-      .toDF("id_a", "id_b")
-      .writeStream.format("memory").queryName("neardup_et_test")
-      .outputMode("append").start()
-    try {
-      input.addData(Seq((1L, ts(0), txt)))
-      q.processAllAvailable()
-      // within the ttl horizon → collides with doc 1
-      input.addData(Seq((2L, ts(5), txt + " x")))
-      q.processAllAvailable()
-      // push the watermark past doc state's (activity + ttl) horizon...
-      input.addData(Seq((60L, ts(60), "completely unrelated words about ships and harbours")))
-      q.processAllAvailable()
-      // ...so this near-dup of 1/2 arrives AFTER eviction: no new pairs
-      input.addData(Seq((3L, ts(61), txt + " y")))
-      q.processAllAvailable()
-      val pairs = spark.sql("select distinct id_a, id_b from neardup_et_test")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs.contains((1L, 2L)), s"in-horizon near-dup not flagged: $pairs")
-      assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
-        s"post-eviction arrival must not pair with evicted state: $pairs")
     } finally q.stop()
   }
 
@@ -836,30 +781,6 @@ class StreamingSpec extends SparkSpec {
       assert(got(106L) === (("no_evidence", 106L, -1)),
         "the raw exact dup must die in the paragraph stage and log as no_evidence")
     } finally { qa2.stop(); qb2.stop() }
-  }
-
-  test("KMV sketch sink: micro-batch partials merge to the exact batch-build sketch") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_kmv_sink").toString
-    val input = MemoryStream[(String, Long)]
-    val q = Streaming.kmvSketchSink(
-      input.toDF().toDF("s", "v"), "s", "v", s"$root/index", k = 8)
-    try {
-      input.addData(("a", 1L), ("a", 2L), ("a", 3L), ("b", 10L))
-      q.processAllAvailable()
-      input.addData(("a", 3L), ("a", 4L), ("b", 11L), ("b", 12L))
-      q.processAllAvailable()
-      val merged = Streaming.mergedKmv(spark, s"$root/index", k = 8)
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-      // batch build over ALL data ever seen must agree exactly
-      import spark.implicits._
-      val all = Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 10L),
-        ("a", 3L), ("a", 4L), ("b", 11L), ("b", 12L)).toDF("s", "v")
-      val expect = graft.ops.Sketches.kmvSketch(all, "s", col("v"), 8)
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-      assert(merged === expect, s"merged $merged != batch $expect")
-      assert(merged("a").size === 4 && merged("b").size === 3) // dups collapsed
-    } finally q.stop()
   }
 
   test("url frontier sink: canonical collapse in-batch, durable seen gate across batches, 16B index rows") {
@@ -1639,7 +1560,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(crawlHtml, name), bytes)
     def mseg(name: String, bytes: Array[Byte]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(media, name), bytes)
-    def mediaRows() = Streaming.mediaFeatureRows(spark, mediaFeat)
+    def mediaRows() = spark.read.parquet(mediaFeat).drop("batch_run")
       .drop("modality").collect().map(_.toString).toSet
     val t1 = "alpha beta gamma delta epsilon zeta"
     // two triggers so every index accumulates two batch_run partitions
@@ -1702,7 +1623,7 @@ class StreamingSpec extends SparkSpec {
       s"pre-window media rows changed across the window")
     assert((mediaAfter -- mediaBefore).size == 1,
       s"restart must add exactly one feature row: ${mediaAfter -- mediaBefore}")
-    val imgIds = Streaming.mediaFeatureRows(spark, mediaFeat)
+    val imgIds = spark.read.parquet(mediaFeat).drop("batch_run")
       .filter($"modality" === "image").select($"media_id")
       .as[Long].collect().toSet
     assert(imgIds == Set(1L, 2L, 3L),
@@ -1828,7 +1749,7 @@ class StreamingSpec extends SparkSpec {
     landBytes("302.bin", "JUNKJUNKJUNK".getBytes)
     val q1 = start(); q1.processAllAvailable(); q1.stop()
 
-    def feats() = Streaming.mediaFeatureRows(spark, featDir)
+    def feats() = spark.read.parquet(featDir).drop("batch_run")
     // image parity: hash + QC columns equal the batch kernel on the bytes
     val img = feats().filter($"modality" === "image" && $"media_error".isNull)
       .select($"media_id", $"hash_hi", $"hash_lo", $"mean_gray", $"min_gray", $"max_gray")
