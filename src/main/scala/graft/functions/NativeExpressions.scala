@@ -763,6 +763,69 @@ object NativeExpressions {
       copy(child = c)
   }
 
+  /** One document's postings in one pass over its text: a row per
+    * distinct token of `split(text, ' ')`, in first-occurrence order,
+    * carrying the document's token count `dl`, the token's count `tf`,
+    * its 1-based first position `first_pos` (`array_position(split(text,
+    * ' '), term)`) and `ctx`, the ±3-token window around that position
+    * (`concat_ws(' ', slice(toks, greatest(1, p - 3), …))`, the q143
+    * snippet). Tokens are single-space separated, so a window is the
+    * text's substring from its first token's start to its last token's
+    * end. A ≤ dl-entry hash map keeps the pass linear in the text; a
+    * per-term `filter(toks, …)` lambda would be quadratic. Null text
+    * yields no rows. */
+  case class DocPostings(child: Expression)
+      extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.Generator
+      with CodegenFallback {
+    override def elementSchema: StructType = StructType(Seq(
+      StructField("dl", LongType, nullable = false),
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false),
+      StructField("first_pos", LongType, nullable = false),
+      StructField("ctx", StringType, nullable = false)))
+
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      import org.apache.spark.unsafe.types.UTF8String
+      val v = child.eval(input)
+      if (v == null) return Iterator.empty
+      val text = v.toString // the decoded form `split` cuts, so tokens agree
+      val n = text.length
+      var nTok = 1
+      var i = 0
+      while (i < n) { if (text.charAt(i) == ' ') nTok += 1; i += 1 }
+      val starts = new Array[Int](nTok)
+      val ends = new Array[Int](nTok)
+      val slot = new java.util.HashMap[String, Integer]()
+      val slotTok = new Array[Int](nTok) // first token index of each slot
+      val tf = new Array[Long](nTok)
+      var nSlots = 0
+      var t = 0
+      var start = 0
+      i = 0
+      while (i <= n) {
+        if (i == n || text.charAt(i) == ' ') {
+          starts(t) = start; ends(t) = i
+          val term = text.substring(start, i)
+          val s = slot.get(term)
+          if (s == null) {
+            slot.put(term, nSlots); slotTok(nSlots) = t; tf(nSlots) = 1L; nSlots += 1
+          } else tf(s.intValue()) += 1L
+          t += 1
+          start = i + 1
+        }
+        i += 1
+      }
+      Iterator.range(0, nSlots).map { k =>
+        val p = slotTok(k)
+        val lo = math.max(0, p - 3)
+        val hi = math.min(nTok - 1, p + 3)
+        InternalRow(nTok.toLong, UTF8String.fromString(text.substring(starts(p), ends(p))),
+          tf(k), (p + 1).toLong, UTF8String.fromString(text.substring(starts(lo), ends(hi))))
+      }
+    }
+    override protected def withNewChildInternal(c: Expression): DocPostings = copy(child = c)
+  }
+
   /** One-pass audio QUALITY-CONTROL statistics over a RIFF/WAVE clip's
     * PCM-16 section (bytes from offset 44, little-endian signed): the
     * corpus-hygiene signals a speech/audio training pipeline gates on —
@@ -1479,6 +1542,11 @@ object NativeExpressions {
 
   def termCounts(text: Column, terms: Seq[String]): Column =
     ColumnBridge.column(TermCounts(ColumnBridge.expression(text), terms))
+
+  /** Generator of one document's (dl, term, tf, first_pos, ctx) postings —
+    * see DocPostings. */
+  def docPostings(text: Column): Column =
+    ColumnBridge.column(DocPostings(ColumnBridge.expression(text)))
 
   /** Hash-aggregable `max_by(value, struct(ords...))` — see ArgMaxByOrd. */
   def argMaxBy(value: Column, ords: Column*): Column =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Full-text relevance search over the `documents` corpus — the retrieval
@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Two layers:
   *   1. `writePostingsIndex` — the inverted index, stored: (term, doc_id,
-  *      dl, tf, df) postings partitioned by term bucket plus the corpus
-  *      totals, so a serving read prunes to its terms' buckets.
+  *      dl, tf, first_pos, ctx, df) postings partitioned by term bucket
+  *      plus the corpus totals, so a serving read prunes to its terms'
+  *      buckets and takes its snippets from the postings it ranks.
   *   2. `bm25TopK` — scores one query against the corpus WITHOUT building
   *      the full index: tokens are filtered to the query's terms before any
   *      explode, so the per-doc stage is a narrow codegen'd pass and the
@@ -85,8 +86,9 @@ object TextSearch {
     * those are attached: `df` counted from the matching rows
     * ([[countedDf]]) or read from the stored column, the totals from a
     * 1-row stats table or as bound parameters. Same expressions →
-    * bit-identical fixed-point scores whichever way they were attached. */
-  private def bm25Score(rows: DataFrame, k: Int): DataFrame = {
+    * bit-identical fixed-point scores whichever way they were attached.
+    * `perDoc` adds aggregates to the per-document grouping. */
+  private def bm25Score(rows: DataFrame, k: Int, perDoc: Seq[Column] = Nil): DataFrame = {
     val ratio = col("dl").cast("double") * col("n_docs").cast("double") /
       col("sdl").cast("double")
     val tfpart = col("tf").cast("double") * lit(K1Plus1) /
@@ -99,46 +101,61 @@ object TextSearch {
         round(idf * 1000000.0, 0).cast("long") *
           round(tfpart * 1000000.0, 0).cast("long"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("term_score")).as("score_e12"), count(lit(1)).as("n_terms_hit"))
+      .agg(sum(col("term_score")).as("score_e12"),
+        (count(lit(1)).as("n_terms_hit") +: perDoc): _*)
       .orderBy(col("score_e12").desc, col("doc_id").asc)
       .limit(k)
   }
 
   /** `tfRows` with each term's `df` counted from the rows themselves: a
     * per-term aggregate broadcast back. Right wherever `tfRows` holds
-    * every posting of its terms — the corpus scan, and a stored index of
-    * any layout, the streamed `batch_run=` tree included, whose shards
-    * carry no global `df`. */
+    * every posting of its terms — the corpus scan, and a streamed
+    * `batch_run=` index tree, whose shards carry no global `df`. */
   private def countedDf(tfRows: DataFrame): DataFrame =
     tfRows.join(broadcast(tfRows.groupBy(col("term")).agg(count(lit(1)).as("df"))),
       Seq("term"))
 
   /** Build the SERVING index for [[bm25TopKIndexed]] under `indexDir`:
-    * the postings table (term, doc_id, tf, dl, df) written
-    * parquet-PARTITIONED by `bucket = pmod(xxhash64(term), nBuckets)`,
-    * plus the 1-row corpus stats table (n_docs, sdl). `dl` (the doc's
-    * token count) and `df` (the number of postings of the row's term)
-    * are denormalized onto every posting, so a serving read neither
-    * joins a document table nor aggregates the term's posting list. A
-    * query's scan then prunes to its terms' bucket partitions
+    * the postings table (term, doc_id, dl, tf, first_pos, ctx, df)
+    * written parquet-PARTITIONED by `bucket = pmod(xxhash64(term),
+    * nBuckets)`, plus the 1-row corpus stats table (n_docs, sdl). Per
+    * posting:
+    *   - `dl`, the doc's token count, and `df`, the number of postings of
+    *     the row's term, so a serving read neither joins a document
+    *     table nor aggregates the term's posting list;
+    *   - `first_pos`, the term's 1-based first position in
+    *     `split(text, ' ')`, and `ctx`, the ±3-token window around it:
+    *     the q143 snippet of a document whose earliest query-term hit is
+    *     this term ([[bm25TopKSnippets]]), so serving reads no text.
+    * A query's scan prunes to its terms' bucket partitions
     * (directory-level pruning) and row-group-filters on `term` inside
-    * them — the index is touched, never the corpus. One explode + one
-    * (term, doc_id) shuffle to build; `df` is a window over the
-    * bucket-clustered rows, a local sort with no added exchange. At
-    * 100 TB this runs once per corpus snapshot and every query
-    * amortizes it. */
+    * them — the index is touched, never the corpus.
+    *
+    * One corpus scan: each document's postings come from one row-local
+    * pass ([[graft.functions.NativeExpressions.DocPostings]]), so the
+    * only exchange is the bucket clustering; `df` is a window over the
+    * bucket-clustered rows, a local sort with no added exchange. The
+    * totals are observed on the same pass: every document with text
+    * has exactly one posting at `first_pos` 1, its first token's, and
+    * that posting carries the document's `dl`. Postings are per
+    * documents row, as the scan path ([[bm25TopK]]) counts them, so
+    * `doc_id` must be a key of `docs`. At 100 TB this runs once per
+    * corpus snapshot and every query amortizes it. */
   def writePostingsIndex(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, nBuckets: Int = PostingsBuckets): Unit = {
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.{Observation, Row}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = docs.sparkSession
-    // ONE corpus scan: dl rides the group key (functionally dependent on
-    // doc_id, so the key is no wider in practice)
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-      .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy(col("term"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
+    val totals = Observation()
+    val first = col("first_pos") === 1L
+    docs.select(col(idCol).as("doc_id"),
+        graft.functions.NativeExpressions.docPostings(col(textCol))
+          .as(Seq("dl", "term", "tf", "first_pos", "ctx")))
+      .observe(totals, count(when(first, 1L)).as("n_docs"),
+        sum(when(first, col("dl"))).as("sdl"))
+      .select(col("term"), col("doc_id"), col("dl"), col("tf"), col("first_pos"), col("ctx"),
+        pmod(xxhash64(col("term")), lit(nBuckets)).as("bucket"))
       // cluster by bucket before the partitioned write: without it every
       // task writes a file into every bucket dir (tasks × nBuckets small
       // files at corpus scale); with it each bucket dir gets its writers'
@@ -149,31 +166,34 @@ object TextSearch {
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("bucket"), col("term"))))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
-    // corpus stats from the index itself (column-pruned read; every doc
-    // has ≥ 1 posting row because split('') still yields one token, and
-    // Σ tf per doc IS dl)
-    spark.read.parquet(s"$indexDir/postings")
-      .agg(count_distinct(col("doc_id")).as("n_docs"), sum(col("tf")).as("sdl"))
+    val m = totals.get
+    spark.createDataFrame(java.util.List.of(Row(m("n_docs"), m("sdl"))),
+        StructType(Seq(StructField("n_docs", LongType), StructField("sdl", LongType))))
       .write.mode("overwrite").parquet(s"$indexDir/stats")
   }
 
   /** BM25 top-k straight off a stored postings index at `indexDir`, in
     * either layout: [[writePostingsIndex]]'s or the streamed `batch_run=`
     * tree of [[graft.streaming.Streaming.incrementalPostingsSink]]. The
-    * postings scan prunes to the query terms' bucket partitions, per-term
-    * df is counted from exactly the matching rows (a streamed shard holds
-    * no global df), and the scoring tail is [[bm25Score]] — scores are
-    * bit-identical to [[bm25TopK]] over the same corpus. Cost scales with
-    * the queried terms' posting lists, not the corpus. Resolves
-    * `indexDir` on every call, so a growing (streamed) index is read as
-    * it stands now. */
+    * postings scan prunes to the query terms' bucket partitions; each
+    * row's `df` is the stored column where the index has one, and is
+    * counted from exactly the matching rows where it has none (a
+    * streamed shard holds no global df). The scoring tail is
+    * [[bm25Score]] — scores are bit-identical to [[bm25TopK]] over the
+    * same corpus. Cost scales with the queried terms' posting lists, not
+    * the corpus. Resolves `indexDir` on every call, so a growing
+    * (streamed) index is read as it stands now. */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, rawTerms: Seq[String], k: Int,
       nBuckets: Int = PostingsBuckets): DataFrame = {
-    val tfRows = matchingPostings(spark.read.parquet(s"$indexDir/postings"), rawTerms, nBuckets)
-      .select(col("doc_id"), col("dl"), col("term"), col("tf"))
+    val postings = spark.read.parquet(s"$indexDir/postings")
+    val rows = matchingPostings(postings, rawTerms, nBuckets)
+    val withDf =
+      if (postings.columns.contains("df"))
+        rows.select(col("doc_id"), col("dl"), col("term"), col("tf"), col("df"))
+      else countedDf(rows.select(col("doc_id"), col("dl"), col("term"), col("tf")))
     val totals = summedStats(spark.read.parquet(s"$indexDir/stats"))
-    bm25Score(countedDf(tfRows).crossJoin(broadcast(totals)), k)
+    bm25Score(withDf.crossJoin(broadcast(totals)), k)
   }
 
   /** [[bm25TopKIndexed]] over an already-resolved `postings` frame of a
@@ -184,11 +204,33 @@ object TextSearch {
     * per-term aggregate, no stats aggregate, no broadcast, and another
     * corpus compiles no new class. */
   def bm25TopKIndexed(postings: DataFrame, nDocs: Long, sdl: Long,
-      rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame = {
+      rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame =
+    bm25Score(handleRows(postings, nDocs, sdl, rawTerms, nBuckets), k)
+
+  /** The handle's [[bm25TopKIndexed]] page with the q143 snippet of each
+    * hit, from the same pruned postings scan: `hit_pos`, the least
+    * `first_pos` of the document's query-term postings, and `snippet`,
+    * that posting's stored `ctx`. Distinct terms never share a position,
+    * so the least is one posting. Equal, bit for bit, to
+    * [[graft.queries.TextQueries.attachSnippets]] over the documents the
+    * index was built from, with no join and no read of the text.
+    * `argMinBy` keeps the grouping hash-based: `min(struct(first_pos,
+    * ctx))` holds a string in its buffer and plans a SortAggregate. */
+  def bm25TopKSnippets(postings: DataFrame, nDocs: Long, sdl: Long,
+      rawTerms: Seq[String], k: Int, nBuckets: Int): DataFrame =
+    bm25Score(handleRows(postings, nDocs, sdl, rawTerms, nBuckets,
+        col("first_pos"), col("ctx")), k,
+      Seq(min(col("first_pos")).as("hit_pos"),
+        graft.functions.NativeExpressions.argMinBy(col("ctx"), col("first_pos")).as("snippet")))
+
+  /** A handle's matching postings with their stored `df` and the totals
+    * bound as parameters, plus the `extra` posting columns. */
+  private def handleRows(postings: DataFrame, nDocs: Long, sdl: Long,
+      rawTerms: Seq[String], nBuckets: Int, extra: Column*): DataFrame = {
     import graft.functions.NativeExpressions.longParam
-    bm25Score(matchingPostings(postings, rawTerms, nBuckets)
-      .select(col("doc_id"), col("dl"), col("term"), col("tf"), col("df"),
-        longParam(nDocs).as("n_docs"), longParam(sdl).as("sdl")), k)
+    matchingPostings(postings, rawTerms, nBuckets)
+      .select(Seq(col("doc_id"), col("dl"), col("term"), col("tf"), col("df"),
+        longParam(nDocs).as("n_docs"), longParam(sdl).as("sdl")) ++ extra: _*)
   }
 
   /** The BM25 totals `(n_docs, sdl)` of a stored index's stats table, in

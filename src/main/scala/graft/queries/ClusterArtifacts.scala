@@ -165,9 +165,11 @@ object ClusterArtifacts {
     * score-bit-equal to the corpus-rescan `bm25TopK`): the index builds
     * once per corpus and every consumer's lexical path scans postings
     * buckets, never the corpus text column. `v2`: every posting carries
-    * its term's `df`, which the serving handle reads. */
+    * its term's `df`, which every batch consumer and the serving handle
+    * read. `v3`: every posting also carries its term's first position
+    * and ±3-token window, the `/search` lexical snippets. */
   def postingsIndex(spark: SparkSession, dir: String): String =
-    Tables.buildOnce("graft_postings_index", dir, "bm25_b64_v2") { out =>
+    Tables.buildOnce("graft_postings_index", dir, "bm25_b64_v3") { out =>
       graft.ops.TextSearch.writePostingsIndex(
         Tables.documents(spark, dir), "doc_id", "text", out)
     }

@@ -62,8 +62,11 @@ import graft.streaming.Streaming
   * index and the IVF centroid rows `(cell, cv)`, held on the driver (k ×
   * dim longs; 8 × 64 here). A request then plans only its own data: the
   * lexical ranking is one pruned postings scan, each posting bringing
-  * its term's stored `df` and the totals entering as bound parameters,
-  * and the probe's nearest cells are ranked on the driver, so the IVF
+  * its term's stored `df` and its snippet inputs (first position and
+  * ±3-token window) and the totals entering as bound parameters, so a
+  * lexical page reads no documents; a hybrid page still joins the
+  * documents table for its snippets (see `/search`); and the probe's
+  * nearest cells are ranked on the driver, so the IVF
   * read is a static partition filter. The immutable-corpus contract of
   * the build-once artifacts covers the handles too: a mutated corpus
   * needs a restarted service. A streamed index
@@ -213,12 +216,17 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
         // once, a scan pruned to their bucket partitions whose rows carry
         // each term's stored df, and the BM25 totals are the handle's
         // constants. Rows are identical to the q143/q114 oracles
-        // (bm25TopKIndexed is score-bit-equal to bm25TopK). The snippets
-        // still read corpus text: the join of the ranked page to
-        // `documents(doc_id, text)` pushes only `IsNotNull(doc_id)` to
-        // the scan, so every lexical or hybrid request scans the whole
-        // documents table (SCALE.md). The lexical leg, the probe's IVF
-        // leg and the snippets plan over the corpus handle.
+        // (bm25TopKIndexed is score-bit-equal to bm25TopK). A lexical
+        // request takes its snippets from the same postings: each one
+        // stores its term's first position and ±3-token window, and the
+        // per-document grouping keeps the earliest hit's
+        // (bm25TopKSnippets), so the request reads no documents. A hybrid
+        // page still joins `documents(doc_id, text)` (attachSnippets), a
+        // scan of the whole table (SCALE.md): its semantic and anchor ids
+        // need not have a documents row, the inner join drops those, and
+        // the postings cannot tell a missing document from one without a
+        // query term. The legs and the snippets plan over the corpus
+        // handle.
         val ps = GraftService.parseQuery(ex.getRequestURI.getRawQuery)
         ps.get("dir") match {
           case None => (400, """{"error":"dir required"}""")
@@ -298,8 +306,8 @@ final class GraftService private (spark: SparkSession, server: HttpServer,
                       lexTop(100), anchorLegs), terms)
                     .orderBy(col("rrf_e6").desc, col("doc_id").asc)
                 case _ =>
-                  graft.queries.TextQueries.attachSnippets(c.documents,
-                      lexTop(graft.queries.TextQueries.Bm25K), terms)
+                  graft.ops.TextSearch.bm25TopKSnippets(c.postings, c.nDocs, c.sdl, terms,
+                      graft.queries.TextQueries.Bm25K, graft.ops.TextSearch.PostingsBuckets)
                     .select(col("doc_id"), col("score_e12"), col("hit_pos"),
                       col("snippet"))
                     .orderBy(col("score_e12").desc, col("doc_id").asc)

@@ -593,10 +593,72 @@ class ServiceSpec extends SparkSpec {
       // resolving the corpus per request cost 13 (lexical), 21 (hybrid)
       // and 9 (/similar) jobs per warm request; aggregating the BM25
       // totals and choosing the IVF cells per request, 7, 12 and 5;
-      // counting each term's df per request, 5 (lexical) and 6 (hybrid)
-      assert(lexJobs <= 3, s"lexical /search ran $lexJobs jobs")
+      // counting each term's df per request, 5 (lexical) and 6 (hybrid);
+      // joining the lexical page to documents for its snippets, 3
+      assert(lexJobs <= 2, s"lexical /search ran $lexJobs jobs")
       assert(hybridJobs <= 4, s"hybrid /search ran $hybridJobs jobs")
       assert(similarJobs <= 2, s"/similar ran $similarJobs jobs")
+    } finally svc.close()
+  }
+
+  test("a warm lexical /search reads no documents: its executed plan scans only the postings") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      val lex = s"/search?dir=${enc(sf())}&q=${enc("customer line")}"
+      val (code, body) = get(svc, lex) // warm
+      assert(code == 200 && body.contains("\"snippet\":"), body.take(400))
+      val plans = executedPlansOf(assert(get(svc, lex) == ((code, body))))
+      val scans = plans.flatMap(_.split("\n")).filter(_.contains("FileScan"))
+      assert(plans.nonEmpty && scans.exists(_.contains("struct<term:")),
+        s"no postings scan in the request's plans:\n${plans.mkString("\n")}")
+      assert(!scans.exists(l => l.contains("documents") || l.contains("text:string")),
+        s"a lexical request scanned documents:\n${scans.mkString("\n")}")
+    } finally svc.close()
+  }
+
+  test("/search mode=hybrid snippets equal attachSnippets over documents; an embeddings id with no documents row is dropped") {
+    import graft.queries.{SimilarityQueries, TextQueries}
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def page(dir: String, probe: Long, terms: Seq[String]): org.apache.spark.sql.DataFrame = {
+      val probeQv = graft.sources.Tables.embeddings(spark, dir)
+        .filter(col("vec_id") === probe)
+        .select(graft.ops.Similarity.quantize(col("embedding")))
+        .collect().head.getSeq[Long](0).toSeq
+      val lexTop = graft.ops.TextSearch.bm25TopKIndexed(spark,
+        GraftService.postingsIndexFor(spark, dir), terms, 100)
+      TextQueries.attachSnippets(spark, dir, SimilarityQueries.rrfFusionIvfProbe(spark,
+          GraftService.ivfIndexFor(spark, dir), lexTop, probeQv, nProbe = 3,
+          excludeId = Some(probe)), terms)
+        .orderBy(col("rrf_e6").desc, col("doc_id").asc)
+    }
+    def request(dir: String, probe: Long, terms: Seq[String]) =
+      s"/search?dir=${enc(dir)}&mode=hybrid&probeDoc=$probe&q=${enc(terms.mkString(" "))}"
+    // a rare word: the fused page is mostly semantic-only rows
+    val rare = Seq(graft.sources.Tables.documents(spark, sf())
+      .select(explode(split(col("text"), " ")).as("t"))
+      .groupBy(col("t")).agg(count(lit(1)).as("n"))
+      .orderBy(col("n").asc, col("t").asc).first().getString(0))
+    // a corpus whose documents lack the first semantic-only row of that page
+    val semOnly = page(sf(), 5L, rare).limit(20).filter(col("snippet").isNull)
+      .select("doc_id").collect().map(_.getLong(0))
+    assert(semOnly.nonEmpty, "fixture degenerate: the page has no semantic-only row")
+    val root = java.nio.file.Files.createTempDirectory("svc_hybrid_missing").toString
+    graft.sources.Tables.documents(spark, sf()).filter(col("doc_id") =!= semOnly.head)
+      .write.parquet(s"$root/documents.parquet")
+    graft.sources.Tables.embeddings(spark, sf()).write.parquet(s"$root/embeddings.parquet")
+    val svc = GraftService.start(spark, port = 0)
+    try {
+      for (dir <- Seq(sf(), root); probe <- Seq(5L, 9L); terms <- Seq(Seq("customer", "line"), rare)) {
+        val want = page(dir, probe, terms).limit(20).toJSON.collect().mkString("[", ",", "]")
+        val (code, body) = get(svc, request(dir, probe, terms))
+        assert(code == 200 && body == want, s"$dir probe $probe $terms:\n$body\nvs\n$want")
+      }
+      val body = get(svc, request(root, 5L, rare))._2
+      assert(!body.contains(s"\"doc_id\":${semOnly.head},"),
+        s"doc ${semOnly.head} has no documents row but was served: $body")
+      assert("\"snippet\"".r.findAllMatchIn(body).size < "\"doc_id\"".r.findAllMatchIn(body).size,
+        s"no semantic-only row served: $body")
     } finally svc.close()
   }
 

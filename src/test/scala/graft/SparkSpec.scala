@@ -74,6 +74,26 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** The executed plan of each SQL query that completed while `body` ran
+    * on this session. Query-execution events share the listener bus with
+    * jobs, so [[jobDescriptionsOf]]'s marker job fences them too. */
+  def executedPlansOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      jobDescriptionsOf(body)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Generated classes Janino compiled while `body` runs, i.e. misses of
     * the JVM-wide codegen cache. The count is JVM-wide, so a stream
     * another suite left running would add its own compiles. */

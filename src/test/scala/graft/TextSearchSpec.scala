@@ -63,6 +63,10 @@ class TextSearchSpec extends SparkSpec {
     val tf = p.filter(col("term") === "spark" && col("doc_id") === 1L)
       .select(col("tf")).collect().head.getLong(0)
     assert(tf == 3L)
+    // each posting carries its term's first position and ±3-token window
+    val at = p.filter(col("term") === "merge" && col("doc_id") === 2L)
+      .select(col("first_pos"), col("ctx")).collect().head
+    assert(at.getLong(0) == 14L && at.getString(1) == "the a batch merge", at)
   }
 
   test("a built index stores on every posting its term's df: the number of postings of the term") {
@@ -75,14 +79,14 @@ class TextSearchSpec extends SparkSpec {
       "stored df differs from the term's posting count")
   }
 
-  test("stored-df handle, counted-df path overload and the corpus scan rank bit-identically") {
+  /** The sf0.001 corpus's seven term bags: the standard bag, one term,
+    * two terms in one bucket, an absent term alone and with a present
+    * one, a repeated term, and 64 terms. */
+  private def termBags(): (Seq[String], Seq[(String, Seq[String])]) = {
     import spark.implicits._
-    import graft.queries.{ClusterArtifacts, TextQueries}
-    val docs = graft.sources.Tables.documents(spark, sf())
-    val idx = ClusterArtifacts.postingsIndex(spark, sf())
-    val postings = spark.read.parquet(s"$idx/postings")
-    val (nDocs, sdl) = TextSearch.indexTotals(spark.read.parquet(s"$idx/stats"))
-    val vocab = docs.select(explode(split(col("text"), " ")).as("t"))
+    import graft.queries.TextQueries
+    val vocab = graft.sources.Tables.documents(spark, sf())
+      .select(explode(split(col("text"), " ")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("t").asc).as[(String, Long)].collect().map(_._1).toSeq
     // the fixture has fewer than 64 distinct words: the 64-term bag pads
@@ -92,22 +96,107 @@ class TextSearchSpec extends SparkSpec {
     val sameBucket = vocab.groupBy(TextSearch.bucketId(_, TextSearch.PostingsBuckets))
       .values.map(_.take(2)).find(_.size == 2).get
     val absent = "zz_not_in_corpus"
-    val bags = Seq(
+    (vocab, Seq(
       "standard bag" -> TextQueries.Bm25Terms,
       "one term" -> Seq(vocab.head),
       "two terms in one bucket" -> sameBucket,
       "an absent term" -> Seq(absent),
       "an absent and a present term" -> Seq(absent, vocab(1)),
       "a repeated term" -> Seq(vocab(2), vocab(3), vocab(2)),
-      "64 terms" -> bag64)
+      "64 terms" -> bag64))
+  }
+
+  test("stored-df handle, counted-df path overload and the corpus scan rank bit-identically") {
+    import graft.queries.ClusterArtifacts
+    val docs = graft.sources.Tables.documents(spark, sf())
+    val idx = ClusterArtifacts.postingsIndex(spark, sf())
+    val postings = spark.read.parquet(s"$idx/postings")
+    val (nDocs, sdl) = TextSearch.indexTotals(spark.read.parquet(s"$idx/stats"))
+    val (vocab, bags) = termBags()
+    // a streamed tree's layout: the same postings without the stored df
+    val noDf = java.nio.file.Files.createTempDirectory("graft_postings_nodf").toString
+    postings.drop("df").write.partitionBy("bucket").parquet(s"$noDf/postings")
+    spark.read.parquet(s"$idx/stats").write.parquet(s"$noDf/stats")
     bags.foreach { case (name, terms) =>
       val handle = TextSearch.bm25TopKIndexed(postings, nDocs, sdl, terms, 100,
         TextSearch.PostingsBuckets).collect().toSeq
       val path = TextSearch.bm25TopKIndexed(spark, idx, terms, 100).collect().toSeq
+      val counted = TextSearch.bm25TopKIndexed(spark, noDf, terms, 100).collect().toSeq
       val scan = TextSearch.bm25TopK(docs, "doc_id", "text", terms, 100).collect().toSeq
       assert(handle == scan, s"$name: handle vs corpus scan")
-      assert(path == scan, s"$name: path overload vs corpus scan")
+      assert(path == scan, s"$name: path overload (stored df) vs corpus scan")
+      assert(counted == scan, s"$name: path overload (counted df) vs corpus scan")
       assert(scan.nonEmpty == terms.exists(vocab.contains), s"$name: ${scan.size} rows")
+    }
+  }
+
+  test("the path overload reads a built index's stored df: one postings scan, no per-term count") {
+    val idx = graft.queries.ClusterArtifacts.postingsIndex(spark, sf())
+    val q = TextSearch.bm25TopKIndexed(spark, idx, graft.queries.TextQueries.Bm25Terms, 20)
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val scans = plan.split("\n").count(l => l.contains("FileScan") && l.contains("struct<term:"))
+    assert(scans == 1, s"expected one postings scan:\n$plan")
+  }
+
+  /** The handle's snippet page and attachSnippets over `docs` of the
+    * handle's ranked page, as collected rows. */
+  private def snippetPages(docs: org.apache.spark.sql.DataFrame,
+      postings: org.apache.spark.sql.DataFrame, nDocs: Long, sdl: Long,
+      terms: Seq[String]): (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+    val order = Seq(col("score_e12").desc, col("doc_id").asc)
+    val got = TextSearch.bm25TopKSnippets(postings, nDocs, sdl, terms, 100,
+      TextSearch.PostingsBuckets).orderBy(order: _*)
+    val want = graft.queries.TextQueries.attachSnippets(docs,
+        TextSearch.bm25TopKIndexed(postings, nDocs, sdl, terms, 100, TextSearch.PostingsBuckets),
+        terms)
+      .select(col("doc_id"), col("score_e12"), col("n_terms_hit"), col("hit_pos"),
+        col("snippet"))
+      .orderBy(order: _*)
+    (got.collect().toSeq, want.collect().toSeq)
+  }
+
+  test("snippets from the postings equal attachSnippets over documents, bit for bit: the seven term bags") {
+    val idx = graft.queries.ClusterArtifacts.postingsIndex(spark, sf())
+    val postings = spark.read.parquet(s"$idx/postings")
+    val (nDocs, sdl) = TextSearch.indexTotals(spark.read.parquet(s"$idx/stats"))
+    val docs = graft.sources.Tables.documents(spark, sf())
+    val (vocab, bags) = termBags()
+    bags.foreach { case (name, terms) =>
+      val (got, want) = snippetPages(docs, postings, nDocs, sdl, terms)
+      assert(got == want, s"$name: postings snippets vs attachSnippets")
+      assert(got.nonEmpty == terms.exists(vocab.contains), s"$name: ${got.size} rows")
+      assert(got.forall(r => !r.isNullAt(3) && !r.isNullAt(4)), s"$name: a hit without a snippet")
+    }
+  }
+
+  test("snippets from the postings equal attachSnippets at the window's edges") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota"), // hits at 1, 2, 3
+      (2L, "one two three four five six seven eight alpha"),      // hit at the last token
+      (3L, "alpha"),                                               // one token
+      (4L, "beta x alpha y beta alpha gamma"),                     // repeated tokens
+      (5L, "  alpha  beta "),                                      // empty tokens
+      (6L, ""),                                                    // one empty token
+      (7L, "naïve 日本語 alpha emoji🙂 beta"),                      // multi-byte tokens
+      (8L, "zeta eta theta")).toDF("doc_id", "text")               // no query term
+    val dir = java.nio.file.Files.createTempDirectory("graft_postings_edges").toString
+    TextSearch.writePostingsIndex(docs, "doc_id", "text", dir)
+    val postings = spark.read.parquet(s"$dir/postings")
+    val (nDocs, sdl) = TextSearch.indexTotals(spark.read.parquet(s"$dir/stats"))
+    // the totals observed on the build's pass are the corpus scan's
+    val scanTotals = docs.agg(count(lit(1)), sum(size(split(col("text"), " ")).cast("long")))
+      .as[(Long, Long)].head()
+    assert((nDocs, sdl) == scanTotals)
+    val bags = Seq(
+      Seq("alpha"), Seq("beta", "gamma"), Seq("gamma", "alpha", "beta"),
+      Seq("alpha", "alpha", "beta"), Seq("alpha", "eight"), Seq("iota"), Seq(""),
+      Seq("", "beta"), Seq("日本語", "emoji🙂"), Seq("absent"))
+    bags.foreach { terms =>
+      val (got, want) = snippetPages(docs, postings, nDocs, sdl, terms)
+      assert(got == want, s"$terms: postings snippets vs attachSnippets")
+      assert(got.nonEmpty == (terms != Seq("absent")), s"$terms: ${got.size} rows")
     }
   }
 
